@@ -725,9 +725,6 @@ def exact_substr_dedup(
     conservativeness: pruning ultra-hot grams means those spans are
     KEPT, never that extra text is deleted.
     """
-    toks = df.select(
-        F.col(id_col), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
-    )
     occ = shingle_stream(df, text_col, n, cols=(id_col,))
     # one materialization for the two consumers (count + expansion) —
     # the dup_span_stats/span_dedup_clean ReuseExchange contract
@@ -747,12 +744,11 @@ def exact_substr_dedup(
         )
         .distinct()
     )
-    return _remove_covered_runs(df, toks, covered, min_len, id_col, text_col)
+    return _remove_covered_runs(df, covered, min_len, id_col, text_col)
 
 
 def _remove_covered_runs(
     df: DataFrame,
-    toks: DataFrame,
     covered: DataFrame,
     min_len: int,
     id_col: str,
@@ -788,11 +784,7 @@ def _remove_covered_runs(
     exactly as the old ordered collect_list did (split/rejoin on ' '
     is lossless, including empty tokens from repeated spaces), and a
     doc with no qualifying run keeps its original text verbatim.
-
-    ``toks`` is accepted (and ignored) for signature compatibility
-    with existing callers/tests of the old shape.
     """
-    del toks  # rebuild no longer needs the posexploded token stream
     w_ord = Window.partitionBy(id_col).orderBy("pos")
     cum = covered.withColumn(
         "new_run",
@@ -912,9 +904,6 @@ def exact_substr_clean_vs_grams(
     :class:`GramIndex` and the streaming ingest use, where the
     reference grams are materialized once and every batch joins them
     without touching reference text."""
-    toks = new_docs.select(
-        F.col(id_col), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
-    )
     occ = shingle_stream(new_docs, text_col, n, cols=(id_col,))
     covered = (
         occ.join(ref_grams.select("g"), "g", "left_semi")
@@ -924,7 +913,7 @@ def exact_substr_clean_vs_grams(
         )
         .distinct()
     )
-    return _remove_covered_runs(new_docs, toks, covered, min_len, id_col, text_col)
+    return _remove_covered_runs(new_docs, covered, min_len, id_col, text_col)
 
 
 class GramIndex:

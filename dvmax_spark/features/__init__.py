@@ -3,9 +3,11 @@
 Every transform here reproduces a reference feature's semantics —
 same windows, same grace rules, same missing-value behavior — but
 vectorized over ALL series at once: where the reference loops tickers
-in Python and computes scalars on tiny frames, these run one
-distributed plan per feature (groupBy/window on the key column), so
-the same code handles 8 tickers or 8 million.
+in Python and computes scalars on tiny frames, each feature is a set of
+window/aggregate expressions on the key column (``*_agg``, see
+``aggspec``), evaluated alone by its public function or together with
+its source table's siblings by ``assemble``, so the same code handles
+8 tickers or 8 million.
 
 Conventions:
   * every function takes `by` (series key, default "ticker") and

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dvmax_spark.features.aggspec import FeatureAgg, feature_frame
 from dvmax_spark.features.tsutils import adjust_series_for_splits
 
 
@@ -33,16 +34,14 @@ def value_near_date(
     return windowed.groupBy(by).agg(F.max_by(column, date_col).alias(column))
 
 
-def cagr_generic(
-    df: DataFrame,
+def cagr_agg(
     column: str,
     years: int,
     grace_days: int | None = 90,
     grace_months: int | None = None,
-    by: str = "ticker",
     out: str | None = None,
     date_col: str = "date",
-) -> DataFrame:
+) -> FeatureAgg:
     """(end/start)^(1/years) - 1 per key (ref compute_cagr_generic,
     growth_features.py:30-56):
 
@@ -53,21 +52,15 @@ def cagr_generic(
         endpoint <= 0.
 
     One groupBy computes both endpoints — the grace-window membership
-    depends on the per-key end date, so it's evaluated as a conditional
-    aggregate against the window bounds derived per key (no second
-    shuffle, no join)."""
+    depends on the per-key end date, so the rows are collected and the
+    window is applied to the collected array (no second shuffle, no
+    join). The aggregates depend only on ``column``, so CAGRs of one
+    column over several horizons share them."""
     out = out or f"{column}_cagr_{years}y"
-    agg = df.groupBy(by).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max(date_col).alias("_end_date"),
-        F.max_by(column, date_col).alias("_end_val"),
-        F.collect_list(F.struct(F.col(date_col).alias("d"), F.col(column).alias("v"))).alias(
-            "_rows"
-        ),
-    )
+    end_date, end_val, rows = f"_max_{date_col}", f"_{column}_last", f"_{column}_rows"
     # start target = end_date - 365*years (ref uses timedelta days, not
     # calendar years)
-    target = F.date_sub(F.col("_end_date"), 365 * years)
+    target = F.date_sub(F.col(end_date), 365 * years)
     if grace_days is not None and grace_months is None:
         lower, upper = F.date_sub(target, grace_days), F.date_add(target, grace_days)
     else:
@@ -79,39 +72,76 @@ def cagr_generic(
     # per-key data here is small (annual statements, dividend events);
     # array reduction avoids a second aggregation pass. For very long
     # per-key series use value_near_date + join instead.
-    in_win = F.filter(
-        F.col("_rows"), lambda r: (r["d"] >= lower) & (r["d"] <= upper)
-    )
+    in_win = F.filter(F.col(rows), lambda r: (r["d"] >= lower) & (r["d"] <= upper))
     start_val = F.array_max(F.transform(in_win, lambda r: F.struct(r["d"].alias("d"), r["v"].alias("v"))))["v"]
     cagr = F.when(
         (F.col("_n") >= 2)
         & start_val.isNotNull()
         & (start_val > 0)
-        & F.col("_end_val").isNotNull()
-        & (F.col("_end_val") > 0),
-        F.pow(F.col("_end_val") / start_val, 1.0 / years) - 1,
+        & F.col(end_val).isNotNull()
+        & (F.col(end_val) > 0),
+        F.pow(F.col(end_val) / start_val, 1.0 / years) - 1,
     )
-    return agg.select(by, cagr.alias(out))
+    return FeatureAgg(
+        aggs={
+            "_n": F.count(F.lit(1)),
+            end_date: F.max(date_col),
+            end_val: F.max_by(column, date_col),
+            rows: F.collect_list(
+                F.struct(F.col(date_col).alias("d"), F.col(column).alias("v"))
+            ),
+        },
+        finals={out: cagr},
+    )
+
+
+def cagr_generic(
+    df: DataFrame,
+    column: str,
+    years: int,
+    grace_days: int | None = 90,
+    grace_months: int | None = None,
+    by: str = "ticker",
+    out: str | None = None,
+    date_col: str = "date",
+) -> DataFrame:
+    return feature_frame(df, by, cagr_agg(column, years, grace_days, grace_months, out, date_col))
+
+
+def eps_cagr_agg(years: int) -> FeatureAgg:
+    """ref compute_eps_cagr (growth_features.py:78-79)."""
+    return cagr_agg("eps", years, out=f"eps_cagr_{years}y")
 
 
 def eps_cagr(income: DataFrame, years: int, by: str = "ticker") -> DataFrame:
-    """ref compute_eps_cagr (growth_features.py:78-79)."""
-    return cagr_generic(income, "eps", years, by=by, out=f"eps_cagr_{years}y")
+    return feature_frame(income, by, eps_cagr_agg(years))
+
+
+def fcf_cagr_agg(columns, years: int) -> FeatureAgg:
+    """ref compute_fcf_cagr (growth_features.py:82-91): prefers
+    freeCashFlowPerShare, falls back to fcf; null if neither of them is
+    in ``columns``."""
+    out = f"fcf_cagr_{years}y"
+    for col in ("freeCashFlowPerShare", "fcf"):
+        if col in columns:
+            return cagr_agg(col, years, out=out)
+    return FeatureAgg(aggs={"_n": F.count(F.lit(1))}, finals={out: F.lit(None).cast("double")})
 
 
 def fcf_cagr(df: DataFrame, years: int, by: str = "ticker") -> DataFrame:
-    """ref compute_fcf_cagr (growth_features.py:82-91): prefers
-    freeCashFlowPerShare, falls back to fcf; null if neither exists."""
-    col = (
-        "freeCashFlowPerShare"
-        if "freeCashFlowPerShare" in df.columns
-        else ("fcf" if "fcf" in df.columns else None)
+    return feature_frame(df, by, fcf_cagr_agg(df.columns, years))
+
+
+def dividend_cagr_agg(years: int, grace_months: int = 3) -> FeatureAgg:
+    """ref compute_dividend_cagr (growth_features.py:60-75): CAGR of the
+    split-adjusted dividend series with a grace window in months."""
+    return cagr_agg(
+        "dividend",
+        years,
+        grace_days=None,
+        grace_months=grace_months,
+        out=f"dividend_cagr_{years}y",
     )
-    if col is None:
-        return df.select(by).distinct().withColumn(
-            f"fcf_cagr_{years}y", F.lit(None).cast("double")
-        )
-    return cagr_generic(df, col, years, by=by, out=f"fcf_cagr_{years}y")
 
 
 def dividend_cagr(
@@ -121,16 +151,7 @@ def dividend_cagr(
     grace_months: int = 3,
     by: str = "ticker",
 ) -> DataFrame:
-    """ref compute_dividend_cagr (growth_features.py:60-75): split-adjust
-    the dividend series (backward cum-product), then CAGR with a
-    grace window in months."""
+    """Split-adjust the dividend series (backward cum-product), then
+    :func:`dividend_cagr_agg`."""
     adjusted = adjust_series_for_splits(dividends, splits, "dividend", by=by)
-    return cagr_generic(
-        adjusted,
-        "dividend",
-        years,
-        grace_days=None,
-        grace_months=grace_months,
-        by=by,
-        out=f"dividend_cagr_{years}y",
-    )
+    return feature_frame(adjusted, by, dividend_cagr_agg(years, grace_months))

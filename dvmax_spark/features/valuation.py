@@ -5,21 +5,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dvmax_spark.features.aggspec import FeatureAgg, feature_frame, last_where
 
-def latest_pe_pfcf(ratios: DataFrame, by: str = "ticker", date_col: str = "date") -> DataFrame:
+
+def pe_pfcf_agg(date_col: str = "date") -> FeatureAgg:
     """Latest row where BOTH priceEarningsRatio and
     priceToFreeCashFlowsRatio are > 0; (0.0, 0.0) when none (ref
     extract_latest_pe_pfcf, valuation_features.py:3-30)."""
-    valid = ratios.where(
-        (F.col("priceEarningsRatio") > 0) & (F.col("priceToFreeCashFlowsRatio") > 0)
+    valid = (F.col("priceEarningsRatio") > 0) & (F.col("priceToFreeCashFlowsRatio") > 0)
+    pe, pfcf = "_pe_last_valid", "_pfcf_last_valid"
+    return FeatureAgg(
+        aggs={
+            pe: last_where(valid, "priceEarningsRatio", date_col),
+            pfcf: last_where(valid, "priceToFreeCashFlowsRatio", date_col),
+        },
+        finals={
+            "pe_ratio": F.coalesce(F.col(pe), F.lit(0.0)),
+            "pfcf_ratio": F.coalesce(F.col(pfcf), F.lit(0.0)),
+        },
     )
-    agg = valid.groupBy(by).agg(
-        F.max_by("priceEarningsRatio", date_col).alias("_pe"),
-        F.max_by("priceToFreeCashFlowsRatio", date_col).alias("_pfcf"),
-    )
-    base = ratios.select(by).distinct()
-    return base.join(agg, by, "left").select(
-        by,
-        F.coalesce(F.col("_pe"), F.lit(0.0)).alias("pe_ratio"),
-        F.coalesce(F.col("_pfcf"), F.lit(0.0)).alias("pfcf_ratio"),
-    )
+
+
+def latest_pe_pfcf(ratios: DataFrame, by: str = "ticker", date_col: str = "date") -> DataFrame:
+    return feature_frame(ratios, by, pe_pfcf_agg(date_col))

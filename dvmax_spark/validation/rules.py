@@ -140,14 +140,18 @@ def apply_rules(
     status_col: str = "validation_status",
     violations_col: str = "violations",
 ) -> DataFrame:
-    """Compile the rule table into one pass over ``df``."""
+    """Compile the rule table into one pass over ``df``: one projection
+    nullifies, one adds the status and violations."""
     notes: list[Column] = []
+    nulled: dict[str, Column] = {}
     for n in nullify:
         cond = n.unstable(df)
-        df = df.withColumn(
-            n.ratio_col, F.when(cond, F.lit(None)).otherwise(F.col(n.ratio_col))
+        nulled[n.ratio_col] = F.when(cond, F.lit(None)).otherwise(
+            nulled.get(n.ratio_col, F.col(n.ratio_col))
         )
         notes.append(F.when(cond, F.lit(n.name)))
+    if nulled:
+        df = df.withColumns(nulled)
 
     flag_msgs: list[Column] = []
     drop_msgs: list[Column] = []
@@ -169,7 +173,7 @@ def apply_rules(
         .when(any_flag, F.lit("flagged"))
         .otherwise(F.lit("ok"))
     )
-    return df.withColumn(status_col, status).withColumn(violations_col, violations)
+    return df.withColumns({status_col: status, violations_col: violations})
 
 
 def split_by_status(

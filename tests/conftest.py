@@ -35,10 +35,30 @@ def pytest_collection_modifyitems(config, items):
     """
     if os.environ.get("DVMAX_SLOW_TESTS") == "1":
         return
-    skip = pytest.mark.skip(reason="slow tier: set DVMAX_SLOW_TESTS=1 to run")
+    skip = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+_SLOW_REASON = "slow tier: set DVMAX_SLOW_TESTS=1 to run"
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """One visible line when the slow tier was skipped, so a default
+    green run is not read as the full suite."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and _SLOW_REASON in rep.longrepr[2]
+    )
+    if n:
+        terminalreporter.write_line(
+            f"NOTE: {n} slow-tier tests skipped; this is not the full suite "
+            "(DVMAX_SLOW_TESTS=1 runs them)",
+            yellow=True,
+            bold=True,
+        )
 
 TABLES = (
     "region",

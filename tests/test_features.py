@@ -352,3 +352,269 @@ def test_ewma_fixed_horizon_null_values_contribute_no_weight(spark):
     assert out[1] == 100  # single value
     assert out[2] == 100  # lag-1 value only (own row null)
     assert out[3] == (W[0] * 300 + W[2] * 100) // (W[0] + W[2])
+
+
+# ------------------------------------------------- feature table parity
+
+
+def e2e_feature_inputs(spark) -> dict:
+    """The two-ticker inputs of test_build_feature_table_end_to_end
+    (as_of 2024-01-02), with the sector benchmark and mapping."""
+    import pandas as pd
+
+    days = pd.bdate_range("2022-01-03", "2024-01-02")
+    years = [2020, 2021, 2022, 2023]
+    return {
+        "prices": spark.createDataFrame(
+            [
+                (t, d.date(), 100.0 + i * 0.05 + (5.0 if t == "B" else 0.0))
+                for t in ("A", "B")
+                for i, d in enumerate(days)
+            ],
+            "ticker string, date date, close double",
+        ),
+        "ratios": spark.createDataFrame(
+            [
+                (t, datetime.date(y, 12, 30), 15.0 + i, 20.0 + i, 0.4, 0.03 + 0.002 * i, 2.0 + 0.2 * i)
+                for t in ("A", "B")
+                for i, y in enumerate(years)
+            ],
+            "ticker string, date date, priceEarningsRatio double, "
+            "priceToFreeCashFlowsRatio double, payoutRatio double, "
+            "dividendYield double, freeCashFlowPerShare double",
+        ),
+        "income": spark.createDataFrame(
+            [
+                (t, datetime.date(y, 12, 30), 2.0 + 0.5 * i, 100.0, 10.0, 20.0, 500.0)
+                for t in ("A", "B")
+                for i, y in enumerate(years)
+            ],
+            "ticker string, date date, eps double, operatingIncome double, "
+            "interestExpense double, depreciationAndAmortization double, incomeBeforeTax double",
+        ),
+        "balance": spark.createDataFrame(
+            [(t, datetime.date(y, 12, 30), 1000.0, 300.0) for t in ("A", "B") for y in years],
+            "ticker string, date date, totalDebt double, cashAndShortTermInvestments double",
+        ),
+        "dividends": spark.createDataFrame(
+            [
+                (t, datetime.date(y, 6, 1), 1.0 + 0.1 * i)
+                for t in ("A", "B")
+                for i, y in enumerate([2018, 2019, 2020, 2021, 2022, 2023])
+            ],
+            "ticker string, date date, dividend double",
+        ),
+        "splits": spark.createDataFrame([], "ticker string, date date, split_ratio double"),
+        "profile": spark.createDataFrame(
+            [("A", "Energy", "USA"), ("B", "Healthcare", "Japan")],
+            "ticker string, sector string, country string",
+        ),
+        "sector_index": spark.createDataFrame(
+            [("XLE", d.date(), 50.0 + i * 0.01) for i, d in enumerate(days)]
+            + [("XLV", d.date(), 80.0 + i * 0.02) for i, d in enumerate(days)],
+            "sector_etf string, date date, close double",
+        ),
+        "sector_map": spark.createDataFrame(
+            [("A", "XLE"), ("B", "XLV")], "ticker string, sector_etf string"
+        ),
+    }
+
+
+def multi_ticker_inputs(spark, sector: bool) -> dict:
+    """Four tickers at as_of 2024-01-02 that reach the edge cases:
+      * A — full history, a 2:1 split inside its dividend series;
+      * S — 120 price rows (SMA null, no 12m past), one row in each
+        statement table, and a 3:1 split;
+      * N — payout never positive, P/E negative in the latest years, a
+        zero dividend at the start of its 5y window;
+      * P — prices only (every other table misses it), no sector mapping.
+    """
+    import math
+
+    import pandas as pd
+
+    days = pd.bdate_range("2020-06-01", "2024-01-05")  # rows past as_of are cut
+    series = {
+        "A": (days, lambda i: 100.0 + 12.0 * math.sin(i / 23.0) + 0.03 * i),
+        "S": (days[-123:], lambda i: 40.0 + 3.0 * math.cos(i / 7.0)),
+        "N": (days, lambda i: 60.0 + 9.0 * math.sin(i / 51.0) - 0.01 * i),
+        "P": (days, lambda i: 25.0 + 0.5 * math.sin(i / 3.0) + 0.002 * i),
+    }
+    prices = [
+        (t, d.date(), round(f(i), 4)) for t, (ds, f) in series.items() for i, d in enumerate(ds)
+    ]
+    years = range(2017, 2024)
+    ratios = [
+        ("A", datetime.date(y, 12, 30), 12.0 + i, 18.0 + 0.5 * i, 0.3 + 0.02 * i,
+         0.02 + 0.003 * (i % 3), 1.5 * 1.1**i)
+        for i, y in enumerate(years)
+    ] + [
+        ("N", datetime.date(y, 12, 30), 20.0 - 5.0 * i, 25.0 - i, -0.1 if i % 2 else None,
+         0.05 - 0.004 * i, 3.0 - 0.2 * i)
+        for i, y in enumerate(years)
+    ] + [("S", datetime.date(2023, 12, 30), 30.0, 40.0, 0.5, 0.04, 2.0)]
+    income = [
+        (t, datetime.date(y, 12, 30), base + 0.3 * i, 120.0 + i, 8.0 + (i % 3), 15.0, 400.0 - 10 * i)
+        for t, base in (("A", 1.0), ("N", 2.5))
+        for i, y in enumerate(years)
+    ] + [("S", datetime.date(2023, 12, 30), 1.2, 50.0, 0.0, 5.0, 45.0)]
+    # balance misses A's first two years: eps_cagr must still see them
+    balance = [
+        (t, datetime.date(y, 12, 30), 900.0 + 10 * i, 250.0)
+        for t in ("A", "N")
+        for i, y in enumerate(years)
+        if not (t == "A" and y < 2019)
+    ] + [("S", datetime.date(2023, 12, 30), 100.0, 100.0)]
+    dividends = [
+        ("A", datetime.date(y, m, 15), round(0.5 + 0.02 * i, 4))
+        for i, (y, m) in enumerate((y, m) for y in range(2016, 2024) for m in (3, 6, 9, 12))
+    ] + [
+        ("N", datetime.date(y, 6, 1), 0.0 if y == 2018 else 1.0 + 0.05 * (y - 2016))
+        for y in range(2016, 2024)
+    ] + [("S", datetime.date(2023, 11, 1), 0.4)]
+    out = {
+        "prices": spark.createDataFrame(prices, "ticker string, date date, close double"),
+        "ratios": spark.createDataFrame(
+            ratios,
+            "ticker string, date date, priceEarningsRatio double, "
+            "priceToFreeCashFlowsRatio double, payoutRatio double, "
+            "dividendYield double, freeCashFlowPerShare double",
+        ),
+        "income": spark.createDataFrame(
+            income,
+            "ticker string, date date, eps double, operatingIncome double, "
+            "interestExpense double, depreciationAndAmortization double, incomeBeforeTax double",
+        ),
+        "balance": spark.createDataFrame(
+            balance,
+            "ticker string, date date, totalDebt double, cashAndShortTermInvestments double",
+        ),
+        "dividends": spark.createDataFrame(dividends, "ticker string, date date, dividend double"),
+        "splits": spark.createDataFrame(
+            [("A", datetime.date(2021, 6, 1), 2.0), ("S", datetime.date(2023, 6, 1), 3.0)],
+            "ticker string, date date, split_ratio double",
+        ),
+        "profile": spark.createDataFrame(
+            [("A", "Energy", "USA"), ("S", "Utilities", "UK"), ("N", "Healthcare", "Japan"),
+             ("P", "Technology", "USA")],
+            "ticker string, sector string, country string",
+        ),
+        "sector_index": None,
+    }
+    if sector:
+        out["sector_index"] = spark.createDataFrame(
+            [(e, d.date(), round(b + 0.02 * i + math.sin(i / 11.0), 4))
+             for e, b in (("XLE", 50.0), ("XLV", 80.0))
+             for i, d in enumerate(days)],
+            "sector_etf string, date date, close double",
+        )
+        out["sector_map"] = spark.createDataFrame(
+            [("A", "XLE"), ("S", "XLV"), ("N", "XLE")], "ticker string, sector_etf string"
+        )
+    return out
+
+
+def _reference_feature_table(inputs: dict, as_of, by: str = "ticker"):
+    """The per-feature composition: one frame per feature from the public
+    feature functions, left-joined one after another onto the price
+    tickers, then the has_* and validation columns."""
+    from functools import reduce
+
+    from dvmax_spark.features.assemble import NULLABLE_KEYS, _cut, _latest_fundamentals
+    from dvmax_spark.features.dividend import yield_vs_median
+    from dvmax_spark.features.growth import dividend_cagr, eps_cagr, fcf_cagr
+    from dvmax_spark.features.price import (
+        max_drawdown_feature,
+        payout_ratio,
+        return_over_period,
+        sector_relative_return,
+        sma_delta_50_200,
+        volatility,
+    )
+    from dvmax_spark.features.valuation import latest_pe_pfcf
+    from dvmax_spark.features.validation_profile import validate_dynamic_rows
+
+    t = {k: _cut(v, as_of) for k, v in inputs.items() if v is not None and k != "sector_map"}
+    prices, ratios, income, dividends, splits = (
+        t["prices"], t["ratios"], t["income"], t["dividends"], t["splits"]
+    )
+    parts = [
+        return_over_period(prices, as_of, months=6, by=by, out="6m_return"),
+        return_over_period(prices, as_of, months=12, by=by, out="12m_return"),
+        volatility(prices, by=by, out="volatility"),
+        max_drawdown_feature(prices, lookback_years=1, by=by, out="max_drawdown_1y"),
+        sma_delta_50_200(prices, by=by, out="sma_50_200_delta"),
+        _latest_fundamentals(income, t["balance"], by),
+        eps_cagr(income, 3, by=by),
+        fcf_cagr(ratios, 3, by=by),
+        ratios.groupBy(by).agg(F.max_by("dividendYield", "date").alias("dividend_yield")),
+        dividend_cagr(dividends, splits, 3, by=by),
+        dividend_cagr(dividends, splits, 5, by=by),
+        yield_vs_median(ratios, 5, by=by, out="yield_vs_5y_median"),
+        latest_pe_pfcf(ratios, by=by),
+        payout_ratio(ratios, by=by, out="payout_ratio"),
+    ]
+    if "sector_index" in t:
+        parts.append(
+            sector_relative_return(
+                prices, t["sector_index"], lookback_days=365, as_of=as_of, by=by,
+                mapping=inputs.get("sector_map"), out="sector_relative_6m",
+            )
+        )
+    dynamic = reduce(lambda acc, p: acc.join(p, by, "left"), parts, prices.select(by).distinct())
+    if "sector_index" not in t:
+        dynamic = dynamic.withColumn("sector_relative_6m", F.lit(None).cast("double"))
+    dynamic = dynamic.withColumn("as_of", F.lit(as_of).cast("date"))
+    for key in NULLABLE_KEYS:
+        c = F.col(key).cast("double")
+        dynamic = dynamic.withColumn(
+            f"has_{key}", F.when(c.isNull() | F.isnan(c), F.lit(0)).otherwise(F.lit(1))
+        )
+    return validate_dynamic_rows(dynamic, by=by)
+
+
+# summed in a plan-dependent order, so equal only to the last bits
+_AVERAGED = {"volatility", "sma_50_200_delta"}
+
+
+def _same(a, b, col) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        if a != a or b != b:
+            return a != a and b != b
+        if col in _AVERAGED:
+            return a == pytest.approx(b, rel=1e-12)
+    return a == b
+
+
+@pytest.mark.parametrize("case", ["e2e", "multi", "multi_sector"])
+def test_feature_table_matches_per_feature_composition(spark, case):
+    """build_feature_table (one aggregate per source table) equals the
+    per-feature frames joined one by one: same schema, same rows, every
+    value equal (averaged columns to rel 1e-12)."""
+    from dvmax_spark.features.assemble import build_feature_table
+
+    as_of = datetime.date(2024, 1, 2)
+    inputs = (
+        e2e_feature_inputs(spark)
+        if case == "e2e"
+        else multi_ticker_inputs(spark, sector=case == "multi_sector")
+    )
+    got_df, _ = build_feature_table(inputs, as_of)
+    want_df = _reference_feature_table(inputs, as_of)
+    assert got_df.dtypes == want_df.dtypes
+    got = {r["ticker"]: r.asDict() for r in got_df.collect()}
+    want = {r["ticker"]: r.asDict() for r in want_df.collect()}
+    assert set(got) == set(want) == set(inputs["profile"].toPandas()["ticker"])
+    bad = [
+        (t, c, got[t][c], want[t][c])
+        for t in want
+        for c in want[t]
+        if not _same(got[t][c], want[t][c], c)
+    ]
+    assert not bad, bad
+    if case != "e2e":
+        # the inputs reach the edge cases they were built for
+        assert want["S"]["sma_50_200_delta"] is None
+        assert want["N"]["payout_ratio"] == 0.0
+        assert want["P"]["eps_cagr_3y"] is None and want["P"]["has_dividend_yield"] == 0
+        assert want["A"]["dividend_cagr_3y"] is not None

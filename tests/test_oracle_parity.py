@@ -16,10 +16,10 @@ def _oracle_query_params():
     covers exactly the queries the external driver will hash-compare,
     the full sweep stays one env var away and tools/check_parity.py
     covers everything independently."""
-    from dvmax_spark.registry import all_queries
+    from dvmax_spark.registry import EVIDENCE_WINDOW, all_queries
 
     qs = all_queries()
-    cap = set(list(qs)[:50])
+    cap = set(list(qs)[:EVIDENCE_WINDOW])
     return [
         (n if n in cap else pytest.param(n, marks=pytest.mark.slow))
         for n, s in qs.items()

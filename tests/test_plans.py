@@ -690,3 +690,28 @@ def test_event_transitions_single_window_pass(spark):
     # exchanges: events->user window, matrix aggregate, from_type
     # window (tiny), final sort
     assert plan.count("Exchange hashpartitioning") <= 3, plan
+
+
+def test_feature_table_one_scan_and_shuffle_per_source_table(spark, tmp_path):
+    """build_feature_table costs one aggregate per source table, not one
+    groupBy + join per feature: on parquet inputs its dynamic plan holds
+    at most 7 parquet scans (prices, ratios, income twice, balance,
+    dividends, splits) and at most 7 shuffle exchanges. The per-feature
+    composition it replaced planned 22 of each."""
+    import datetime
+    import re
+
+    from dvmax_spark.features.assemble import build_feature_table
+    from tests.test_features import multi_ticker_inputs
+
+    inputs = {}
+    for name, df in multi_ticker_inputs(spark, sector=False).items():
+        if df is not None:
+            df.write.parquet(str(tmp_path / name))
+            df = spark.read.parquet(str(tmp_path / name))
+        inputs[name] = df
+    plan = _simple_plan(build_feature_table(inputs, datetime.date(2024, 1, 2))[0])
+    scans = plan.count("Scan parquet")
+    shuffles = len(re.findall(r"(?<![A-Za-z])Exchange ", plan))
+    assert scans <= 7, f"{scans} parquet scans:\n{plan}"
+    assert shuffles <= 7, f"{shuffles} shuffle exchanges:\n{plan}"

@@ -31,9 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
+from dvmax_spark.registry import EVIDENCE_WINDOW as DRIVER_QUERY_CAP
 from tests.conftest import SF_DIR_CORRECT, TABLES, canonicalize
-
-DRIVER_QUERY_CAP = 50
 
 
 def main() -> None:
