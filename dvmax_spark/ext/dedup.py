@@ -1404,11 +1404,15 @@ class NearDupGraph:
     ``(id_a, id_b, est_jaccard)`` with a ``_meta.json`` INSIDE the
     table dir (invisible to Spark's reader, like _SUCCESS) recording
     the LSH parameters plus a corpus fingerprint
-    ``(n_docs, id/text hash-sum)``. ``ensure(docs)`` rebuilds iff the
-    meta is absent or disagrees — a stale artifact against regenerated
-    testdata (or changed params) can never serve wrong pairs. Promote
-    is the shared fsops staging + swap protocol, so readers heal a
-    crashed build and no crash point loses the previous table.
+    ``(n_docs, id/text hash-sum)``. ``ensure(docs)`` is one
+    :func:`~dvmax_spark.fsops.ensure_artifact` call: it rebuilds iff
+    the meta is absent, corrupt or disagrees — a stale artifact against
+    regenerated testdata (or changed params) can never serve wrong
+    pairs — under the shared flock + staging + swap protocol, so
+    readers heal a crashed build and no crash point loses the previous
+    table. Artifacts computed FROM the pair table (component labels,
+    the src0 MinHash index) derive their validity from this meta via
+    :meth:`derived_meta`.
 
     The pair pipeline is minhash_lsh_pairs verbatim (portable hashes,
     deterministic), so artifact-backed consumers are value-exact
@@ -1439,10 +1443,6 @@ class NearDupGraph:
         self.max_bucket = max_bucket
         self.id_col = id_col
         self.text_col = text_col
-        # Set by ensure(): True iff that call actually rebuilt the
-        # artifact (cold) vs only re-validated the fingerprint (warm).
-        # bench.py reports it so ndg_build_wall is unambiguous.
-        self.last_ensure_built: bool | None = None
 
     # ------------------------------------------------------------ meta
     def _params(self) -> dict:
@@ -1478,57 +1478,28 @@ class NearDupGraph:
         ).collect()[0]
         return {"n_docs": row["n"], "hsum": int(row["hsum"] or 0)}
 
-    def read_meta(self) -> dict | None:
-        import json
-        import os
+    def derived_meta(
+        self, spec: int, member_tag: str, params: dict | None = None
+    ) -> dict:
+        """Expected meta of an artifact computed FROM this pair table
+        (component labels, the src0 MinHash index). Validity is
+        derived, not re-fingerprinted: such an artifact is a pure
+        function of (pair artifact, member subset, its own params), so
+        its meta embeds this graph's ``_meta.json`` verbatim — a
+        regenerated corpus or changed LSH params invalidates it
+        transitively without a second corpus pass. Take this snapshot
+        BEFORE computing the artifact: a parent rebuilt mid-compute
+        then mismatches on the next check instead of stale rows hiding
+        under a fresh-looking meta."""
+        from dvmax_spark.fsops import read_artifact_meta
 
-        try:
-            with open(os.path.join(self.path, "_meta.json")) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
+        meta = {"spec": spec, "member_tag": member_tag}
+        if params is not None:
+            meta["params"] = params
+        meta["ndg_meta"] = read_artifact_meta(self.path)
+        return meta
 
     # ------------------------------------------------------------- io
-    def build(self, docs: DataFrame) -> None:
-        """Materialize the pair table for ``docs`` (staging + atomic
-        swap; meta commits inside the staging dir so table and
-        fingerprint can never disagree)."""
-        import json
-        import os
-        import shutil
-
-        from dvmax_spark.fsops import swap_dir
-
-        import uuid
-
-        pairs = minhash_lsh_pairs(
-            docs,
-            id_col=self.id_col,
-            text_col=self.text_col,
-            num_hashes=self.num_hashes,
-            bands=self.bands,
-            shingle_n=self.shingle_n,
-            threshold=self.threshold,
-            max_bucket=self.max_bucket,
-        )
-        # per-process unique staging: two builders can never rmtree or
-        # half-overwrite each other's in-flight parquet (the promote
-        # itself is serialized by ensure()'s flock)
-        staging = f"{self.path}.staging.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        try:
-            pairs.write.mode("overwrite").option("compression", "zstd").parquet(
-                staging
-            )
-            meta = {"params": self._params(), "corpus": self._fingerprint(docs)}
-            with open(os.path.join(staging, "_meta.json"), "w") as fh:
-                json.dump(meta, fh)
-            retired = swap_dir(self.path, staging)
-        finally:
-            # a failed write leaves only OUR staging dir behind
-            shutil.rmtree(staging, ignore_errors=True)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
-
     def pairs(self) -> DataFrame:
         """Read the persisted pair table (heals a crashed promote)."""
         from dvmax_spark.fsops import recover_swap
@@ -1536,170 +1507,27 @@ class NearDupGraph:
         recover_swap(self.path)
         return self.spark.read.parquet(self.path)
 
-    def ensure(self, docs: DataFrame) -> DataFrame:
-        """Return the pair table for ``docs``, building it iff the
-        persisted artifact is absent, was built with different
-        parameters, or fingerprints a different corpus.
+    def ensure(self, docs: DataFrame) -> bool:
+        """Make the persisted pair table match ``docs`` and these
+        parameters, rebuilding iff it does not; returns whether it
+        built (cold) rather than only re-validated (warm). The corpus
+        fingerprint is computed once per call."""
+        from dvmax_spark.fsops import ensure_artifact
 
-        The check-then-build is EXCLUSIVE: an ``flock`` on a sibling
-        lock file serializes concurrent ensure() calls (across
-        processes on the same host), so two builders can never race on
-        promotion and a reader can never be handed a half-written
-        table under a valid meta. ``flock`` releases on process death —
-        no stale-lock cleanup needed. (Object-store deployments would
-        use a conditional-put manifest instead; this artifact is a
-        local cache.)"""
-        import fcntl
-        import os
+        def write(staging: str) -> None:
+            minhash_lsh_pairs(
+                docs,
+                id_col=self.id_col,
+                text_col=self.text_col,
+                num_hashes=self.num_hashes,
+                bands=self.bands,
+                shingle_n=self.shingle_n,
+                threshold=self.threshold,
+                max_bucket=self.max_bucket,
+            ).write.mode("overwrite").option("compression", "zstd").parquet(staging)
 
-        from dvmax_spark.fsops import recover_swap
-
-        parent = os.path.dirname(self.path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        with open(self.path + ".lock", "a") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                recover_swap(self.path)
-                meta = self.read_meta()
-                self.last_ensure_built = (
-                    meta is None
-                    or meta.get("params") != self._params()
-                    or meta.get("corpus") != self._fingerprint(docs)
-                )
-                if self.last_ensure_built:
-                    self.build(docs)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
-        return self.pairs()
-
-
-class ComponentLabelStore:
-    """Persisted component-LABEL artifact — the maintained state of
-    :func:`incremental_components`, stored beside the
-    :class:`NearDupGraph` pair table. Production incremental
-    clustering never re-derives the previous labels: it reads them
-    from a label table that was written when the earlier data landed
-    and merges the new batch (r9 VERDICT: the benched maintenance
-    path was paying a from-scratch labels0 rebuild every run, which
-    made "maintain one batch" cost MORE than the full rebuild). This
-    class makes the read-labels shape benchable and crash-safe.
-
-    Layout mirrors NearDupGraph: ``path/`` is one zstd parquet table
-    ``(id, label)`` with ``_meta.json`` inside the dir. Validity is
-    DERIVED, not re-fingerprinted: the labels are a pure function of
-    (parent pair artifact, membership tag), so the meta embeds the
-    parent graph's ``_meta.json`` verbatim plus the tag — the labels
-    are fresh iff the parent meta is identical (the parent already
-    fingerprints the corpus, so a regenerated corpus invalidates the
-    labels transitively without a second corpus pass). Promote is the
-    shared fsops staging + atomic swap, same healing guarantees.
-    """
-
-    _SPEC = 1  # bump to invalidate all persisted label artifacts
-
-    def __init__(
-        self,
-        spark,
-        path: str,
-        graph: "NearDupGraph",
-        member_tag: str,
-    ) -> None:
-        self.spark = spark
-        self.path = path
-        self.graph = graph
-        self.member_tag = member_tag
-        # True iff the last ensure() actually recomputed labels (cold)
-        # vs only re-validated the parent meta (warm) — bench.py
-        # reports it next to the build wall.
-        self.last_ensure_built: bool | None = None
-
-    def _expected_meta(self) -> dict:
-        return {
-            "spec": self._SPEC,
-            "member_tag": self.member_tag,
-            "ndg_meta": self.graph.read_meta(),
-        }
-
-    def read_meta(self) -> dict | None:
-        import json
-        import os
-
-        try:
-            with open(os.path.join(self.path, "_meta.json")) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
-    def build(self, labels: DataFrame, meta: dict | None = None) -> None:
-        """Materialize ``labels`` (id, label) via staging + atomic swap;
-        meta commits inside the staging dir so table and parent-meta
-        snapshot can never disagree. ``meta`` should be the
-        _expected_meta() snapshot taken BEFORE the labels were
-        computed: if the parent pair artifact is rebuilt concurrently
-        mid-build, the stored snapshot then mismatches the new parent
-        and the next ensure() rebuilds, instead of stale labels hiding
-        under a fresh-looking meta."""
-        import json
-        import os
-        import shutil
-        import uuid
-
-        from dvmax_spark.fsops import swap_dir
-
-        staging = f"{self.path}.staging.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        try:
-            labels.select("id", "label").write.mode("overwrite").option(
-                "compression", "zstd"
-            ).parquet(staging)
-            with open(os.path.join(staging, "_meta.json"), "w") as fh:
-                json.dump(meta if meta is not None else self._expected_meta(), fh)
-            retired = swap_dir(self.path, staging)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
-
-    def labels(self) -> DataFrame:
-        """Read the persisted label table (heals a crashed promote)."""
-        from dvmax_spark.fsops import recover_swap
-
-        recover_swap(self.path)
-        return self.spark.read.parquet(self.path)
-
-    def ensure(self, compute) -> DataFrame:
-        """Return the label table, calling ``compute() -> DataFrame``
-        to (re)build iff the artifact is absent, from another spec, or
-        snapshots a different parent-graph meta. Same flock discipline
-        as NearDupGraph.ensure: check-then-build is exclusive, so
-        readers never see a half-promoted table under a valid meta.
-
-        The parent pair artifact must already be ensured (its meta is
-        what validity derives from); callers get that for free by
-        obtaining ``graph`` via NearDupGraph.ensure / _ndg_pairs."""
-        import fcntl
-        import os
-
-        from dvmax_spark.fsops import recover_swap
-
-        parent = os.path.dirname(self.path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        with open(self.path + ".lock", "a") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                recover_swap(self.path)
-                # snapshot ONCE: compute() reads the parent pairs under
-                # this snapshot, and build() persists the same snapshot
-                # — a concurrent parent rebuild mid-compute surfaces as
-                # a mismatch on the next ensure() instead of vanishing
-                expected = self._expected_meta()
-                self.last_ensure_built = self.read_meta() != expected
-                if self.last_ensure_built:
-                    self.build(compute(), meta=expected)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
-        return self.labels()
+        expected = {"params": self._params(), "corpus": self._fingerprint(docs)}
+        return ensure_artifact(self.path, expected, write)
 
 
 def canonical_by_degree(

@@ -1,7 +1,9 @@
 """Crash-safe table-promote primitives shared by every staging→main
 swap in the package (``FeatureStore._swap_in``, ``MinHashIndex.compact``
-/``compact_batches``, ``NearDupGraph.build``, ``ContinuousRollup``,
-``IncrementalJoinMV``, the streaming marker sinks).
+/``compact_batches``, ``ContinuousRollup``, ``IncrementalJoinMV``, the
+streaming marker sinks, and :func:`ensure_artifact` — the one build
+protocol of the fingerprinted cache artifacts: the near-dup pair graph,
+its component labels and the src0 MinHash index).
 
 Layout (r5): the table path is a SYMLINK to a sibling versioned
 directory — ``tbl -> tbl.v3`` — and a promote is
@@ -56,15 +58,29 @@ Readers in manifest mode resolve the data directory via
 resolves transparently, which is why it stays the default fast-path).
 Both modes pass the same crash matrix (tests/test_fsops.py is
 parametrized over them).
+
+FINGERPRINTED ARTIFACTS (:func:`ensure_artifact`): a cache table whose
+validity is its ``_meta.json`` — written inside the staging dir before
+the promote, so table and meta can only ever be swapped in together.
+Check-then-build runs under an exclusive ``flock`` on a sibling
+``.lock`` file, so concurrent builders serialize and a reader is never
+handed a half-written table under a valid meta; ``flock`` releases on
+process death, so a crashed builder leaves no stale lock. A meta that
+is missing, unreadable, truncated, not a JSON object or not equal to
+the expected one means stale: rebuild, never serve.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
+import uuid
+from typing import Callable
 
 RETIRED_SUFFIX = ".old"
+_ARTIFACT_META = "_meta.json"
 _POINTER_TMP = ".lnk"
 _MANIFEST_TMP = ".mtmp"
 _VER_RE = re.compile(r"^\.v(\d+)$")
@@ -372,3 +388,54 @@ def swap_dir(
             if d != displaced and d != new_dir:
                 shutil.rmtree(d, ignore_errors=True)
     return displaced
+
+
+def read_artifact_meta(path: str) -> dict | None:
+    """The ``_meta.json`` object inside table ``path``, or None when it
+    is missing, unreadable, truncated or not a JSON object."""
+    try:
+        with open(os.path.join(resolve(path), _ARTIFACT_META)) as fh:
+            meta = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return meta if isinstance(meta, dict) else None
+
+
+def ensure_artifact(
+    path: str, expected: dict, write: Callable[[str], None]
+) -> bool:
+    """Make table ``path`` hold the artifact whose meta is ``expected``
+    (module doc: FINGERPRINTED ARTIFACTS). Under an exclusive flock on
+    ``path + '.lock'``: heal a crashed promote, then compare the stored
+    meta with ``expected`` (JSON-native values only: it is compared with
+    its own round trip). Equal → return False, nothing written.
+    Otherwise ``write(staging)`` must create the table in a
+    per-process unique staging dir; ``expected`` is dumped beside it and
+    the dir promoted by :func:`swap_dir`. Returns True (built).
+
+    A ``write`` that raises leaves the previous table serving and only
+    its own staging dir removed; a process killed before the promote
+    leaves an orphan staging dir and the old (stale) meta, so the next
+    call rebuilds."""
+    import fcntl
+
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path + ".lock", "a") as lk:
+        fcntl.flock(lk, fcntl.LOCK_EX)
+        try:
+            recover_swap(path)
+            if read_artifact_meta(path) == expected:
+                return False
+            staging = f"{path}.staging.{os.getpid()}_{uuid.uuid4().hex[:8]}"
+            try:
+                write(staging)
+                with open(os.path.join(staging, _ARTIFACT_META), "w") as fh:
+                    json.dump(expected, fh)
+                retired = swap_dir(path, staging)
+            finally:
+                shutil.rmtree(staging, ignore_errors=True)
+            if retired:
+                shutil.rmtree(retired, ignore_errors=True)
+            return True
+        finally:
+            fcntl.flock(lk, fcntl.LOCK_UN)

@@ -169,7 +169,13 @@ PRIORITY: tuple[str, ...] = (
     "x_incremental_components_maintained",
     "x_multimodal_funnel",  # r9: was x_edit_dedup_clusters
     "x_cosine_topk_lsh",
-    "x_bpe_pair_counts",  # r7: was x_text_stats
+    # r12 rotation: x_incremental_dedup (reads the persisted src0
+    # MinHash index, whose build protocol moved to
+    # fsops.ensure_artifact; X3/X17, value-exact vs the full-corpus LSH
+    # oracle) takes x_bpe_pair_counts' slot — x_bpe_pair_counts is
+    # green in CORRECTNESS_r07..r11 and its X7 stays covered in-cap by
+    # x_bpe_fertility.
+    "x_incremental_dedup",
     "x_lang_id",
     "x_pseudonymize",
     "x_ml_walk_forward",
@@ -179,6 +185,10 @@ PRIORITY: tuple[str, ...] = (
     # sql_unpivot, x_doc_chunks_udtf, j_asof_forward, t_interval_join,
     # a_table_profile — keep the cadence.
     # --- everything below is redundant-coverage / variant evidence ---
+    # r12 rotation: displaced from the evidence window (X7 still
+    # covered in-cap by x_bpe_fertility); green in CORRECTNESS_r07..r11
+    # + PARITY.md
+    "x_bpe_pair_counts",
     # r11 rotation: displaced from the evidence window (IDs still
     # covered in-cap); each earned its green r10 driver row on first
     # exposure + PARITY.md — except a_hll_sketch_rollup, whose slot

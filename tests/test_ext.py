@@ -841,10 +841,9 @@ def test_mhidx_src0_artifact_cold_warm_and_invalidation(spark, tmp_path, monkeyp
     # the cache path changed, so the in-process memo keyed on the old
     # paths must not short-circuit; start clean
     monkeypatch.setattr(qext, "_NDG_VALIDATED", set())
-    monkeypatch.setattr(qext, "_MHIDX_VALIDATED", set())
 
+    assert qext._mhidx_src0_ensure(spark, sf) is True  # cold build
     idx = qext._mhidx_src0(spark, sf)
-    assert qext._MHIDX_LAST_BUILT is True  # cold build
 
     docs = load_table(spark, "documents", sf).where(
         F.size(F.split(F.col("text"), " ")) >= 2
@@ -865,10 +864,8 @@ def test_mhidx_src0_artifact_cold_warm_and_invalidation(spark, tmp_path, monkeyp
     assert served == expected
     assert served, "no cross pairs - corpus split lost its signal"
 
-    # warm re-validation (fresh process simulated by clearing the memo)
-    monkeypatch.setattr(qext, "_MHIDX_VALIDATED", set())
-    qext._mhidx_src0(spark, sf)
-    assert qext._MHIDX_LAST_BUILT is False
+    # warm re-validation (no memo: every call re-checks the meta)
+    assert qext._mhidx_src0_ensure(spark, sf) is False
 
     # stale meta (parent fingerprint changed) must rebuild
     meta_path = os.path.join(idx.path, "_meta.json")
@@ -877,9 +874,7 @@ def test_mhidx_src0_artifact_cold_warm_and_invalidation(spark, tmp_path, monkeyp
     meta["ndg_meta"]["corpus"]["n_docs"] += 1
     with open(meta_path, "w") as fh:
         json.dump(meta, fh)
-    monkeypatch.setattr(qext, "_MHIDX_VALIDATED", set())
-    qext._mhidx_src0(spark, sf)
-    assert qext._MHIDX_LAST_BUILT is True
+    assert qext._mhidx_src0_ensure(spark, sf) is True
 
 
 def test_embedding_pca_spectral_invariants(spark):
@@ -1109,7 +1104,8 @@ def test_neardup_graph_artifact_build_reuse_invalidate_heal(spark, tmp_path):
     (2) a second ensure() over the same corpus REUSES the files
     (no rebuild); (3) a changed corpus or changed params triggers a
     rebuild instead of serving stale pairs; (4) a crashed promote
-    (table stranded in '.old') heals on read."""
+    (table stranded in '.old') heals on read; (5) a ``_meta.json``
+    that is valid JSON but not an object rebuilds."""
     import os
 
     from dvmax_spark.catalog import load_table
@@ -1127,8 +1123,9 @@ def test_neardup_graph_artifact_build_reuse_invalidate_heal(spark, tmp_path):
             docs, num_hashes=32, bands=16, shingle_n=2, threshold=0.1
         ).collect()
     }
+    assert g.ensure(docs) is True
     got = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"] for r in g.ensure(docs).collect()
+        (r["id_a"], r["id_b"]): r["est_jaccard"] for r in g.pairs().collect()
     }
     assert got == want
 
@@ -1136,7 +1133,7 @@ def test_neardup_graph_artifact_build_reuse_invalidate_heal(spark, tmp_path):
     files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
     mtimes = [os.stat(os.path.join(path, f)).st_mtime_ns for f in files]
     g2 = NearDupGraph(spark, path, num_hashes=32, bands=16, shingle_n=2, threshold=0.1)
-    g2.ensure(docs)
+    assert g2.ensure(docs) is False
     assert [
         os.stat(os.path.join(path, f)).st_mtime_ns for f in files
     ] == mtimes
@@ -1149,15 +1146,16 @@ def test_neardup_graph_artifact_build_reuse_invalidate_heal(spark, tmp_path):
             half, num_hashes=32, bands=16, shingle_n=2, threshold=0.1
         ).collect()
     }
+    assert g.ensure(half) is True
     got_half = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"] for r in g.ensure(half).collect()
+        (r["id_a"], r["id_b"]): r["est_jaccard"] for r in g.pairs().collect()
     }
     assert got_half == want_half and got_half != got
 
     # params change -> meta mismatch -> rebuild (threshold tightens)
     g3 = NearDupGraph(spark, path, num_hashes=32, bands=16, shingle_n=2, threshold=0.5)
-    tight = g3.ensure(half)
-    assert tight.where(F.col("est_jaccard") < 0.5).count() == 0
+    assert g3.ensure(half) is True
+    assert g3.pairs().where(F.col("est_jaccard") < 0.5).count() == 0
 
     # crash heal: promote died between the two renames
     os.rename(path, path + ".old")
@@ -1168,74 +1166,85 @@ def test_neardup_graph_artifact_build_reuse_invalidate_heal(spark, tmp_path):
         (a, b) for (a, b), j in want_half.items() if j >= 0.5
     }
 
+    # valid JSON that is not an object -> stale -> rebuild, same pairs
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        fh.write("[]")
+    assert g3.ensure(half) is True
+    assert {(r["id_a"], r["id_b"]) for r in g3.pairs().collect()} == healed
+
 
 @pytest.mark.slow  # long-tail tier (tests/conftest.py)
 def test_component_label_store_build_reuse_invalidate(spark, tmp_path):
     """The persisted label artifact (the maintained state of
-    incremental components): (1) labels served from the store equal a
-    fresh two-phase CC over the member subgraph; (2) a second ensure()
-    is warm (no recompute — compute fn not called, files untouched);
-    (3) the PARENT pair artifact rebuilding (corpus change) invalidates
-    the labels transitively via the embedded meta, with no second
-    corpus fingerprint pass; (4) merging the remaining edges onto the
-    artifact-read labels equals clustering the union from scratch —
-    the x_incremental_components_maintained contract."""
+    incremental components, built by fsops.ensure_artifact with
+    NearDupGraph.derived_meta as its validity recipe): (1) labels
+    served from the store equal a fresh two-phase CC over the member
+    subgraph; (2) a second ensure is warm (no recompute — write fn not
+    called, files untouched); (3) the PARENT pair artifact rebuilding
+    (corpus change) invalidates the labels transitively via the
+    embedded meta, with no second corpus fingerprint pass; (4) merging
+    the remaining edges onto the artifact-read labels equals
+    clustering the union from scratch — the
+    x_incremental_components_maintained contract."""
     import os
 
     from dvmax_spark.catalog import load_table
     from dvmax_spark.ext.dedup import (
-        ComponentLabelStore,
         NearDupGraph,
         connected_components_twophase,
         incremental_components,
     )
+    from dvmax_spark.fsops import ensure_artifact
 
     docs = load_table(spark, "documents", SF).where(
         F.size(F.split(F.col("text"), " ")) >= 2
     )
     gpath = str(tmp_path / "ndg")
+    lpath = gpath + "_labels"
     g = NearDupGraph(spark, gpath, num_hashes=32, bands=16, shingle_n=2, threshold=0.1)
-    pairs = g.ensure(docs)
+    g.ensure(docs)
+    pairs = g.pairs()
 
     member = docs.where(F.col("doc_id") % 3 != 0).select("doc_id")
     both = pairs.join(
         member.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"
     ).join(member.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
 
-    store = ComponentLabelStore(spark, gpath + "_labels", g, member_tag="mod3!=0")
     calls = []
 
-    def compute():
-        calls.append(1)
-        labels, _ = connected_components_twophase(both)
-        return labels
+    def writer(edges, tag):
+        def write(staging):
+            calls.append(tag)
+            labels, _ = connected_components_twophase(edges)
+            labels.select("id", "label").write.parquet(staging)
 
-    got = {(r["id"], r["label"]) for r in store.ensure(compute).collect()}
+        return write
+
+    def ensure_labels(edges, tag):
+        return ensure_artifact(
+            lpath, g.derived_meta(1, "mod3!=0"), writer(edges, tag)
+        )
+
+    assert ensure_labels(both, 1) is True
+    got = {(r["id"], r["label"]) for r in spark.read.parquet(lpath).collect()}
     want = {
         (r["id"], r["label"])
         for r in connected_components_twophase(both)[0].collect()
     }
-    assert got == want and calls == [1] and store.last_ensure_built is True
+    assert got == want and calls == [1]
 
     # warm: same parent meta -> no recompute, parquet files untouched
-    files = sorted(
-        f for f in os.listdir(gpath + "_labels") if f.endswith(".parquet")
-    )
-    mtimes = [
-        os.stat(os.path.join(gpath + "_labels", f)).st_mtime_ns for f in files
-    ]
-    store2 = ComponentLabelStore(spark, gpath + "_labels", g, member_tag="mod3!=0")
-    store2.ensure(compute)
-    assert calls == [1] and store2.last_ensure_built is False
-    assert [
-        os.stat(os.path.join(gpath + "_labels", f)).st_mtime_ns for f in files
-    ] == mtimes
+    files = sorted(f for f in os.listdir(lpath) if f.endswith(".parquet"))
+    mtimes = [os.stat(os.path.join(lpath, f)).st_mtime_ns for f in files]
+    assert ensure_labels(both, 1) is False
+    assert calls == [1]
+    assert [os.stat(os.path.join(lpath, f)).st_mtime_ns for f in files] == mtimes
 
     # maintained merge == from-scratch union clustering
     new_edges = pairs.join(
         both.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
     )
-    merged, _ = incremental_components(store.labels(), new_edges)
+    merged, _ = incremental_components(spark.read.parquet(lpath), new_edges)
     want_all = {
         (r["id"], r["label"])
         for r in connected_components_twophase(pairs)[0].collect()
@@ -1250,23 +1259,18 @@ def test_component_label_store_build_reuse_invalidate(spark, tmp_path):
     # would likewise mismatch) -> recompute runs
     half = docs.where(F.col("doc_id") % 2 == 0)
     g.ensure(half)
-    store3 = ComponentLabelStore(spark, gpath + "_labels", g, member_tag="mod3!=0")
     member_h = half.where(F.col("doc_id") % 3 != 0).select("doc_id")
     both_h = g.pairs().join(
         member_h.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"
     ).join(member_h.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
 
-    def compute_h():
-        calls.append(2)
-        labels, _ = connected_components_twophase(both_h)
-        return labels
-
-    got_h = {(r["id"], r["label"]) for r in store3.ensure(compute_h).collect()}
+    assert ensure_labels(both_h, 2) is True
+    got_h = {(r["id"], r["label"]) for r in spark.read.parquet(lpath).collect()}
     want_h = {
         (r["id"], r["label"])
         for r in connected_components_twophase(both_h)[0].collect()
     }
-    assert got_h == want_h and calls == [1, 2] and store3.last_ensure_built is True
+    assert got_h == want_h and calls == [1, 2]
 
 
 @pytest.mark.slow  # long-tail tier (tests/conftest.py)

@@ -17,7 +17,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from dvmax_spark.fsops import recover_swap, resolve, swap_dir
+from dvmax_spark.fsops import (
+    ensure_artifact,
+    read_artifact_meta,
+    recover_swap,
+    resolve,
+    swap_dir,
+)
 
 # the crash matrix runs in BOTH pointer protocols: the symlink
 # fast-path and the portable manifest-file mode (object-store shape) —
@@ -540,3 +546,127 @@ def test_swap_dir_cas_real_process_race(tmp_path, pmode):
     # loser's staging intact for retry; only the winner's .v2 exists
     assert os.path.isfile(os.path.join(str(tmp_path / f"st_{loser}"), "m"))
     assert not os.path.exists(path + ".v3")
+
+
+# ------------------------------------------------ fingerprinted artifacts
+# ensure_artifact's fault matrix, Spark-free: each fake ``write`` drops
+# one file naming its build, so a test can tell which build is serving.
+
+
+def _dropper(tag: str, calls: list | None = None, then=None):
+    def write(staging: str) -> None:
+        if calls is not None:
+            calls.append(tag)
+        os.makedirs(staging)
+        with open(os.path.join(staging, "m"), "w") as fh:
+            fh.write(tag)
+        if then is not None:
+            then()
+
+    return write
+
+
+def _stagings(path: str) -> list[str]:
+    parent, base = os.path.split(path)
+    return [n for n in os.listdir(parent) if n.startswith(base + ".staging.")]
+
+
+def test_ensure_artifact_rebuilds_after_crash_before_swap(tmp_path):
+    """A builder killed between its staging write and the swap leaves
+    an orphan staging dir and the old meta: the old table keeps
+    serving, and the next call rebuilds instead of trusting it."""
+    import multiprocessing as mp
+
+    path = str(tmp_path / "cache" / "a")
+    calls: list = []
+    assert ensure_artifact(path, {"v": 1}, _dropper("1", calls)) is True
+    assert ensure_artifact(path, {"v": 1}, _dropper("x", calls)) is False
+    assert calls == ["1"] and read_artifact_meta(path) == {"v": 1}
+
+    def crasher() -> None:
+        ensure_artifact(path, {"v": 2}, _dropper("2", then=lambda: os._exit(3)))
+
+    p = mp.get_context("fork").Process(target=crasher)
+    p.start()
+    p.join(timeout=60)
+    assert p.exitcode == 3
+    (orphan,) = _stagings(path)
+    assert not os.path.exists(os.path.join(os.path.dirname(path), orphan, "_meta.json"))
+    assert _read(path, "m") == "1" and read_artifact_meta(path) == {"v": 1}
+
+    assert ensure_artifact(path, {"v": 2}, _dropper("3", calls)) is True
+    assert calls == ["1", "3"]
+    assert _read(path, "m") == "3" and read_artifact_meta(path) == {"v": 2}
+
+
+def test_ensure_artifact_heals_crash_mid_swap_without_rebuild(tmp_path):
+    """A promote that died mid-swap (table stranded in '.old') heals
+    warm: same table, no rebuild."""
+    path = str(tmp_path / "a")
+    calls: list = []
+    assert ensure_artifact(path, {"v": 1}, _dropper("1", calls)) is True
+    os.rename(path, path + ".old")
+    assert not os.path.isdir(path)
+    assert ensure_artifact(path, {"v": 1}, _dropper("2", calls)) is False
+    assert calls == ["1"] and _read(path, "m") == "1"
+
+
+@pytest.mark.parametrize("bad", ["truncated", "not_an_object", "missing"])
+def test_ensure_artifact_rebuilds_on_corrupt_meta(tmp_path, bad):
+    path = str(tmp_path / "a")
+    assert ensure_artifact(path, {"v": 1}, _dropper("1")) is True
+    meta = os.path.join(resolve(path), "_meta.json")
+    if bad == "missing":
+        os.remove(meta)
+    else:
+        with open(meta, "w") as fh:
+            fh.write('{"v": ' if bad == "truncated" else "[]")
+    assert read_artifact_meta(path) is None
+    assert ensure_artifact(path, {"v": 1}, _dropper("2")) is True
+    assert _read(path, "m") == "2" and read_artifact_meta(path) == {"v": 1}
+
+
+def test_ensure_artifact_failed_write_keeps_previous_table(tmp_path):
+    path = str(tmp_path / "a")
+    assert ensure_artifact(path, {"v": 1}, _dropper("1")) is True
+
+    def boom() -> None:
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        ensure_artifact(path, {"v": 2}, _dropper("2", then=boom))
+    assert _read(path, "m") == "1" and read_artifact_meta(path) == {"v": 1}
+    assert _stagings(path) == []
+
+
+def test_ensure_artifact_real_process_race(tmp_path):
+    """TWO real processes race ensure_artifact on an empty path through
+    a barrier: exactly one builds, both then read that one table, and
+    no staging dir is left behind."""
+    import multiprocessing as mp
+    import time
+
+    path = str(tmp_path / "cache" / "a")
+
+    def contender(tag: str, barrier, q) -> None:
+        barrier.wait()
+        # the sleep holds the flock across the other contender's check
+        built = ensure_artifact(
+            path, {"v": 1}, _dropper(tag, then=lambda: time.sleep(0.2))
+        )
+        q.put((tag, built, _read(path, "m")))
+
+    ctx = mp.get_context("fork")
+    barrier, q = ctx.Barrier(2), ctx.Queue()
+    ps = [ctx.Process(target=contender, args=(t, barrier, q)) for t in ("A", "B")]
+    for p in ps:
+        p.start()
+    results = [q.get(timeout=60) for _ in ps]
+    for p in ps:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+    assert sorted(built for _, built, _ in results) == [False, True], results
+    winner = next(tag for tag, built, _ in results if built)
+    assert [served for _, _, served in results] == [winner, winner]
+    assert _read(path, "m") == winner and read_artifact_meta(path) == {"v": 1}
+    assert _stagings(path) == []

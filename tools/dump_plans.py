@@ -1,11 +1,12 @@
-"""Dump `.explain("formatted")` for bench queries into plans/r11/.
+"""Dump `.explain("formatted")` for bench queries into plans/<round>/.
 
-Usage: python tools/dump_plans_r11.py <suffix> [name ...]
+Usage: python tools/dump_plans.py <round> <suffix> [name ...]
 
-Writes plans/r11/<query>_<suffix>.txt for every bench-flagged query
-(or just the named ones). `suffix` is `before` / `after` per the
-round-11 optimization deliverable: the judge checks plan-diff claims
-in OPTIMIZATION_r11.md against these files.
+Writes plans/<round>/<query>_<suffix>.txt for every bench-flagged
+query (or just the named ones), e.g. `python tools/dump_plans.py r11
+after`. `suffix` is `before` / `after` per an optimization round's
+deliverable: plan-diff claims in OPTIMIZATION_<round>.md are checked
+against these files.
 """
 
 from __future__ import annotations
@@ -20,12 +21,12 @@ def main() -> None:
     from dvmax_spark.registry import all_queries
     from dvmax_spark.session import get_spark
 
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("dump_plans_r11")
+    spark = get_spark(f"dump_plans_{rnd}")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
 
