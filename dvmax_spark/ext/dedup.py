@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import random
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -495,37 +496,74 @@ def dedup_clusters_sql(
     """
 
 
+# Largest deduplicated edge count whose components are labelled on the
+# driver; above it the distributed two-phase core runs. Set from the
+# crossover measured by ``tools/graph_scale.py --crossover`` (SCALING.md
+# "Connected components: driver path vs two-phase").
+CC_DRIVER_MAX_EDGES = 1_000_000
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Min-id connected-component labels ``(id, label)`` for every
+    endpoint of ``pairs`` (id_a, id_b) — the one entry point every
+    component consumer goes through.
+
+    The edge set is normalised (min, max), stripped of self-loops,
+    deduplicated and materialised with ONE checkpoint, so the pair
+    lineage (for a regenerate-from-scratch query, the whole LSH plan)
+    runs exactly once whichever path follows. At most
+    ``CC_DRIVER_MAX_EDGES + 1`` edges are read back:
+
+      * up to ``CC_DRIVER_MAX_EDGES`` edges, union-find on the driver
+        (union by min root, so every root is its component's min id)
+        and the labels return through ``createDataFrame`` — at
+        near-dup graph sizes the cost of a distributed core is its job
+        count, not its data;
+      * above it, :func:`connected_components_twophase` on the
+        materialised edges: O(log n) rounds, the 100 TB path.
+
+    Labels keep the pairs' id type."""
+    edges = (
+        pairs.select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+        .where(F.col("id_a") != F.col("id_b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    head = edges.limit(CC_DRIVER_MAX_EDGES + 1).toPandas()
+    if len(head) > CC_DRIVER_MAX_EDGES:
+        return connected_components_twophase(edges)[0]
+    a, b = head["id_a"].tolist(), head["id_b"].tolist()
+    parent = {x: x for x in a + b}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]  # path halving
+        return x
+
+    for u, v in zip(a, b):
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)
+    labels = pd.DataFrame(
+        {"id": list(parent), "label": [find(x) for x in parent]}
+    ).astype(head["id_a"].dtype)
+    id_type = edges.schema["id_a"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(labels, f"id {id_type}, label {id_type}")
+
+
 def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     rank_col: str | None = None,
-    max_iter: int = 20,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Near-dup CLUSTER assignment + canonical selection — the step
     that turns pairwise near-dup evidence (from any of the pair
     generators above) into an actual dedup verdict: one kept document
-    per connected component of the similarity graph.
-
-    Components via iterative min-label propagation: every vertex
-    repeatedly takes the min label among itself and its neighbors; a
-    vertex's label converges to the min id of its component in
-    O(component diameter) propagation steps. Near-dup graphs are
-    star-like (diameter 2-4 — dup families share a common template),
-    so a handful of steps suffices; ``max_iter`` rounds of TWO steps
-    each bound adversarial chains. Each step is one shuffle join
-    (edges × labels, keyed on vertex id) + one min-aggregate, and only
-    the pair graph's VERTICES iterate (singleton docs — the bulk of a
-    real corpus — skip the loop entirely and rejoin at the end);
-    labels are lineage-cut once per round so the plan
-    doesn't grow with iterations (``checkpoint_mode='reliable'`` puts
-    the per-round cut on shared storage so an executor loss mid-loop
-    resumes instead of failing — operators/lineage.py). At 100 TB,
-    the same two primitives compose into the alternating
-    large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") for O(log n) worst-case
-    rounds — the data layout and shuffle keys stay identical.
+    per connected component (:func:`connected_components`) of the
+    similarity graph.
 
     Canonical rule: per cluster keep the doc with the highest
     ``rank_col`` (tie-break min id); with ``rank_col=None`` keep the
@@ -534,77 +572,9 @@ def dedup_clusters(
     Returns one row per input doc: (id, cluster_id, cluster_size,
     keep) — singletons are their own cluster with keep=true.
     """
-    from dvmax_spark.operators.lineage import cut_lineage
-
-    # NOTE (r10): pre-partitioning edges by s and persisting the
-    # columnar cache (so each step's join skips the edge-side
-    # exchange) was implemented and A/B-measured: the per-step
-    # cache-read + sort cost exceeded the saved re-shuffle at bench
-    # scale (x_dedup_clusters 6.4 -> 8.3 s, 3 alternating runs), so
-    # the lineage-cut shape below stands. On a network-bound cluster
-    # the trade can flip; revisit with cluster measurements.
-    edges = cut_lineage(
-        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
-        .unionAll(pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d")))
-        .distinct(),
-        mode=checkpoint_mode,
+    comp = connected_components(pairs).select(
+        F.col("id").alias(id_col), F.col("label").alias("cluster_id")
     )
-    # Iterate ONLY over the pair graph's vertices: near-dup graphs are
-    # sparse (most docs are singletons with no edges), and a singleton's
-    # label never changes — carrying all docs through every round's
-    # join+aggregate shuffled the full corpus per round for nothing.
-    # Singletons rejoin as their own cluster in the final left join.
-    labels = edges.select(F.col("s").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-
-    def _step(cur: DataFrame) -> DataFrame:
-        # message-union form: neighbor labels and own label meet in ONE
-        # aggregation — min(own, min(neighbors)) — so a step is one
-        # shuffle join (edges × labels on the sending vertex) plus one
-        # hash-aggregate on the receiving vertex, with NO second join
-        # to merge the own label back (the old formulation's third
-        # O(V) exchange per step).
-        msgs = edges.join(cur.withColumnRenamed("id", "s"), "s").select(
-            F.col("d").alias("id"), "label"
-        )
-        return msgs.unionAll(cur).groupBy("id").agg(F.min("label").alias("label"))
-
-    # Structural fixpoint (r11, mirroring the two-phase core's r10
-    # star-forest test): a labeling is a fixpoint of _step iff NO edge
-    # still crosses two labels — labels only decrease, every label is
-    # a component member's id, and the component-min vertex keeps its
-    # own id, so edge-constant labels ARE the component minima. The
-    # check runs on the round's OWN output, so the old label-sum
-    # protocol's confirmation round (an equal sum can only be observed
-    # one round AFTER the last change) never runs: one fewer
-    # checkpoint + convergence action + two no-op propagation steps
-    # per query. The check itself is the step's own join shape minus
-    # the aggregate (edges x labels, then labels on the receiving id),
-    # and its action doubles as the round's checkpoint materializer.
-    def _violations(cur: DataFrame) -> int:
-        msgs = edges.join(cur.withColumnRenamed("id", "s"), "s").select(
-            F.col("d").alias("id"), F.col("label").alias("nbr_label")
-        )
-        return (
-            msgs.join(cur, "id")
-            .where(F.col("nbr_label") < F.col("label"))
-            .limit(1)
-            .count()
-        )
-
-    for _ in range(max_iter):
-        # TWO propagation steps per convergence-check action: the
-        # fixpoint test only needs the LAST step's outcome, so pairing
-        # steps halves the job-submission + checkpoint overhead that
-        # dominates each round's wall at the typical 2-4 round
-        # convergence of star-like dup families.
-        stepped = cut_lineage(_step(_step(labels)), mode=checkpoint_mode)
-        labels = stepped
-        if _violations(stepped) == 0:
-            break
-
-    comp = labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
     return _cluster_output(df, comp, id_col, rank_col)
 
 
@@ -635,12 +605,12 @@ def connected_components_twophase(
 ) -> tuple[DataFrame, int]:
     """Connected components by the ALTERNATING large-star/small-star
     algorithm (Kiveris et al., MAPREDUCE'14 "Connected Components in
-    Map-Reduce and Beyond") — the O(log n)-round upgrade of
-    :func:`dedup_clusters`' min-label propagation, whose round count
-    is the component DIAMETER. Star-like dup families converge in 2-4
-    rounds either way; adversarial CHAIN corpora (CDC/shift families,
-    paraphrase chains) have diameter O(n), where label propagation
-    stalls and this converges in O(log n) rounds regardless.
+    Map-Reduce and Beyond") — the distributed core of
+    :func:`connected_components` above its driver-side edge limit.
+    Its round count is O(log n) on any graph shape, where min-label
+    propagation needs the component DIAMETER: adversarial CHAIN
+    corpora (CDC/shift families, paraphrase chains) have diameter
+    O(n).
 
     Each phase is edge-parallel with NO per-node neighbor lists
     (no collect_list — a mega-hub costs an aggregate, not a row):
@@ -651,8 +621,8 @@ def connected_components_twophase(
         and add (m, u).
     Both phases preserve connectivity and never give the component
     minimum a parent, so the fixpoint is a star forest rooted at each
-    component's min id — the SAME labeling min-label propagation
-    yields, which is why the two implementations share one oracle.
+    component's min id — the SAME labeling the driver-side
+    union-find yields, which is why both paths share one oracle.
 
     Returns ``(labels, rounds)``: labels is (id, label) for every
     endpoint of ``pairs``; rounds is the number of LS+SS rounds run
@@ -725,8 +695,7 @@ def connected_components_twophase(
 
     rounds = 0
     for _ in range((max_rounds + 1) // 2):
-        # TWO LS+SS rounds per convergence action (r10, mirroring
-        # dedup_clusters' two-steps-per-check): each round costs a
+        # TWO LS+SS rounds per convergence action (r10): each round costs a
         # driver-side physical-planning pass (the checkpoint call) plus
         # a job submission, and at bench scale that fixed overhead —
         # not the shuffled bytes — dominates the loop, while at cluster
@@ -1534,7 +1503,6 @@ def canonical_by_degree(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Centrality-based canonical selection: within every near-dup
     cluster (size > 1), keep the document with the most pair edges —
@@ -1549,11 +1517,11 @@ def canonical_by_degree(
     ``(cluster_id, cluster_size, canonical_id, canonical_degree)``.
 
     Scale shape: degree is one count-aggregate over the (already
-    bucket-capped) pair list; components reuse
-    :func:`dedup_clusters`'s propagation; the per-cluster argmax is a
+    bucket-capped) pair list; components come from
+    :func:`connected_components`; the per-cluster argmax is a
     ``max_by`` aggregate (single shuffle on cluster_id, partial
     aggregation map-side) — no window over the corpus."""
-    clusters = dedup_clusters(df, pairs, id_col=id_col, max_iter=max_iter)
+    clusters = dedup_clusters(df, pairs, id_col=id_col)
     edges = pairs.select(F.col("id_a").alias(id_col)).unionAll(
         pairs.select(F.col("id_b").alias(id_col))
     )
@@ -1659,9 +1627,9 @@ def pagerank_centrality(
     Scale shape: each iteration is one join of the rank vector with the
     edge list (both partitioned by src after the first shuffle) plus
     one aggregation by dst — the canonical distributed PageRank step.
-    A lineage cut per iteration truncates the plan, exactly as
-    :func:`dedup_clusters` does (``checkpoint_mode='reliable'`` for
-    executor-loss-tolerant cuts on shared storage); at cluster scale
+    A lineage cut every second iteration truncates the plan
+    (``checkpoint_mode='reliable'`` for executor-loss-tolerant cuts on
+    shared storage); at cluster scale
     the edge list would be persisted once and reused across all
     iterations.
     """
@@ -1685,8 +1653,7 @@ def pagerank_centrality(
     )
     for _i in range(iters):
         # NOTE (measured, min-of-3 at sf0.1): a message-union variant
-        # (zero-mass node rows riding the aggregate, as dedup_clusters
-        # does) hard-codes a shuffle of the node table per iteration
+        # (zero-mass node rows riding the aggregate) hard-codes a shuffle of the node table per iteration
         # and ran ~10% SLOWER here — the left join below lets AQE
         # broadcast the (small) node-metadata side at test scale and
         # degrades to the same shuffle join at cluster scale, so the

@@ -272,7 +272,7 @@ def dup_span_stats(
     consumers share one materialization — 1.8× at sf0.1, and at
     cluster scale it trades a full second gram-construction pass for
     executor-local storage of the much smaller aggregate. Caveat shared
-    with dedup_clusters' iteration checkpoints: localCheckpoint output
+    with every localCheckpoint in the engine: localCheckpoint output
     is lost with an executor, so a lost node re-runs the query rather
     than recovering lineage — the standard trade for truncating a
     twice-consumed heavy subtree.

@@ -454,9 +454,10 @@ def semantic_dedup(
 
     The scale shape is the composition of two already-bounded pieces:
     the pair stage shuffles once on (table, bucket) with ``max_bucket``
-    capping degenerate buckets, and component labeling is the iterative
-    min-label propagation of ext/dedup.py (one shuffle join + one
-    min-aggregate per round, checkpointed). Returns one row per vector:
+    capping degenerate buckets, and component labeling is
+    ext/dedup.py:connected_components (driver union-find up to its edge
+    limit, the two-phase distributed core above it). Returns one row
+    per vector:
     (id, cluster_id, cluster_size, keep)."""
     from dvmax_spark.ext.dedup import dedup_clusters
 
@@ -582,8 +583,8 @@ def semdedup_kmeans(
 
     Scale shape: one KMeans fit over the (normalized) vectors (MLlib,
     sampled init, seed pinned), one shuffle on probe-cluster id for
-    the within-pool self-join, then the bounded component propagation
-    of ext/dedup.py. Returns one row per vector:
+    the within-pool self-join, then ext/dedup.py:connected_components.
+    Returns one row per vector:
     ``(id, kbucket, cluster_id, cluster_size, keep)``. Rows-only in
     the registry: MLlib KMeans has no cross-engine oracle (the LSH
     form x_semantic_dedup carries the family's value-exact evidence).

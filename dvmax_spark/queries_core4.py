@@ -1990,11 +1990,11 @@ def j_fuzzy_edit1_join(spark: SparkSession, sf: str) -> DataFrame:
 def x_er_golden_record(spark: SparkSession, sf: str) -> DataFrame:
     """Entity-resolution END-TO-END: fuzzy edit-1 name pairs (SymSpell
     deletion blocking — never the n² matrix) → connected components
-    (the dedup_clusters min-label propagation, reused verbatim on a
-    different entity) → GOLDEN-RECORD merge per multi-member cluster
+    (ext/dedup.py:dedup_clusters, reused verbatim on a different
+    entity) → GOLDEN-RECORD merge per multi-member cluster
     (survivorship: highest-balance member donates the name, balances
     sum). The oracle brute-forces pairs + recursive reachability —
-    value-exact, proving blocking+propagation lose nothing. The
+    value-exact, proving blocking+components lose nothing. The
     deletion-blocked candidate set joins the (tiny) attribute table
     twice — at 100 TB both are broadcast lookups against the
     candidate stream."""

@@ -336,9 +336,10 @@ def x_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
 @query("x_dedup_clusters", ids=("X17",), bench=True, sql=dedup_clusters_sql())
 def x_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup cluster assignment + canonical-doc selection: MinHash
-    LSH pairs → connected components (iterative min-label propagation)
-    → keep the longest doc per cluster. The step that turns pairwise
-    near-dup evidence into a per-document dedup verdict — what a
+    LSH pairs → connected components (ext/dedup.py:connected_components:
+    driver union-find at this graph size, two-phase above its edge
+    limit) → keep the longest doc per cluster. The step that turns
+    pairwise near-dup evidence into a per-document dedup verdict — what a
     100 TB training-data pipeline actually executes. Deterministic end
     to end (portable hashes; min-id component labels), so the whole
     pipeline has an exact DuckDB oracle via a recursive reachability
@@ -359,15 +360,16 @@ def x_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
 @query("x_dedup_clusters_twophase", ids=("X17",), bench=True, sql=dedup_clusters_sql())
 def x_dedup_clusters_twophase(spark: SparkSession, sf: str) -> DataFrame:
-    """x_dedup_clusters with components computed by the ALTERNATING
-    large-star/small-star algorithm (Kiveris et al., MAPREDUCE'14)
-    instead of min-label propagation: O(log n) rounds on ANY graph
-    shape (propagation needs diameter rounds — O(n) on paraphrase/CDC
-    chains). Both converge to min-id component labels, so this shares
-    x_dedup_clusters' exact recursive-CTE DuckDB oracle — two
-    independent distributed algorithms checked against one sequential
-    ground truth. Pairs come from the persisted NearDupGraph artifact
-    (_ndg_pairs — built once, read by every graph consumer)."""
+    """x_dedup_clusters with components ALWAYS computed by the
+    alternating large-star/small-star algorithm (Kiveris et al.,
+    MAPREDUCE'14), whatever the graph size: O(log n) rounds on ANY
+    graph shape (label propagation would need diameter rounds — O(n)
+    on paraphrase/CDC chains). Both paths converge to min-id component
+    labels, so this shares x_dedup_clusters' exact recursive-CTE
+    DuckDB oracle — the driver union-find and the distributed core
+    checked against one sequential ground truth. Pairs come from the
+    persisted NearDupGraph artifact (_ndg_pairs — built once, read by
+    every graph consumer)."""
     docs = load_table(spark, "documents", sf)
     return dedup_clusters_twophase(docs, _ndg_pairs(spark, sf), rank_col="n_chars").orderBy("doc_id")
 

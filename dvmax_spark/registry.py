@@ -129,7 +129,12 @@ PRIORITY: tuple[str, ...] = (
     "s5_rest_ingest_fixture",
     "s4_pipeline_infra",
     "s_corrupt_json_recovery",
-    "t_session_window",
+    # r12 rotation: x_soft_dedup_mass (connected components feed its
+    # per-source duplicate mass; X17/X21, value-exact vs the recursive-
+    # CTE oracle) takes t_session_window's slot — t_session_window is
+    # green in CORRECTNESS_r02 + r11 and its T2 stays covered in-cap by
+    # t_stateful_session.
+    "x_soft_dedup_mass",
     # streaming — r11 rotation: t_stream_rollup earned its green r10
     # row; t_stream_cms (micro-batch CMS maintenance: A10 sketch + T1
     # streaming in one oracled query) keeps T1 in-cap and gives the
@@ -165,7 +170,12 @@ PRIORITY: tuple[str, ...] = (
     # labels path the bench runs, shares the recursive-CTE oracle)
     # take the freed slots.
     "x_bpe_fertility",
-    "x_audio_fp_dedup",
+    # r12 rotation: x_dedup_clusters (the regenerate-from-scratch LSH ->
+    # connected components -> canonical pipeline, X17, recursive-CTE
+    # oracle) takes x_audio_fp_dedup's slot — x_audio_fp_dedup is green
+    # in CORRECTNESS_r11 and its X12/X1 stay covered in-cap by
+    # x_multimodal_funnel and x_span_dedup_clean.
+    "x_dedup_clusters",
     "x_incremental_components_maintained",
     "x_multimodal_funnel",  # r9: was x_edit_dedup_clusters
     "x_cosine_topk_lsh",
@@ -185,6 +195,10 @@ PRIORITY: tuple[str, ...] = (
     # sql_unpivot, x_doc_chunks_udtf, j_asof_forward, t_interval_join,
     # a_table_profile — keep the cadence.
     # --- everything below is redundant-coverage / variant evidence ---
+    # r12 rotation: displaced from the evidence window by the two
+    # connected-components consumers (IDs still covered in-cap)
+    "t_session_window",
+    "x_audio_fp_dedup",
     # r12 rotation: displaced from the evidence window (X7 still
     # covered in-cap by x_bpe_fertility); green in CORRECTNESS_r07..r11
     # + PARITY.md
@@ -238,7 +252,6 @@ PRIORITY: tuple[str, ...] = (
     # rotated back in-cap in r9 (see A5 note above)
     "a_weighted_median_udaf",
     "x_dup_pagerank",
-    "x_soft_dedup_mass",
     "x_dsir_select",
     "j_incremental_join_mv",
     "x_group_split",
@@ -256,7 +269,6 @@ PRIORITY: tuple[str, ...] = (
     # covered in-cap); their parity evidence is PARITY.md + tests
     "x_fingerprint",
     "x_repetition_stats",
-    "x_dedup_clusters",
     "x_ngram_jaccard",
     "x_minhash_lsh",
     "x_pii_redact",

@@ -11,7 +11,7 @@ near-dups are judged against SURVIVORS only. The within-batch survivor
 set is the exact sequential-greedy result (lexicographic MIS over the
 candidate-pair graph), computed by earliest-witness fixpoint iteration
 — depth-k chain nodes are correct after k rounds, so ``max_iter``
-bounds chain length exactly like ``dedup_clusters``. Because the
+bounds the chain length it resolves. Because the
 semantics equal sequential processing in id order, the outcome is
 INDEPENDENT of how the stream is sliced into micro-batches (pinned by
 test).

@@ -10,9 +10,9 @@ What the assertions pin:
     banded LSH at scale;
   * exact_dedup (the cheap first pass) is what catches the identical
     family — the documented division of labor with the capped LSH;
-  * min-label propagation converges within max_iter on realistic
-    (star/short-chain) graphs and TERMINATES on adversarial chains
-    even when max_iter is too small to converge;
+  * connected components label realistic (star/short-chain) graphs
+    exactly, and the two-phase core TERMINATES on adversarial chains
+    even when max_rounds is too small to converge;
   * end-to-end wall-clock stays bounded (generous: this container has
     5-10x timing noise; the real scale signal is the pair-count bound).
 
@@ -28,6 +28,12 @@ pytestmark = pytest.mark.slow  # long-tail tier (tests/conftest.py)
 import time
 
 from pyspark.sql import functions as F
+
+from tests.test_connected_components import (
+    RANDOM_GRAPHS,
+    _random_edges,
+    _union_find_labels,
+)
 
 N_IDENTICAL = 1_000
 N_CHAIN = 12
@@ -88,16 +94,16 @@ def test_dedup_pipeline_survives_adversarial_corpus(spark):
 
     t0 = time.perf_counter()
     clusters = dedup_clusters(
-        docs, pairs.select("id_a", "id_b").unionByName(fam_edges), max_iter=20
+        docs, pairs.select("id_a", "id_b").unionByName(fam_edges)
     ).cache()
     rows = {r["doc_id"]: r for r in clusters.collect()}
     cluster_secs = time.perf_counter() - t0
 
-    # mega-family: one cluster of 1,000, exactly one keeper (star: 1 round)
+    # mega-family: one cluster of 1,000, exactly one keeper
     fam = [r for i, r in rows.items() if i < 10_000]
     assert all(r["cluster_id"] == 0 and r["cluster_size"] == N_IDENTICAL for r in fam)
     assert sum(r["keep"] for r in fam) == 1
-    # chain: one cluster of N_CHAIN (diameter N_CHAIN-1 < max_iter)
+    # chain: one cluster of N_CHAIN
     chain = [r for i, r in rows.items() if 10_000 <= i < 20_000]
     assert all(r["cluster_id"] == 10_000 and r["cluster_size"] == N_CHAIN for r in chain)
     assert sum(r["keep"] for r in chain) == 1
@@ -132,17 +138,17 @@ def test_minhash_candidate_shapes_agree(spark):
     docs.unpersist()
 
 
-def test_dedup_clusters_terminates_on_adversarial_chain(spark):
-    """A 50-edge path with max_iter=3 cannot converge — the bound must
+def test_dedup_clusters_twophase_terminates_on_adversarial_chain(spark):
+    """A 50-edge path with max_rounds=2 cannot converge — the bound must
     still TERMINATE the loop and return every doc exactly once."""
-    from dvmax_spark.ext.dedup import dedup_clusters
+    from dvmax_spark.ext.dedup import dedup_clusters_twophase
 
     n = 50
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = dedup_clusters(docs, pairs, max_iter=3)
+    out = dedup_clusters_twophase(docs, pairs, max_rounds=2)
     assert out.count() == n
     assert out.select("doc_id").distinct().count() == n
 
@@ -171,37 +177,14 @@ def test_canonical_by_degree_picks_the_hub(spark):
     assert r2["canonical_id"] == 3 and r2["canonical_degree"] == 1
 
 
-def _union_find_labels(n_nodes, edges):
-    """Sequential ground truth: min-id component label per node."""
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {i: find(i) for i in range(n_nodes)}
-
-
 def test_twophase_matches_union_find_on_random_graphs(spark):
     """Alternating large-star/small-star CC must produce exactly the
     min-id labeling of a sequential union-find on seeded random graphs
     of several densities (sparse forest -> near-clique)."""
-    import random
-
     from dvmax_spark.ext.dedup import connected_components_twophase
 
-    for seed, n, m in [(1, 40, 15), (2, 60, 60), (3, 30, 200), (4, 80, 40)]:
-        rng = random.Random(seed)
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(m)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
+    for seed, n, m in RANDOM_GRAPHS:
+        edges = _random_edges(seed, n, m)
         truth = _union_find_labels(n, edges)
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         labels, rounds = connected_components_twophase(pairs)
@@ -228,13 +211,20 @@ def test_twophase_chain_converges_logarithmically(spark):
     assert all(r["label"] == 0 for r in rows)
 
 
-def test_twophase_cluster_output_matches_propagation(spark):
-    """dedup_clusters_twophase and dedup_clusters agree row-for-row
-    (cluster_id, cluster_size, keep) on the hand-built chain + star +
-    singleton graph and on a random graph with a rank column."""
+def test_twophase_cluster_output_matches_driver_path(spark):
+    """dedup_clusters_twophase and dedup_clusters (on its driver-side
+    union-find path at this size) agree row-for-row (cluster_id,
+    cluster_size, keep) on the hand-built chain + star + singleton
+    graph and on a random graph with a rank column."""
     import random
 
-    from dvmax_spark.ext.dedup import dedup_clusters, dedup_clusters_twophase
+    from dvmax_spark.ext.dedup import (
+        CC_DRIVER_MAX_EDGES,
+        dedup_clusters,
+        dedup_clusters_twophase,
+    )
+
+    assert CC_DRIVER_MAX_EDGES >= 30
 
     docs = spark.createDataFrame(
         [(i, 10 * ((i * 7) % 9)) for i in range(1, 30)], "doc_id long, w long"

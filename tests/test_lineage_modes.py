@@ -45,17 +45,13 @@ def test_global_rank_and_ntile_identical_in_both_modes(spark, reliable_dir):
     assert bn == rn
 
 
-def test_dedup_clusters_and_pagerank_identical_in_both_modes(spark, reliable_dir):
-    from dvmax_spark.ext.dedup import dedup_clusters, pagerank_centrality
+def test_pagerank_identical_in_both_modes(spark, reliable_dir):
+    from dvmax_spark.ext.dedup import pagerank_centrality
 
-    docs = spark.createDataFrame([(i,) for i in range(1, 12)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6), (5, 7), (5, 8), (9, 10)],
         "id_a long, id_b long",
     )
-    cl = _rows(dedup_clusters(docs, pairs, checkpoint_mode="local"))
-    cr = _rows(dedup_clusters(docs, pairs, checkpoint_mode="reliable"))
-    assert cl == cr
     pl = _rows(pagerank_centrality(pairs, checkpoint_mode="local"))
     pr = _rows(pagerank_centrality(pairs, checkpoint_mode="reliable"))
     assert pl == pr

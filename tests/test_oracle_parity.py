@@ -13,7 +13,7 @@ from tests.conftest import assert_query_matches_oracle
 # Queries rotated OUT of the evidence window after the default tier had
 # been checking them: a rotation moves evidence-window coverage, not
 # local coverage, so they keep their default-tier parity check.
-_ROTATED_OUT = {"x_bpe_pair_counts"}
+_ROTATED_OUT = {"x_bpe_pair_counts", "t_session_window", "x_audio_fp_dedup"}
 
 
 def _oracle_query_params():

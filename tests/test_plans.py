@@ -715,3 +715,32 @@ def test_feature_table_one_scan_and_shuffle_per_source_table(spark, tmp_path):
     shuffles = len(re.findall(r"(?<![A-Za-z])Exchange ", plan))
     assert scans <= 7, f"{scans} parquet scans:\n{plan}"
     assert shuffles <= 7, f"{shuffles} shuffle exchanges:\n{plan}"
+
+
+# ---------------------------------------------------------------- job counts
+
+
+def test_dedup_clusters_job_count(spark, tmp_path):
+    """Connected components on a near-dup-sized graph are a fixed
+    handful of Spark jobs (edge checkpoint, edge read-back, the write),
+    not jobs per propagation round: at this graph size the cost of the
+    component step is its job count, not its data."""
+    from pyspark.sql import functions as F
+
+    from dvmax_spark.ext.dedup import dedup_clusters
+
+    docs = spark.range(1, 30).select(F.col("id").alias("doc_id"))
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 10), (5, 6), (5, 7), (9, 9), (3, 2)],
+        "id_a long, id_b long",
+    )
+    sc = spark.sparkContext
+    group = "test_dedup_clusters_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup_clusters(docs, pairs).write.mode("overwrite").parquet(str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6

@@ -11,7 +11,15 @@ graph whose shapes stress each algorithm:
   * 20,000 five-cliques (200k edges) — triangle mass for the census.
   * ~360k pseudo-random edges over 500k ids — background blob.
 
-Usage: python tools/graph_scale.py      (prints a markdown table)
+With ``--crossover`` it instead times ``connected_components`` on the
+same mixture scaled to 10^3..10^6 edges, once on the driver path and
+once forced onto the two-phase core (``CC_DRIVER_MAX_EDGES = 0``): the
+table that sets ``ext.dedup.CC_DRIVER_MAX_EDGES``. Jobs are counted by
+job group; the wall covers the call plus a noop write of the labels.
+
+Usage: python tools/graph_scale.py              (prints a markdown table)
+       python tools/graph_scale.py --crossover  (local[2], 2 GB driver:
+                                                the benchmark's pins)
 """
 
 from __future__ import annotations
@@ -21,6 +29,86 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _graph(spark, scale: float = 1.0):
+    """The four-shape mixture above with every shape's edge count
+    multiplied by ``scale``, as distinct (id_a < id_b) pairs."""
+    from pyspark.sql import functions as F
+
+    def n(k: int) -> int:
+        return max(1, round(k * scale))
+
+    chain = spark.range(0, n(199_999)).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    stars = spark.range(0, n(250_000)).select(
+        (F.lit(1_000_000) + F.expr("id div 5000")).alias("id_a"),
+        (F.lit(2_000_000) + F.col("id")).alias("id_b"),
+    )
+    pa = F.array([F.lit(x) for x in (0, 0, 0, 0, 1, 1, 1, 2, 2, 3)])
+    pb = F.array([F.lit(x) for x in (1, 2, 3, 4, 2, 3, 4, 3, 4, 4)])
+    idx = (F.col("id") % 10 + 1).cast("int")
+    base5 = F.lit(3_000_000) + F.expr("id div 10") * 5
+    cliq = spark.range(0, n(200_000)).select(
+        (base5 + F.element_at(pa, idx)).alias("id_a"),
+        (base5 + F.element_at(pb, idx)).alias("id_b"),
+    )
+    rnd = spark.range(0, n(360_000)).select(
+        (
+            F.lit(4_000_000)
+            + F.pmod(F.hash(F.concat(F.lit("r"), F.col("id").cast("string"))), F.lit(n(500_000)))
+        ).alias("id_a"),
+        (
+            F.lit(4_000_000)
+            + F.pmod(F.hash(F.concat(F.lit("s"), F.col("id").cast("string"))), F.lit(n(500_000)))
+        ).alias("id_b"),
+    ).where(F.col("id_a") != F.col("id_b"))
+    raw = chain.unionAll(stars).unionAll(cliq).unionAll(rnd)
+    return raw.select(
+        F.least("id_a", "id_b").alias("mn"), F.greatest("id_a", "id_b").alias("mx")
+    ).distinct().select(F.col("mn").alias("id_a"), F.col("mx").alias("id_b"))
+
+
+def crossover() -> None:
+    """Driver path vs two-phase core of ``connected_components`` at
+    10^3..10^6 edges (median of 3 alternating runs, 1 run at 10^6)."""
+    import statistics
+
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "2")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    from pyspark.sql import functions as F
+
+    from dvmax_spark.ext import dedup
+    from dvmax_spark.session import get_spark
+
+    spark = get_spark("graph_scale_crossover")
+    sc = spark.sparkContext
+    limit = dedup.CC_DRIVER_MAX_EDGES
+    print("| edges | nodes | driver jobs | driver wall | two-phase jobs | two-phase wall |")
+    print("|---:|---:|---:|---:|---:|---:|")
+    for target in (1_000, 10_000, 100_000, 1_000_000):
+        pairs = _graph(spark, target / 1_000_000).cache()
+        n_edges = pairs.count()
+        n_nodes = pairs.select(F.explode(F.array("id_a", "id_b"))).distinct().count()
+        runs: dict[str, list[tuple[int, float]]] = {"driver": [], "two-phase": []}
+        for rep in range(3 if target < 1_000_000 else 1):
+            for path, cap in (("driver", 10 * n_edges), ("two-phase", 0)):
+                dedup.CC_DRIVER_MAX_EDGES = cap
+                group = f"crossover-{target}-{path}-{rep}"
+                sc.setJobGroup(group, group)
+                t0 = time.perf_counter()
+                dedup.connected_components(pairs).write.format("noop").mode("overwrite").save()
+                wall = time.perf_counter() - t0
+                runs[path].append((len(sc.statusTracker().getJobIdsForGroup(group)), wall))
+        dedup.CC_DRIVER_MAX_EDGES = limit
+        cells = []
+        for path in ("driver", "two-phase"):
+            cells.append(str(statistics.median(j for j, _ in runs[path])))
+            cells.append(f"{statistics.median(w for _, w in runs[path]):.2f} s")
+        print(f"| {n_edges:,} | {n_nodes:,} | " + " | ".join(cells) + " |", flush=True)
+        pairs.unpersist()
+    spark.stop()
 
 
 def main() -> None:
@@ -36,42 +124,7 @@ def main() -> None:
     from dvmax_spark.session import get_spark
 
     spark = get_spark("graph_scale", shuffle_partitions=64)
-
-    chain = spark.range(0, 199_999).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    stars = spark.range(0, 250_000).select(
-        (F.lit(1_000_000) + F.expr("id div 5000")).alias("id_a"),
-        (F.lit(2_000_000) + F.col("id")).alias("id_b"),
-    )
-    pa = F.array([F.lit(x) for x in (0, 0, 0, 0, 1, 1, 1, 2, 2, 3)])
-    pb = F.array([F.lit(x) for x in (1, 2, 3, 4, 2, 3, 4, 3, 4, 4)])
-    idx = (F.col("id") % 10 + 1).cast("int")
-    base5 = F.lit(3_000_000) + F.expr("id div 10") * 5
-    cliq = spark.range(0, 200_000).select(
-        (base5 + F.element_at(pa, idx)).alias("id_a"),
-        (base5 + F.element_at(pb, idx)).alias("id_b"),
-    )
-    rnd = spark.range(0, 360_000).select(
-        (
-            F.lit(4_000_000)
-            + F.pmod(F.hash(F.concat(F.lit("r"), F.col("id").cast("string"))), F.lit(500_000))
-        ).alias("id_a"),
-        (
-            F.lit(4_000_000)
-            + F.pmod(F.hash(F.concat(F.lit("s"), F.col("id").cast("string"))), F.lit(500_000))
-        ).alias("id_b"),
-    ).where(F.col("id_a") != F.col("id_b"))
-    raw = chain.unionAll(stars).unionAll(cliq).unionAll(rnd)
-    pairs = (
-        raw.select(
-            F.least("id_a", "id_b").alias("mn"), F.greatest("id_a", "id_b").alias("mx")
-        )
-        .distinct()
-        .select(F.col("mn").alias("id_a"), F.col("mx").alias("id_b"))
-        .repartition(64)
-        .cache()
-    )
+    pairs = _graph(spark).repartition(64).cache()
     n_edges = pairs.count()
     n_nodes = (
         pairs.select(F.col("id_a").alias("id"))
@@ -162,4 +215,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    crossover() if "--crossover" in sys.argv[1:] else main()

@@ -62,7 +62,7 @@ def main() -> None:
         labels, rounds = connected_components_twophase(pairs)
         t(f"cc_twophase labels ({rounds} rounds)", labels)
         t("dedup_clusters_twophase full", dedup_clusters_twophase(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
-        t("dedup_clusters (propagation) full", dedup_clusters(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
+        t("dedup_clusters (connected_components) full", dedup_clusters(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
 
     if "incr" in sections:
         from dvmax_spark.ext.dedup import (
