@@ -628,7 +628,8 @@ def connected_components_twophase(
     endpoint of ``pairs``; rounds is the number of LS+SS rounds run
     (always even — rounds run in PAIRS per convergence action; the
     fixpoint is detected structurally on the pair's output, see the
-    loop comment).
+    loop comment). Raises ``RuntimeError`` when ``max_rounds`` runs
+    out before the fixpoint: unconverged labels split components.
     """
     E = (
         pairs.select(
@@ -734,6 +735,11 @@ def connected_components_twophase(
         E = ss
         if viol == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_twophase: no star-forest fixpoint after "
+            f"{rounds} rounds (max_rounds={max_rounds})"
+        )
     leaves = E.select(F.col("mx").alias("id"), F.col("mn").alias("label"))
     roots = nodes.join(leaves, "id", "left_anti").select(
         "id", F.col("id").alias("label")
@@ -1016,9 +1022,9 @@ class MinHashIndex:
     signatures corpus-wide.
 
     The store is one zstd parquet table (band, band_key, doc_id,
-    signature) partitioned by band: work per batch is O(batch) for
-    signatures + one shuffle join on (band, band_key) against the
-    index; the corpus is touched only through the band table, which
+    signature) partitioned by ingest batch and band: work per batch is
+    O(batch) for signatures + one shuffle join on (band, band_key)
+    against the index; the corpus is touched only through the band table, which
     the scan prunes by band. ``max_bucket`` caps degenerate band keys
     by COMBINED (index + batch) membership — the same bound the batch
     path's union-wide cap gives, which a per-side cap would not. Matching new-vs-old
@@ -1058,49 +1064,49 @@ class MinHashIndex:
         )
 
     def build(self, docs: DataFrame, batch_key: int | str | None = None) -> None:
-        banded = self._banded(docs)
+        """Write ``docs`` as the whole index (key ``__base__``), or as
+        batch ``batch_key``'s partitions (see :meth:`append`)."""
         if batch_key is None:
-            (
-                banded.write.mode("overwrite")
-                .partitionBy("band")
-                .option("compression", "zstd")
-                .parquet(self.path)
-            )
+            self._write(self._banded(docs), "__base__", "static")
         else:
-            self._write_batch(banded, batch_key)
+            self.append(docs, batch_key)
 
-    def append(self, docs: DataFrame, batch_key: int | str | None = None) -> None:
+    def append(
+        self,
+        docs: DataFrame,
+        batch_key: int | str | None = None,
+        staged_banded: DataFrame | None = None,
+    ) -> None:
         """Admit a new batch into the index (after matching it).
 
-        ``batch_key`` (streaming ingest) switches the layout to
-        ``ingest_batch=<key>/band=<b>`` and makes the write an
-        IDEMPOTENT dynamic partition overwrite: replaying the same
-        batch rewrites its own partitions instead of appending a
-        second copy — the property the streaming sink's crash-replay
-        contract needs. A given index must be written consistently
-        (always with batch keys, or never): parquet partition
-        discovery requires one directory depth."""
+        Every write lands in the one layout ``ingest_batch=<key>/band=<b>``.
+        Without ``batch_key`` the rows append under ``__base__`` (the key
+        :meth:`compact_batches` folds into). With one (streaming ingest)
+        the write is an IDEMPOTENT dynamic partition overwrite: replaying
+        the same batch rewrites its own partitions instead of appending
+        a second copy — the streaming sink's crash-replay contract.
+        ``staged_banded`` is ``docs``' table from :meth:`stage_batch`, as
+        in :meth:`match_new`: its rows are written instead of recomputing
+        the signatures."""
+        banded = self._banded(docs) if staged_banded is None else staged_banded
         if batch_key is None:
-            (
-                self._banded(docs)
-                .write.mode("append")
-                .partitionBy("band")
-                .option("compression", "zstd")
-                .parquet(self.path)
-            )
+            self._write(banded, "__base__", None)
         else:
-            self._write_batch(self._banded(docs), batch_key)
+            self._write(banded, batch_key, "dynamic")
 
-    def _write_batch(self, banded: DataFrame, batch_key: int | str) -> None:
-        (
-            banded.withColumn("ingest_batch", F.lit(str(batch_key)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch", "band")
-            .option("compression", "zstd")
-            .parquet(self.path)
+    def _write(
+        self, banded: DataFrame, batch_key: int | str, overwrite: str | None
+    ) -> None:
+        """Append under ``ingest_batch=<batch_key>`` or, with an
+        ``overwrite`` partition mode, overwrite."""
+        w = banded.withColumn("ingest_batch", F.lit(str(batch_key))).write
+        if overwrite is None:
+            w = w.mode("append")
+        else:
+            w = w.mode("overwrite").option("partitionOverwriteMode", overwrite)
+        w.partitionBy("ingest_batch", "band").option("compression", "zstd").parquet(
+            self.path
         )
-
 
     def compact(self, files_per_band: int = 1) -> None:
         """Small-file maintenance for the band table: incremental
@@ -1122,18 +1128,14 @@ class MinHashIndex:
         df = self.spark.read.parquet(self.path).repartition(
             self.bands * files_per_band, F.col("band"), salt
         )
-        # batch-keyed (streaming) indexes keep their two-level layout;
-        # do NOT compact such an index between a crash and its stream's
-        # restart — a replayed batch would re-add rows already folded
-        # into the compacted partitions
-        part_cols = (
-            ["ingest_batch", "band"] if "ingest_batch" in df.columns else ["band"]
-        )
+        # batches keep their own partitions; do NOT compact between a
+        # crash and its stream's restart — a replayed batch would re-add
+        # rows already folded into the compacted partitions
         staging = self.path + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
         (
             df.write.mode("overwrite")
-            .partitionBy(*part_cols)
+            .partitionBy("ingest_batch", "band")
             .option("compression", "zstd")
             .parquet(staging)
         )
@@ -1158,9 +1160,6 @@ class MinHashIndex:
 
         recover_swap(self.path)  # heal a crashed promote before reading
         df = self.spark.read.parquet(self.path)
-        if "ingest_batch" not in df.columns:
-            self.compact(files_per_band)
-            return
         # partition-value inference types all-numeric batch keys as int
         df = df.withColumn("ingest_batch", F.col("ingest_batch").cast("string"))
         keys = [r[0] for r in df.select("ingest_batch").distinct().collect()]
@@ -1215,16 +1214,14 @@ class MinHashIndex:
             shutil.rmtree(retired)
 
     def stage_batch(self, new_docs: DataFrame) -> DataFrame:
-        """The incoming batch's banded signature table, lineage-cut for
-        reuse — the exact DataFrame :meth:`match_new` derives
-        internally. Staging it explicitly lets a caller MATERIALIZE the
-        batch's signature pass (a noop write) concurrently with an
-        independent job — in x_incremental_dedup, the historical
-        index's build write — since the two share no inputs (guide
-        §2.6: independent actions from driver threads back-fill each
-        other's task tails). Pass the result to ``match_new(...,
-        staged_banded=...)``; contents are identical either way (a
-        parity test pins it)."""
+        """The incoming batch's banded signature table (one row per doc
+        per band), lineage-cut so its signature pass runs once — the
+        exact DataFrame :meth:`match_new` derives internally. Hand it
+        to ``match_new(..., staged_banded=...)`` and ``append(...,
+        staged_banded=...)``; the streaming sinks also take the batch's
+        signatures from its band-0 rows for their within-batch pairs.
+        Results are identical to the unstaged calls (a parity test pins
+        it)."""
         return self._banded(new_docs).localCheckpoint(eager=False)
 
     def match_new(
@@ -1245,7 +1242,7 @@ class MinHashIndex:
         attempt already appended its survivors must not match AGAINST
         those survivors on replay, or dup_of attribution could drift
         from the crash-free run (the batch-peer relation is recomputed
-        exactly by the intra phase instead). Id-based, not
+        exactly by the within-batch greedy pass instead). Id-based, not
         partition-key-based, deliberately: micro-batch counters restart
         with a fresh checkpoint, so excluding ``ingest_batch=<id>``
         could hide a PRIOR run's same-numbered live partition; doc ids
@@ -1261,8 +1258,8 @@ class MinHashIndex:
         # join; materialize it once (r10, guide §3.3/§5 — previously
         # re-derived per consumer: 28 parquet scans in
         # x_incremental_dedup's plan). A caller that staged the batch
-        # via :meth:`stage_batch` (to overlap its materialization with
-        # the index build) hands the same checkpointed table back in.
+        # via :meth:`stage_batch` (to share it with other consumers)
+        # hands the same checkpointed table back in.
         new_banded = (
             staged_banded
             if staged_banded is not None

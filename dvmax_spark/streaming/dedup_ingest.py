@@ -7,11 +7,10 @@ ALREADY-ADMITTED doc (index member or smaller surviving batch peer).
 This is deliberately NOT connected-components dedup (that is the batch
 operator ``dedup_clusters``): greedy online semantics admit both
 endpoints of a chain a~b, b~c when the middle was displaced — b's
-near-dups are judged against SURVIVORS only. The within-batch survivor
-set is the exact sequential-greedy result (lexicographic MIS over the
-candidate-pair graph), computed by earliest-witness fixpoint iteration
-— depth-k chain nodes are correct after k rounds, so ``max_iter``
-bounds the chain length it resolves. Because the
+near-dups are judged against SURVIVORS only. The within-batch verdict
+is the exact sequential-greedy result (lexicographic MIS over the
+candidate-pair graph) at any chain depth, from one driver-side pass
+over the batch's sorted pairs (:func:`_greedy_verdict`). Because the
 semantics equal sequential processing in id order, the outcome is
 INDEPENDENT of how the stream is sliced into micro-batches (pinned by
 test).
@@ -36,8 +35,11 @@ exclusion is id-based rather than batch-key-based because micro-batch
 counters restart with a fresh checkpoint: a prior run's live
 ``ingest_batch=0`` partition must stay matchable.)
 
-Scale notes (100 TB): per-batch work is O(batch) signatures + one
-band-key join against the index + the ledger anti-join. The ledger is
+Scale notes (100 TB): per-batch work is ONE signature pass
+(:meth:`MinHashIndex.stage_batch`, shared by the index match, the
+within-batch pairs and the index append) + one band-key join against
+the index + the ledger anti-join; the driver holds one partition of
+pairs plus a verdict dict of at most the batch's docs. The ledger is
 an id-only parquet table; at mega-scale swap the per-batch distinct
 scan for a bloom filter rebuilt per epoch. Docs shorter than the
 shingle width can't minhash-match: they are admitted directly and
@@ -49,30 +51,38 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dvmax_spark.ext.dedup import MinHashIndex, minhash_lsh_pairs
+from dvmax_spark.ext.dedup import MinHashIndex, lsh_pairs_from_signatures
 
 
-def _greedy_survivors(ids: DataFrame, edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Lexicographic MIS over ``edges`` (id_a < id_b) restricted to
-    ``ids`` — the exact survivor set of sequential greedy processing in
-    id order. Earliest-witness fixpoint: S <- ids \\ {d : edge (s, d),
-    s in S}; nodes at greedy depth k are stable after k rounds."""
-    surv = ids
-    for _ in range(max_iter):
-        displaced = (
-            edges.join(surv.withColumnRenamed("id", "id_a"), "id_a")
-            .select(F.col("id_b").alias("id"))
-            .distinct()
-        )
-        nxt = ids.join(displaced, "id", "left_anti").localCheckpoint(eager=True)
-        if nxt.count() == surv.count():
-            surv = nxt
-            break
-        surv = nxt
-    return surv
+def _signatures(staged: DataFrame, id_col: str) -> DataFrame:
+    """A :meth:`MinHashIndex.stage_batch` table's ``(id_col, signature)``
+    rows: every doc has exactly one band-0 row."""
+    return staged.where(F.col("band") == 0).select(id_col, "signature")
+
+
+def _greedy_verdict(pairs: DataFrame, verdict: dict) -> dict:
+    """Sequential greedy over candidate ``pairs`` (id_a < id_b), adding
+    to ``verdict`` (displaced doc -> ``dup_of``, seeded with the
+    cross-displaced docs). Pairs stream in ``(id_b, id_a)`` order, so
+    every doc below ``id_b`` is final when ``id_b`` comes up, and its
+    first peer that survived displaces it: exact at any chain depth,
+    with one partition of pairs on the driver at a time."""
+    ordered = pairs.select("id_a", "id_b").orderBy("id_b", "id_a")
+    for a, b in ordered.toLocalIterator():
+        if b not in verdict and a not in verdict:
+            verdict[b] = a
+    return verdict
+
+
+def _verdict_table(spark, verdict: dict, schema: str) -> DataFrame:
+    """``verdict`` as a ``(doc id, dup_of)`` table, built from pandas so
+    that a non-empty one is a local relation that joins broadcast."""
+    pdf = pd.DataFrame({"id": list(verdict), "dup_of": list(verdict.values())})
+    return spark.createDataFrame(pdf, schema)
 
 
 def stream_dedup_ingest(
@@ -88,11 +98,13 @@ def stream_dedup_ingest(
     """Attach a document stream to ``index`` and start the query.
 
     Per micro-batch: exact-id dedup within the batch → ledger replay
-    guard → cross-displacement vs the index (admitted corpus always
-    wins) → within-batch sequential-greedy survivors → novel docs
-    append to ``out_dir`` AND (if matchable) the index; displaced docs
-    append to ``dup_dir`` with the smallest admitted doc they
-    duplicate. Returns the StreamingQuery (caller awaits termination).
+    guard → one signature pass (``stage_batch``) → cross-displacement
+    vs the index (admitted corpus always wins) → within-batch
+    sequential greedy on the driver → one ``(doc_id, dup_of)`` verdict
+    table; novel docs append to ``out_dir`` AND (if matchable) the
+    index; displaced docs append to ``dup_dir`` with the smallest
+    admitted doc they duplicate. Returns the StreamingQuery (caller
+    awaits termination).
     """
     idc = index.id_col
     ledger = index.path + "_seen"
@@ -106,8 +118,6 @@ def stream_dedup_ingest(
         from dvmax_spark.fsops import recover_swap
 
         recover_swap(index.path)
-        if batch_df.isEmpty():
-            return
         batch = batch_df.dropDuplicates([idc])
         if os.path.isdir(ledger):
             seen = index.spark.read.parquet(ledger).select(idc).distinct()
@@ -120,46 +130,29 @@ def stream_dedup_ingest(
         matchable = fresh.where(
             F.size(F.split(F.col(index.text_col), " ")) >= index.shingle_n
         )
+        staged = index.stage_batch(matchable)
         # cross-displacement: the admitted corpus always outranks the batch
         if os.path.isdir(index.path):
-            cross = (
-                index.match_new(
-                    matchable, threshold=threshold, exclude_self=True
-                )
-                .groupBy(F.col("new_id").alias(idc))
-                .agg(F.min("old_id").alias("dup_of"))
-                .localCheckpoint()
+            cross = index.match_new(
+                matchable, threshold=threshold, exclude_self=True, staged_banded=staged
             )
+            verdict = dict(cross.groupBy("new_id").agg(F.min("old_id")).collect())
         else:
-            cross = (
-                fresh.select(idc).limit(0).withColumn("dup_of", F.col(idc))
-            )
-        # within-batch: sequential-greedy survivors over candidate pairs,
-        # excluding cross-displaced docs (they are not admitted, so they
-        # cannot displace their batch peers)
-        contenders = matchable.join(cross, idc, "left_anti")
-        pairs = minhash_lsh_pairs(
-            contenders,
-            id_col=idc,
-            text_col=index.text_col,
-            num_hashes=index.num_hashes,
-            bands=index.bands,
-            shingle_n=index.shingle_n,
-            threshold=threshold,
-        ).localCheckpoint()
-        surv = _greedy_survivors(
-            contenders.select(F.col(idc).alias("id")), pairs
+            verdict = {}
+        # within-batch: sequential greedy over the contenders' pairs
+        # (cross-displaced docs are not admitted, so they cannot
+        # displace their batch peers)
+        idt = fresh.schema[idc].dataType.simpleString()
+        schema = f"{idc} {idt}, dup_of {idt}"
+        contenders = _signatures(staged, idc).join(
+            _verdict_table(index.spark, verdict, schema), idc, "left_anti"
         )
-        intra = (
-            pairs.join(surv.withColumnRenamed("id", "id_a"), "id_a")
-            .groupBy(F.col("id_b").alias(idc))
-            .agg(F.min("id_a").alias("dup_of"))
+        pairs = lsh_pairs_from_signatures(
+            contenders, index.num_hashes, index.bands, threshold, id_col=idc
         )
-        displaced = cross.unionByName(intra).groupBy(idc).agg(
-            F.min("dup_of").alias("dup_of")
-        )
-        dups = fresh.join(displaced, idc, "inner")
-        novel = fresh.join(displaced, idc, "left_anti")
+        verdict = _verdict_table(index.spark, _greedy_verdict(pairs, verdict), schema)
+        dups = fresh.join(verdict, idc, "inner")
+        novel = fresh.join(verdict, idc, "left_anti")
 
         def _batch_write(df: DataFrame, path: str) -> None:
             (
@@ -173,10 +166,11 @@ def stream_dedup_ingest(
 
         _batch_write(dups, dup_dir)
         _batch_write(novel, out_dir)
-        admit = novel.join(
-            matchable.select(idc), idc, "left_semi"
-        )  # shorts stay out of the band table
-        index.append(admit, batch_key=batch_id)
+        index.append(  # shorts stay out of the band table
+            matchable.join(verdict, idc, "left_anti"),
+            batch_key=batch_id,
+            staged_banded=staged.join(verdict, idc, "left_anti"),
+        )
         _batch_write(fresh.select(idc), ledger)
 
     writer = stream_docs.writeStream.foreachBatch(_sink).queryName(query_name)
@@ -201,13 +195,15 @@ def stream_into_components(
     documents arrive — the exact-semantics sibling of
     :func:`stream_dedup_ingest`'s greedy-online dedup. Per micro-batch:
 
-      1. cross edges vs the admitted corpus via the banded index
+      1. the batch's signatures are computed once
+         (:meth:`MinHashIndex.stage_batch`) and feed steps 2, 3 and 5,
+      2. cross edges vs the admitted corpus via the banded index
          (``match_new`` — corpus signatures never recompute),
-      2. within-batch edges via ``minhash_lsh_pairs``,
-      3. the persisted labels merge both through
+      3. within-batch edges via ``lsh_pairs_from_signatures``,
+      4. the persisted labels merge both through
          :func:`~dvmax_spark.ext.dedup.incremental_components` — only
          components the batch touches recompute (star compression),
-      4. the batch's signatures append to the index (batch-keyed).
+      5. the batch's signatures append to the index (batch-keyed).
 
     The maintained labels equal clustering the ENTIRE corpus-so-far
     from scratch at ANY batch slicing: every pair (a, b) of the
@@ -236,8 +232,6 @@ def stream_into_components(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         recover_swap(index.path)
         recover_swap(labels_path)
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates([idc])
         matchable = batch.where(
@@ -245,21 +239,17 @@ def stream_into_components(
         ).localCheckpoint()
         if matchable.isEmpty():
             return
+        staged = index.stage_batch(matchable)
         if os.path.isdir(index.path):
             cross = index.match_new(
-                matchable, threshold=threshold, max_bucket=None, exclude_self=True
+                matchable, threshold, max_bucket=None, exclude_self=True,
+                staged_banded=staged,
             ).select(F.col("new_id").alias("id_a"), F.col("old_id").alias("id_b"))
         else:
             cross = None
-        within = minhash_lsh_pairs(
-            matchable,
-            id_col=idc,
-            text_col=index.text_col,
-            num_hashes=index.num_hashes,
-            bands=index.bands,
-            shingle_n=index.shingle_n,
-            threshold=threshold,
-            max_bucket=None,
+        within = lsh_pairs_from_signatures(
+            _signatures(staged, idc), index.num_hashes, index.bands, threshold,
+            max_bucket=None, id_col=idc,
         ).select("id_a", "id_b")
         edges = within if cross is None else within.unionAll(cross)
         edges = edges.localCheckpoint()
@@ -278,7 +268,7 @@ def stream_into_components(
             retired = swap_dir(labels_path, staging)
             if retired:
                 shutil.rmtree(retired, ignore_errors=True)
-        index.append(matchable, batch_key=f"s{batch_id}")
+        index.append(matchable, batch_key=f"s{batch_id}", staged_banded=staged)
 
     writer = stream_docs.writeStream.foreachBatch(_sink).queryName(query_name)
     if checkpoint_dir:

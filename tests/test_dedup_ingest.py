@@ -161,15 +161,35 @@ def test_chain_in_single_batch_matches_sequential_greedy(spark, tmp_path):
     assert not (set(dup_of.values()) & displaced_ids)
 
 
-def test_greedy_survivors_fixpoint_on_synthetic_graphs(spark):
-    """Deterministic unit check of the lexicographic-MIS fixpoint (no
-    LSH banding luck involved): chains, stars, and a 4-chain."""
-    from dvmax_spark.streaming.dedup_ingest import _greedy_survivors
+def _sequential_greedy(ids, edges, verdict=None):
+    """Reference: process ``ids`` in order; a doc already in
+    ``verdict`` is displaced, any other is displaced by its smallest
+    lower-id neighbour that survived."""
+    lower = {}
+    for a, b in edges:
+        lower.setdefault(max(a, b), set()).add(min(a, b))
+    verdict = dict(verdict or {})
+    for d in sorted(ids):
+        if d not in verdict:
+            witnesses = [a for a in lower.get(d, ()) if a not in verdict]
+            if witnesses:
+                verdict[d] = min(witnesses)
+    return verdict
+
+
+def _greedy(spark, edges, verdict=None):
+    from dvmax_spark.streaming.dedup_ingest import _greedy_verdict
+
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
+    return _greedy_verdict(edf, dict(verdict or {}))
+
+
+def test_greedy_verdict_on_synthetic_graphs(spark):
+    """Deterministic unit check of the driver-side greedy pass (no LSH
+    banding luck involved): chains, stars, and a 4-chain."""
 
     def run(ids, edges):
-        idf = spark.createDataFrame([(i,) for i in ids], "id long")
-        edf = spark.createDataFrame(edges, "id_a long, id_b long")
-        return {r.id for r in _greedy_survivors(idf, edf).collect()}
+        return set(ids) - set(_greedy(spark, edges))
 
     # chain 1-2-3: greedy admits {1, 3}
     assert run([1, 2, 3], [(1, 2), (2, 3)]) == {1, 3}
@@ -181,6 +201,177 @@ def test_greedy_survivors_fixpoint_on_synthetic_graphs(spark):
     assert run([1, 2, 5, 6, 9], [(1, 2), (5, 6)]) == {1, 5, 9}
     # triangle: {1} (2 and 3 both see survivor 1)
     assert run([1, 2, 3], [(1, 2), (1, 3), (2, 3)]) == {1}
+
+
+def test_greedy_verdict_exact_on_a_60_chain(spark):
+    """A 60-node chain in one batch: sequential greedy admits every odd
+    node (30 survivors), each even node displaced by its predecessor.
+    A depth-bounded fixpoint stops short of this chain's depth."""
+    edges = [(i, i + 1) for i in range(1, 60)]
+    got = _greedy(spark, edges)
+    assert got == {i: i - 1 for i in range(2, 61, 2)}
+    assert len(set(range(1, 61)) - set(got)) == 30
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2, 3])
+def test_greedy_verdict_matches_sequential_reference(spark, seed):
+    """Seeded random graphs, with and without cross-displaced docs
+    seeding the verdict, against the plain sequential reference."""
+    import random
+
+    rng = random.Random(seed)
+    n = 120
+    edges = sorted({tuple(sorted(rng.sample(range(n), 2))) for _ in range(3 * n)})
+    cross = {d: -1 for d in rng.sample(range(n), 10)}
+    # the sink hands over pairs among non-cross docs only
+    contender_edges = [(a, b) for a, b in edges if a not in cross and b not in cross]
+    for seed_verdict, es in (({}, edges), (cross, contender_edges)):
+        want = _sequential_greedy(range(n), es, seed_verdict)
+        assert _greedy(spark, es, seed_verdict) == want
+
+
+def _mk_drift_corpus(n=90, seed=7):
+    """Seeded docs where many are 1-2 word edits of an earlier doc (of
+    the previous doc, often), so near-dup chains cross the index/batch
+    and batch/batch boundaries."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(seed)
+    texts = []
+    for i in range(n):
+        if i and rng.random() < 0.6:
+            src = texts[i - 1] if rng.random() < 0.5 else rng.choice(texts)
+            words = src.split()
+            for _ in range(rng.choice((1, 2))):
+                words[rng.randrange(len(words))] = f"w{rng.randrange(400)}"
+        else:
+            words = [f"w{rng.randrange(400)}" for _ in range(12)]
+        texts.append(" ".join(words))
+    return pd.DataFrame({"doc_id": range(n), "text": texts})
+
+
+def _count_signature_passes(monkeypatch):
+    import dvmax_spark.ext.dedup as dd
+
+    calls = []
+    real = dd.minhash_signature
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dd, "minhash_signature", spy)
+    return calls
+
+
+def _drain(spark, start, root):
+    """Run ``start(stream, checkpoint_dir)`` over ``root/in`` with 8
+    shuffle partitions, wait for it and return the query."""
+    stream = (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(root, "in"))
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = start(stream, os.path.join(root, "ckpt"))
+        q.awaitTermination(180)
+    finally:
+        if prev is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert q.exception() is None
+    return q
+
+
+KW = dict(num_hashes=32, bands=16, shingle_n=2)
+
+
+def test_ingest_two_batches_against_built_index(spark, tmp_path, monkeypatch):
+    """An index written by ``build()`` takes any number of micro-batches
+    (one partition layout for keyed and unkeyed writes). Each batch
+    computes its signatures once, and the sinks equal sequential greedy
+    over the full-corpus LSH pairs with the built docs pre-admitted."""
+    from dvmax_spark.ext.dedup import MinHashIndex, minhash_lsh_pairs
+    from dvmax_spark.streaming.dedup_ingest import stream_dedup_ingest
+
+    pdf = _mk_drift_corpus()
+    n_index, root = 40, str(tmp_path)
+    _stage_slices(pdf[pdf.doc_id >= n_index], os.path.join(root, "in"), 2)
+    idx = MinHashIndex(spark, os.path.join(root, "idx"), **KW)
+    idx.build(spark.createDataFrame(pdf[pdf.doc_id < n_index], DOC_SCHEMA))
+    calls = _count_signature_passes(monkeypatch)
+    _drain(
+        spark,
+        lambda stream, ckpt: stream_dedup_ingest(
+            stream,
+            idx,
+            out_dir=os.path.join(root, "novel"),
+            dup_dir=os.path.join(root, "dups"),
+            threshold=0.3,
+            checkpoint_dir=ckpt,
+        ),
+        root,
+    )
+    assert len(calls) == 2  # one signature pass per micro-batch
+    monkeypatch.undo()
+
+    pairs = minhash_lsh_pairs(
+        spark.createDataFrame(pdf, DOC_SCHEMA), threshold=0.3, **KW
+    ).collect()
+    want = _sequential_greedy(
+        range(n_index, len(pdf)), [(r.id_a, r.id_b) for r in pairs]
+    )
+    got = {
+        (r.doc_id, r.dup_of)
+        for r in spark.read.parquet(os.path.join(root, "dups")).collect()
+    }
+    novel = {r.doc_id for r in spark.read.parquet(os.path.join(root, "novel")).collect()}
+    assert got == set(want.items())
+    assert novel == set(range(n_index, len(pdf))) - set(want)
+    assert min(want.values()) < n_index <= max(want.values())  # cross and within
+    assert sorted(d for d in os.listdir(idx.path) if d.startswith("ingest_batch=")) == [
+        "ingest_batch=0", "ingest_batch=1", "ingest_batch=__base__"
+    ]
+    assert spark.read.parquet(idx.path).count() == KW["bands"] * (n_index + len(novel))
+
+
+def test_stream_into_components_one_signature_pass_per_batch(
+    spark, tmp_path, monkeypatch
+):
+    """The exact-clustering sink shares one signature pass per batch
+    between the index match, the within-batch pairs and the append;
+    its labels equal the components of the full-corpus pairs."""
+    from dvmax_spark.ext.dedup import (
+        MinHashIndex,
+        connected_components,
+        minhash_lsh_pairs,
+    )
+    from dvmax_spark.streaming.dedup_ingest import stream_into_components
+
+    pdf, root = _mk_drift_corpus(60, seed=11), str(tmp_path)
+    _stage_slices(pdf, os.path.join(root, "in"), 2)
+    idx = MinHashIndex(spark, os.path.join(root, "idx"), **KW)
+    labels = os.path.join(root, "labels")
+    calls = _count_signature_passes(monkeypatch)
+    _drain(
+        spark,
+        lambda stream, ckpt: stream_into_components(
+            stream, idx, labels, threshold=0.3, checkpoint_dir=ckpt
+        ),
+        root,
+    )
+    assert len(calls) == 2
+    monkeypatch.undo()
+
+    pairs = minhash_lsh_pairs(
+        spark.createDataFrame(pdf, DOC_SCHEMA), threshold=0.3, max_bucket=None, **KW
+    )
+    want = {(r.id, r.label) for r in connected_components(pairs).collect()}
+    assert {(r.id, r.label) for r in spark.read.parquet(labels).collect()} == want
+    assert len(want) > len({label for _, label in want})  # some merged
 
 
 @pytest.mark.slow  # long-tail tier (tests/conftest.py)

@@ -765,10 +765,10 @@ def test_incremental_index_equals_batch_pairs(spark, tmp_path):
 
 
 def test_match_new_staged_equals_unstaged(spark, tmp_path):
-    """stage_batch + match_new(staged_banded=...) — the overlapped
-    form x_incremental_dedup uses to run the index build and the
-    batch's signature pass as concurrent jobs (r10) — must return
-    exactly the pairs of the plain sequential call."""
+    """stage_batch + match_new(staged_banded=...) — the form the
+    streaming sinks use to share one signature pass per micro-batch —
+    must return exactly the pairs of the plain call, even when the
+    staged table was materialized before the index existed."""
     from dvmax_spark.catalog import load_table
     from dvmax_spark.ext.dedup import MinHashIndex
     from pyspark.sql import functions as F
@@ -780,8 +780,7 @@ def test_match_new_staged_equals_unstaged(spark, tmp_path):
     new = docs.where(F.col("doc_id") % 3 == 0)
     idx = MinHashIndex(spark, str(tmp_path / "idx_staged"), num_hashes=32, bands=16, shingle_n=2)
     staged = idx.stage_batch(new)
-    # materialize the staged batch BEFORE the index exists, as the
-    # overlapped query does (the two jobs share no inputs)
+    # materialize the staged batch BEFORE the index exists
     staged.write.format("noop").mode("overwrite").save()
     idx.build(old)
     plain = {
@@ -815,7 +814,7 @@ def test_minhash_index_compact_preserves_matches(spark, tmp_path):
     probe = docs.where(F.col("doc_id") % 4 == 3)
     before = {(r.new_id, r.old_id) for r in idx.match_new(probe, 0.1).collect()}
     idx.compact(files_per_band=1)
-    band0 = os.path.join(idx.path, "band=0")
+    band0 = os.path.join(idx.path, "ingest_batch=__base__", "band=0")
     files = [f for f in os.listdir(band0) if f.endswith(".parquet")]
     assert len(files) == 1, files
     after = {(r.new_id, r.old_id) for r in idx.match_new(probe, 0.1).collect()}

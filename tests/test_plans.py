@@ -744,3 +744,45 @@ def test_dedup_clusters_job_count(spark, tmp_path):
     # the status tracker is fed by the asynchronous listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+def test_dedup_ingest_job_count(spark, tmp_path):
+    """One streamed micro-batch against a small index costs a fixed
+    handful of Spark jobs: one signature pass shared by the index
+    match, the within-batch pairs and the append, one greedy pass over
+    the sorted pairs on the driver, and the four sink writes — not
+    jobs per greedy round. Counted by the query's run id, the job group
+    Structured Streaming runs a micro-batch under."""
+    import os
+
+    from dvmax_spark.ext.dedup import MinHashIndex
+    from dvmax_spark.streaming.dedup_ingest import stream_dedup_ingest
+    from tests.test_dedup_ingest import (
+        DOC_SCHEMA,
+        KW,
+        _drain,
+        _mk_drift_corpus,
+        _stage_slices,
+    )
+
+    pdf, root = _mk_drift_corpus(60), str(tmp_path)
+    _stage_slices(pdf[pdf.doc_id >= 40], os.path.join(root, "in"), 1)
+    idx = MinHashIndex(spark, os.path.join(root, "idx"), **KW)
+    idx.build(spark.createDataFrame(pdf[pdf.doc_id < 40], DOC_SCHEMA))
+    q = _drain(
+        spark,
+        lambda stream, ckpt: stream_dedup_ingest(
+            stream,
+            idx,
+            out_dir=os.path.join(root, "novel"),
+            dup_dir=os.path.join(root, "dups"),
+            threshold=0.3,
+            checkpoint_dir=ckpt,
+        ),
+        root,
+    )
+    assert spark.read.parquet(os.path.join(root, "dups")).count() > 0
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert jobs <= 28, jobs
