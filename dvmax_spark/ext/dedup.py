@@ -235,7 +235,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_bucket: int | None = 1000,
-    rejoin_signatures: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH over MinHash signatures.
 
@@ -245,19 +244,6 @@ def minhash_lsh_pairs(
     (band, band_hash) — never materializes the n² pair space, and
     ``max_bucket`` caps the within-bucket quadratic blowup on
     degenerate band keys (see :func:`cap_buckets`).
-
-    ``rejoin_signatures`` picks the candidate-stage physical shape
-    (identical results either way — asserted by a parity test):
-      * False (default): band rows carry the signature inline; one
-        self-join produces scored pairs directly. Fewest stages —
-        fastest until the band shuffle (~bands x 8B x num_hashes per
-        doc) dominates.
-      * True: band rows carry ONLY ids; signatures re-attach by join
-        after candidate dedup, and the signature table is checkpointed
-        so the aggregation runs once. Cuts the band-shuffle payload
-        ~``bands``x at the cost of two extra id-joins — the right
-        trade once docs x num_hashes x bands outgrows cluster shuffle
-        capacity (mega-corpus dedup).
     """
     sig = minhash_signature(df, text_col, num_hashes, shingle_n, id_col=id_col)
     return lsh_pairs_from_signatures(
@@ -266,7 +252,6 @@ def minhash_lsh_pairs(
         bands=bands,
         threshold=threshold,
         max_bucket=max_bucket,
-        rejoin_signatures=rejoin_signatures,
         id_col=id_col,
     )
 
@@ -277,75 +262,52 @@ def lsh_pairs_from_signatures(
     bands: int,
     threshold: float = 0.5,
     max_bucket: int | None = 1000,
-    rejoin_signatures: bool = False,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Banding + candidate generation + position-match scoring over an
     ``(id_col, signature array<bigint>)`` table — the signature-agnostic
     back half of :func:`minhash_lsh_pairs`, shared with the
     one-permutation (:func:`minhash_signature_oph`) variant so both
-    signature schemes feed the identical physical pair pipeline."""
-    # The signature aggregation (shingle explode + num_hashes mins) is
-    # the expensive subtree and it feeds 3+ consumers either way (cap
-    # census + both self-join sides, or banding + two re-joins), so it
-    # is materialized once in BOTH shapes (r10, guide §3.3/§5 — the
-    # default path previously re-derived it per consumer: 8 parquet
-    # scans in x_minhash_lsh's plan).
-    sig = sig.localCheckpoint(eager=False)
-    band_structs = band_structs_expr(num_hashes, bands)
+    signature schemes feed the identical physical pair pipeline.
 
-    if rejoin_signatures:
-        banded = sig.select(F.col(id_col), band_structs).select(
-            id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    Band rows carry the signature inline, so one self-join produces
+    scored pairs directly (fewest stages; the band shuffle moves
+    ~bands x 8B x num_hashes per doc)."""
+    # The signature aggregation (shingle explode + num_hashes mins) is
+    # the expensive subtree and it feeds the cap census and both
+    # self-join sides, so it is materialized once (r10, guide §3.3/§5 —
+    # re-derived per consumer it cost 8 parquet scans in
+    # x_minhash_lsh's plan).
+    sig = sig.localCheckpoint(eager=False)
+    banded = sig.select(
+        F.col(id_col), F.col("signature"), band_structs_expr(num_hashes, bands)
+    ).select(
+        id_col,
+        "signature",
+        F.col("bk.band").alias("band"),
+        F.col("bk.band_key").alias("band_key"),
+    )
+    banded = cap_buckets(banded, ["band", "band_key"], max_bucket)
+    pairs = (
+        banded.select(
+            F.col("band"),
+            F.col("band_key"),
+            F.col(id_col).alias("id_a"),
+            F.col("signature").alias("sig_a"),
         )
-        banded = cap_buckets(banded, ["band", "band_key"], max_bucket)
-        cand = (
-            banded.select(F.col("band"), F.col("band_key"), F.col(id_col).alias("id_a"))
-            .join(
-                banded.select(
-                    F.col("band"), F.col("band_key"), F.col(id_col).alias("id_b")
-                ),
-                ["band", "band_key"],
-            )
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        pairs = cand.join(
-            sig.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")),
-            "id_a",
-        ).join(
-            sig.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b")),
-            "id_b",
-        )
-    else:
-        banded = sig.select(F.col(id_col), F.col("signature"), band_structs).select(
-            id_col,
-            "signature",
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-        )
-        banded = cap_buckets(banded, ["band", "band_key"], max_bucket)
-        pairs = (
+        .join(
             banded.select(
                 F.col("band"),
                 F.col("band_key"),
-                F.col(id_col).alias("id_a"),
-                F.col("signature").alias("sig_a"),
-            )
-            .join(
-                banded.select(
-                    F.col("band"),
-                    F.col("band_key"),
-                    F.col(id_col).alias("id_b"),
-                    F.col("signature").alias("sig_b"),
-                ),
-                ["band", "band_key"],
-            )
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sig_a", "sig_b")
-            .dropDuplicates(["id_a", "id_b"])
+                F.col(id_col).alias("id_b"),
+                F.col("signature").alias("sig_b"),
+            ),
+            ["band", "band_key"],
         )
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "sig_a", "sig_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
     matches = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda a, b: a == b), lambda eq: eq
@@ -1111,44 +1073,45 @@ class MinHashIndex:
     def compact(self, files_per_band: int = 1) -> None:
         """Small-file maintenance for the band table: incremental
         ``append`` leaves one file per batch per band partition;
-        compaction rewrites to a bounded file count behind the same
-        staging + atomic-rename protocol the FeatureStore uses, so
-        concurrent matchers never observe a half-compacted index."""
-        import shutil
+        compaction rewrites to a bounded file count and commits through
+        ``fsops.promote`` (one atomic pointer flip), so concurrent
+        matchers never observe a half-compacted index."""
+        from dvmax_spark.fsops import recover_swap
 
+        recover_swap(self.path)  # heal a crashed promote before reading
         # (band, salt) partitioning: files_per_band groups PER band and
         # bands x files_per_band parallel writer tasks. A bare
         # repartition(files_per_band, "band") would hash whole bands
         # into files_per_band tasks - one file per band regardless of
         # the knob, and zero parallelism at files_per_band=1.
-        from dvmax_spark.fsops import recover_swap, swap_dir
-
-        recover_swap(self.path)  # heal a crashed promote before reading
         salt = _portable_hash(F.col(self.id_col).cast("string")) % files_per_band
-        df = self.spark.read.parquet(self.path).repartition(
-            self.bands * files_per_band, F.col("band"), salt
-        )
         # batches keep their own partitions; do NOT compact between a
         # crash and its stream's restart — a replayed batch would re-add
         # rows already folded into the compacted partitions
-        staging = self.path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            df.write.mode("overwrite")
-            .partitionBy("ingest_batch", "band")
-            .option("compression", "zstd")
-            .parquet(staging)
+        self._promote(
+            self.spark.read.parquet(self.path).repartition(
+                self.bands * files_per_band, F.col("band"), salt
+            )
         )
-        retired = swap_dir(self.path, staging)
-        if retired:
-            shutil.rmtree(retired)
+
+    def _promote(self, banded: DataFrame) -> None:
+        """Replace the whole index with ``banded`` (the stored layout,
+        ``ingest_batch`` column included) via ``fsops.promote``."""
+        from dvmax_spark.fsops import promote
+
+        promote(
+            self.path,
+            banded.write.partitionBy("ingest_batch", "band")
+            .option("compression", "zstd")
+            .parquet,
+        )
 
     def compact_batches(self, keep_last: int = 1, files_per_band: int = 1) -> None:
         """Fold historical ``ingest_batch=`` partitions into one
-        ``__base__`` partition (same staging + atomic-swap protocol as
-        ``compact``). Batch-keyed writes make streaming ingest
-        replay-idempotent, but a long-lived stream accumulates one
-        partition directory per micro-batch — unbounded partition
+        ``__base__`` partition (committed like ``compact``).
+        Batch-keyed writes make streaming ingest replay-idempotent, but
+        a long-lived stream accumulates one partition directory per
+        micro-batch — unbounded partition
         growth at 100 TB. Folding is replay-safe as long as batches
         that could still be replayed stay live: Structured Streaming
         replays at most the in-flight batch, so the default
@@ -1197,21 +1160,7 @@ class MinHashIndex:
             F.col("band"),
             salt,
         )
-        import shutil
-
-        from dvmax_spark.fsops import swap_dir
-
-        staging = self.path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            folded.write.mode("overwrite")
-            .partitionBy("ingest_batch", "band")
-            .option("compression", "zstd")
-            .parquet(staging)
-        )
-        retired = swap_dir(self.path, staging)
-        if retired:
-            shutil.rmtree(retired)
+        self._promote(folded)
 
     def stage_batch(self, new_docs: DataFrame) -> DataFrame:
         """The incoming batch's banded signature table (one row per doc

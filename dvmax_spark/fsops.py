@@ -1,11 +1,14 @@
-"""Crash-safe table-promote primitives shared by every staging→main
-swap in the package (``FeatureStore._swap_in``, ``MinHashIndex.compact``
-/``compact_batches``, ``ContinuousRollup``, ``IncrementalJoinMV``, the
-streaming marker sinks, and :func:`ensure_artifact` — the one build
-protocol of the fingerprinted cache artifacts: the near-dup pair graph,
-its component labels and the src0 MinHash index).
+"""Crash-safe table-promote primitives. Every table the package
+replaces as a whole commits through :func:`promote` (``ContinuousRollup``,
+``IncrementalJoinMV.compact``, ``MinHashIndex.compact``/
+``compact_batches``, the streaming component labels, the streaming
+marker-merge sinks) or through :func:`ensure_artifact`, the one build
+protocol of the fingerprinted cache artifacts (the near-dup pair graph,
+its component labels and the src0 MinHash index), which calls
+:func:`promote`. ``FeatureStore._swap_in`` calls :func:`swap_dir`
+itself, because it adopts displaced versions into its snapshot log.
 
-Layout (r5): the table path is a SYMLINK to a sibling versioned
+Layout: the table path is a SYMLINK to a sibling versioned
 directory — ``tbl -> tbl.v3`` — and a promote is
 
   1. ``rename(staging, tbl.v4)``       (new version lands complete)
@@ -13,19 +16,18 @@ directory — ``tbl -> tbl.v3`` — and a promote is
 
 Step 2's rename atomically REPLACES the old symlink (POSIX rename onto
 an existing link), so there is no instant at which the table path fails
-to resolve to a complete version — the absent-path window of the old
-two-rename directory swap, and the reader mis-heal race it forced
-(r4 VERDICT, fsops.py:54), are gone. The displaced version directory is
-returned still on disk; the caller disposes of it (delete, or rename
-into a snapshot log) only AFTER the promote, so at every crash point
-some complete version holds the pre-promote state.
+to resolve to a complete version, and no reader can mis-heal an
+in-flight promote. The displaced version directory is returned still
+on disk; the caller disposes of it (delete, or rename into a snapshot
+log) only AFTER the promote, so at every crash point some complete
+version holds the pre-promote state.
 
 Everything reads *through* the symlink (``os.path.isdir``, Spark's
 parquet reader, in-table ``_meta.json`` markers, partition-dir
 listings), so callers are layout-agnostic. Legacy real-directory
 tables migrate on their first swap: the current dir is adopted as
-``tbl.v1`` and the pointer created — that one migration retains the
-old rename window, healed by ``recover_swap`` like before.
+``tbl.v1`` and the pointer created — that one migration retains a
+rename window, healed by ``recover_swap``.
 
 Crash matrix:
 
@@ -36,28 +38,15 @@ Crash matrix:
 * crash inside the legacy migration (path renamed away, pointer not
   yet created): ``recover_swap`` re-points at the newest version.
 * pre-migration legacy crash (state stranded in ``.old``):
-  ``recover_swap`` keeps the old heal — renamed back into place.
+  ``recover_swap`` renames it back into place.
 
 Concurrent READERS on the same filesystem always resolve a complete
 table. Deleting the displaced version while a reader is mid-scan is
 the standard snapshot-retention race (what Delta's VACUUM documents);
 callers that need concurrent long scans keep the displaced dir (the
 FeatureStore renames it into its snapshot log). WRITERS stay
-single-process per table — unchanged contract.
-
-PORTABILITY: the symlink pointer is a LOCAL-POSIX protocol (atomic
-``rename`` onto an existing link; unprivileged Windows, object stores,
-and rsync-without--a don't have it). For those targets the package
-also supports a MANIFEST pointer mode (``pointer_mode='manifest'``):
-the table path is a plain FILE naming the current version directory,
-updated by temp-write + one atomic rename — the same
-one-atomic-operation promote, in the shape Delta/Iceberg commit logs
-use (an object store would swap the rename for a conditional put).
-Readers in manifest mode resolve the data directory via
-:func:`resolve` instead of reading the path directly (symlink mode
-resolves transparently, which is why it stays the default fast-path).
-Both modes pass the same crash matrix (tests/test_fsops.py is
-parametrized over them).
+single-process per table (:func:`swap_dir_cas` is the multi-writer
+form).
 
 FINGERPRINTED ARTIFACTS (:func:`ensure_artifact`): a cache table whose
 validity is its ``_meta.json`` — written inside the staging dir before
@@ -82,12 +71,8 @@ from typing import Callable
 RETIRED_SUFFIX = ".old"
 _ARTIFACT_META = "_meta.json"
 _POINTER_TMP = ".lnk"
-_MANIFEST_TMP = ".mtmp"
+_STAGING = ".staging."
 _VER_RE = re.compile(r"^\.v(\d+)$")
-
-#: default pointer protocol for NEW tables ("symlink" | "manifest");
-#: an existing table always keeps the mode it was created with
-POINTER_MODE = "symlink"
 
 
 def list_versions(path: str) -> dict[int, str]:
@@ -112,67 +97,15 @@ def list_versions(path: str) -> dict[int, str]:
 def current_version_dir(path: str) -> str | None:
     """The version directory the table pointer currently serves, or
     None (legacy real-dir layout, or no table)."""
-    if os.path.islink(path):
-        target = os.path.join(os.path.dirname(path) or ".", os.readlink(path))
-        return target if os.path.isdir(target) else None
-    if os.path.isfile(path):  # manifest pointer
-        try:
-            with open(path) as fh:
-                name = fh.read().strip()
-        except OSError:
-            return None
-        if not name:
-            return None
-        target = os.path.join(os.path.dirname(path) or ".", name)
-        return target if os.path.isdir(target) else None
-    return None
+    if not os.path.islink(path):
+        return None
+    target = os.path.join(os.path.dirname(path) or ".", os.readlink(path))
+    return target if os.path.isdir(target) else None
 
 
-def resolve(path: str) -> str:
-    """The directory a READER should scan for table ``path``: the path
-    itself for real dirs and symlink pointers (which the filesystem
-    resolves transparently), the manifest's target in manifest mode.
-    Returns ``path`` unchanged when nothing resolves (the reader's own
-    missing-table error is clearer than one raised here)."""
-    if os.path.isdir(path):
-        return path
-    return current_version_dir(path) or path
-
-
-def _mode_of(path: str) -> str | None:
-    """The pointer protocol an existing table uses, or None."""
-    if os.path.islink(path):
-        return "symlink"
-    if os.path.isfile(path):
-        return "manifest"
-    return None
-
-
-def _point(path: str, target_dir: str, mode: str = "symlink") -> None:
+def _point(path: str, target_dir: str) -> None:
     """Atomically (re)point ``path`` at ``target_dir`` — one rename,
     valid whether or not a pointer already exists."""
-    if mode == "manifest":
-        tmp = path + _MANIFEST_TMP
-        with open(tmp, "w") as fh:
-            fh.write(os.path.basename(target_dir))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        # POSIX durable-rename: the replace is atomic but not durable
-        # until the PARENT directory entry is synced — without this,
-        # power loss could surface the old pointer (or none) even
-        # though the new one was observed before the crash.
-        try:
-            dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
-        except OSError:
-            return  # non-POSIX dir-open (e.g. some network mounts): best-effort
-        try:
-            os.fsync(dfd)
-        except OSError:
-            pass
-        finally:
-            os.close(dfd)
-        return
     tmp = path + _POINTER_TMP
     try:
         os.remove(tmp)
@@ -188,47 +121,29 @@ def recover_swap(path: str) -> bool:
     layout) or roll the legacy ``.old`` state back into place.
     Returns True when a recovery was performed.
 
-    A healthy pointer/table is never touched, so unlike the old
-    two-rename layout a reader can no longer mis-heal an in-flight
-    writer's promote — the pointer flip is atomic and there is no
-    absent-path window to race (legacy tables retain the old window
-    for their one migration swap)."""
+    A healthy pointer/table is never touched: the pointer flip is
+    atomic, so there is no absent-path window for a reader to mis-heal
+    (legacy tables keep one for their migration swap)."""
     if os.path.isdir(path):  # resolves (real dir or live symlink)
         return False
-    stale_mode = _mode_of(path)
-    if stale_mode == "manifest" and current_version_dir(path) is not None:
-        return False  # healthy manifest pointer
     vers = list_versions(path)
-    if vers:
-        mode = stale_mode or "symlink"
-        if os.path.islink(path):  # dangling symlink pointer
-            try:
-                os.remove(path)
-            except OSError:
-                pass
-        try:
-            _point(path, vers[max(vers)], mode)
-        except OSError:
-            # lost a heal race: sibling healed first / writer finished
-            return False
-        return True
     retired = path + RETIRED_SUFFIX
-    if os.path.isdir(retired):
-        # a stale pointer (dangling symlink / manifest whose target is
-        # gone) at the table path would make the rename fail silently —
-        # clear it first; only a pointer can be stale here (a real dir
-        # returned False at the top)
-        if os.path.islink(path) or os.path.isfile(path):
-            try:
-                os.remove(path)
-            except OSError:
-                pass
+    if not vers and not os.path.isdir(retired):
+        return False
+    if os.path.islink(path):  # a dangling pointer would block the heal
         try:
-            os.rename(retired, path)
+            os.remove(path)
         except OSError:
-            return False
-        return True
-    return False
+            pass
+    try:
+        if vers:
+            _point(path, vers[max(vers)])
+        else:
+            os.rename(retired, path)
+    except OSError:
+        # lost a heal race: sibling healed first / writer finished
+        return False
+    return True
 
 
 def version_number(path: str) -> int:
@@ -250,7 +165,7 @@ class CASConflict(RuntimeError):
     """Another writer promoted first; re-read the table and retry."""
 
 
-def _flip_monotonic(path: str, new_dir: str, mode: str) -> None:
+def _flip_monotonic(path: str, new_dir: str) -> None:
     """Flip the table pointer to ``new_dir`` iff that ADVANCES the
     version. Serialized by a sibling flock so a lagging writer's
     forward-heal (see :func:`swap_dir_cas`) can never race a fresher
@@ -265,17 +180,12 @@ def _flip_monotonic(path: str, new_dir: str, mode: str) -> None:
         fcntl.flock(lk, fcntl.LOCK_EX)
         try:
             if version_number(path) < target_n:
-                _point(path, new_dir, mode)
+                _point(path, new_dir)
         finally:
             fcntl.flock(lk, fcntl.LOCK_UN)
 
 
-def swap_dir_cas(
-    path: str,
-    staging: str,
-    expected_version: int,
-    pointer_mode: str | None = None,
-) -> str | None:
+def swap_dir_cas(path: str, staging: str, expected_version: int) -> str | None:
     """MULTI-WRITER conditional promote: succeed iff the table is still
     at ``expected_version`` (0 = no table yet), else raise
     :class:`CASConflict` with ``staging`` left intact for the caller's
@@ -306,10 +216,9 @@ def swap_dir_cas(
     committed) as concurrent writers.
 
     On an actual object store, replace the rename with a conditional
-    put of the manifest file keyed on its ETag/generation — the shape
+    put of the pointer object keyed on its ETag/generation — the shape
     of this function is deliberately that call."""
     recover_swap(path)
-    mode = _mode_of(path) or pointer_mode or POINTER_MODE
     cur = version_number(path)
     if cur != expected_version:
         raise CASConflict(
@@ -324,22 +233,17 @@ def swap_dir_cas(
             # slot already committed by a writer that hasn't flipped
             # (or crashed pre-flip): serve its version so our caller's
             # re-read sees the winner, not a stale pointer
-            _flip_monotonic(path, new_dir, mode)
+            _flip_monotonic(path, new_dir)
         raise CASConflict(
             f"{path}: version slot v{expected_version + 1} already "
             "claimed by a concurrent writer"
         ) from exc
     displaced = current_version_dir(path)
-    _flip_monotonic(path, new_dir, mode)
+    _flip_monotonic(path, new_dir)
     return displaced
 
 
-def swap_dir(
-    path: str,
-    staging: str,
-    prune_strays: bool = True,
-    pointer_mode: str | None = None,
-) -> str | None:
+def swap_dir(path: str, staging: str, prune_strays: bool = True) -> str | None:
     """Promote ``staging`` to ``path`` (heals a crashed swap first).
     The displaced version directory is returned still on disk (``None``
     when no table existed); the CALLER disposes of it — ``rmtree`` it,
@@ -351,23 +255,17 @@ def swap_dir(
     crashed caller never disposed. Callers that ADOPT displaced dirs
     (the FeatureStore's snapshot log) pass False and sweep strays
     themselves, so a crash between their swap and the adoption rename
-    can never silently delete a version they meant to keep.
-
-    ``pointer_mode`` selects the pointer protocol for a NEW table
-    ("symlink" fast-path / "manifest" portable file — see module
-    docstring); an existing table always keeps its established mode,
-    and None defaults to :data:`POINTER_MODE`."""
+    can never silently delete a version they meant to keep."""
     recover_swap(path)
     # a stale legacy '.old' is fully superseded once a promote succeeds;
     # clearing it here keeps recover_swap from ever resurrecting it
     # (it can be a renamed-away POINTER, not just a dir — crash sims do
-    # `rename(tbl, tbl + '.old')` on the symlink/manifest)
+    # `rename(tbl, tbl + '.old')` on the symlink)
     old = path + RETIRED_SUFFIX
-    if os.path.islink(old) or os.path.isfile(old):
+    if os.path.islink(old):
         os.remove(old)
     else:
         shutil.rmtree(old, ignore_errors=True)
-    mode = _mode_of(path) or pointer_mode or POINTER_MODE
     vers = list_versions(path)
     nmax = max(vers) if vers else 0
     if os.path.isdir(path) and not os.path.islink(path):
@@ -377,12 +275,12 @@ def swap_dir(
         nmax += 1
         legacy = f"{path}.v{nmax}"
         os.rename(path, legacy)
-        _point(path, legacy, mode)
+        _point(path, legacy)
         vers[nmax] = legacy
     displaced = current_version_dir(path)
     new_dir = f"{path}.v{nmax + 1}"
     os.rename(staging, new_dir)
-    _point(path, new_dir, mode)  # the one atomic pointer flip
+    _point(path, new_dir)  # the one atomic pointer flip
     if prune_strays:
         for d in vers.values():
             if d != displaced and d != new_dir:
@@ -390,15 +288,74 @@ def swap_dir(
     return displaced
 
 
+def remove_table(path: str) -> None:
+    """Delete table ``path``: its pointer, every version directory and
+    a legacy ``.old`` (``shutil.rmtree`` refuses a symlink pointer)."""
+    if os.path.islink(path):
+        os.remove(path)
+    else:
+        shutil.rmtree(path, ignore_errors=True)
+    for d in list_versions(path).values():
+        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(path + RETIRED_SUFFIX, ignore_errors=True)
+
+
 def read_artifact_meta(path: str) -> dict | None:
     """The ``_meta.json`` object inside table ``path``, or None when it
     is missing, unreadable, truncated or not a JSON object."""
     try:
-        with open(os.path.join(resolve(path), _ARTIFACT_META)) as fh:
+        with open(os.path.join(path, _ARTIFACT_META)) as fh:
             meta = json.load(fh)
     except (OSError, ValueError):
         return None
     return meta if isinstance(meta, dict) else None
+
+
+def promote(
+    path: str, write: Callable[[str], None], meta: dict | None = None
+) -> None:
+    """Replace table ``path`` with a complete new version, the one
+    commit path of every whole-table rewrite in the package (module
+    doc). ``write(staging)`` must create the new table in a
+    per-process unique staging dir; ``meta``, when given, is dumped as
+    ``_meta.json`` inside it, so data and meta commit in the same
+    pointer flip (:func:`swap_dir`, which heals a crashed promote
+    first). The staging dir is removed whatever happens, and the
+    displaced version once the new one serves.
+
+    A ``write`` that raises leaves the previous table serving; a
+    process killed before the flip leaves the previous table (with its
+    previous meta) serving and an orphan staging dir, which the next
+    promote of the table removes."""
+    staging = f"{path}{_STAGING}{os.getpid()}_{uuid.uuid4().hex[:8]}"
+    try:
+        write(staging)
+        if meta is not None:
+            with open(os.path.join(staging, _ARTIFACT_META), "w") as fh:
+                json.dump(meta, fh)
+        retired = swap_dir(path, staging)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    if retired:
+        shutil.rmtree(retired, ignore_errors=True)
+    _prune_dead_stagings(path)
+
+
+def _prune_dead_stagings(path: str) -> None:
+    """Remove the staging dirs of table ``path`` whose writer process
+    is gone (killed before its promote); a live writer's dir is kept."""
+    parent, base = os.path.split(path)
+    prefix = base + _STAGING
+    for name in os.listdir(parent or "."):
+        pid = name[len(prefix):].split("_", 1)[0]
+        if not (name.startswith(prefix) and pid.isdigit()):
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except OSError:
+            pass  # alive, owned by another user
 
 
 def ensure_artifact(
@@ -409,14 +366,8 @@ def ensure_artifact(
     ``path + '.lock'``: heal a crashed promote, then compare the stored
     meta with ``expected`` (JSON-native values only: it is compared with
     its own round trip). Equal → return False, nothing written.
-    Otherwise ``write(staging)`` must create the table in a
-    per-process unique staging dir; ``expected`` is dumped beside it and
-    the dir promoted by :func:`swap_dir`. Returns True (built).
-
-    A ``write`` that raises leaves the previous table serving and only
-    its own staging dir removed; a process killed before the promote
-    leaves an orphan staging dir and the old (stale) meta, so the next
-    call rebuilds."""
+    Otherwise :func:`promote` the table ``write`` creates, with
+    ``expected`` as its meta, and return True (built)."""
     import fcntl
 
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
@@ -426,16 +377,7 @@ def ensure_artifact(
             recover_swap(path)
             if read_artifact_meta(path) == expected:
                 return False
-            staging = f"{path}.staging.{os.getpid()}_{uuid.uuid4().hex[:8]}"
-            try:
-                write(staging)
-                with open(os.path.join(staging, _ARTIFACT_META), "w") as fh:
-                    json.dump(expected, fh)
-                retired = swap_dir(path, staging)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-            if retired:
-                shutil.rmtree(retired, ignore_errors=True)
+            promote(path, write, expected)
             return True
         finally:
             fcntl.flock(lk, fcntl.LOCK_UN)

@@ -90,10 +90,10 @@ class IncrementalJoinMV:
     def _max_batch(self) -> int | None:
         """Highest committed batch id, from M's partition directory
         names (driver-side listing of one directory level — no scan).
-        Heals a crashed compact() swap first — without the recovery a
-        crash between compact's two renames would make M look empty
-        and the next refresh would silently restart the MV beside the
-        stranded history (the ADVICE-class '.old' loss window)."""
+        Heals a crashed promote first — without the recovery a table
+        pointer lost mid-promote would make M look empty and the next
+        refresh would silently restart the MV beside the stranded
+        history."""
         from dvmax_spark.fsops import recover_swap
 
         recover_swap(self.m_path)
@@ -229,23 +229,20 @@ class IncrementalJoinMV:
         and drops exact cancellations, so a long correction history
         shrinks instead of accumulating +1/−1 pairs.
 
-        Crash contract: the folded table is staged and promoted with
-        the two-rename fsops swap; ``recover_swap`` heals a crash
-        between the renames on the next read/refresh path that touches
-        M. A/B logs are left untouched — they are the delta inputs'
-        system of record and prior-state pruning still works against
-        the renumbered base (0 < any live batch id).
+        Crash contract: the folded table commits through
+        ``fsops.promote`` (one atomic pointer flip), so a crash at any
+        point leaves either the old M or the folded one serving. A/B
+        logs are left untouched — they are the delta inputs' system of
+        record and prior-state pruning still works against the
+        renumbered base (0 < any live batch id).
         """
-        import uuid
-
-        from dvmax_spark.fsops import recover_swap, swap_dir
+        from dvmax_spark.fsops import promote
 
         if keep_last < 1:
             raise ValueError(
                 "keep_last must be >= 1: the newest batch may still be "
                 "replayed by a recovering driver and must not be folded"
             )
-        recover_swap(self.m_path)
         committed = self._max_batch()
         if committed is None:
             return
@@ -263,11 +260,7 @@ class IncrementalJoinMV:
                 .where(F.col(self.mult_col) != 0)
             )
         folded = hist.withColumn(BATCH_COL, F.lit(0)).unionByName(live)
-        staging = f"{self.m_path}__staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        folded.write.mode("overwrite").partitionBy(BATCH_COL).parquet(staging)
-        old = swap_dir(self.m_path, staging)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
+        promote(self.m_path, folded.write.partitionBy(BATCH_COL).parquet)
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

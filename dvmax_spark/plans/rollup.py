@@ -9,15 +9,13 @@ partial aggregation uses map-side, lifted across batch boundaries. At
 100 TB this is the difference between touching yesterday's raw events
 (delta-sized work) and rescanning a year of history per refresh.
 Derived measures (avg = sum/n) are computed at read time, so they stay
-exact under merging. Writes go through staging + atomic rename
-(store.py S3 contract) so readers never see a half-written rollup.
+exact under merging. Every refresh commits through ``fsops.promote``
+(one atomic pointer flip), so readers never see a half-written rollup.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,46 +75,26 @@ class ContinuousRollup:
         """Fold a new raw batch into the stored rollup: aggregate the
         delta, merge with stored partials, atomic-replace the table.
 
-        ``meta`` (e.g. a streaming batch id) is written as ``_meta.json``
-        INSIDE the staging dir before the swap, so the marker and the
-        data commit in the same atomic rename — a marker kept outside
-        the table dir would leave a crash window between swap and
-        marker write in which a replayed batch double-counts (the
+        ``meta`` (e.g. a streaming batch id) is committed as
+        ``_meta.json`` by the same promote as the data — a marker kept
+        outside the table dir would leave a crash window between swap
+        and marker write in which a replayed batch double-counts (the
         partial-aggregate merge is not idempotent). Underscore-prefixed
         files are invisible to Spark's parquet reader (like _SUCCESS).
         """
-        from dvmax_spark.fsops import recover_swap, swap_dir
+        from dvmax_spark.fsops import promote
 
-        recover_swap(self.path)  # heal a crashed promote before reading
         delta = aggregate_delta(batch, self.group_col, self.ts_col, self.val_col)
         merged = merge_partials(self.read_partials(), delta) if self.exists() else delta
-        staging = f"{self.path}__staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
-        if meta is not None:
-            import json
-
-            with open(os.path.join(staging, "_meta.json"), "w") as fh:
-                json.dump(meta, fh)
-        # deterministic '.old' retire (fsops): a crash between the two
-        # renames is healed by the next refresh/read_meta instead of
-        # stranding history under an unfindable uuid dir
-        old = swap_dir(self.path, staging)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
+        promote(self.path, merged.write.parquet, meta)
 
     def read_meta(self) -> dict | None:
         """The ``meta`` dict committed with the live table state, or
         None (never refreshed with meta / table absent)."""
-        import json
-
-        from dvmax_spark.fsops import recover_swap
+        from dvmax_spark.fsops import read_artifact_meta, recover_swap
 
         recover_swap(self.path)
-        try:
-            with open(os.path.join(self.path, "_meta.json")) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
+        return read_artifact_meta(self.path)
 
     def read_partials(self) -> DataFrame:
         from dvmax_spark.fsops import recover_swap
@@ -139,7 +117,9 @@ class ContinuousRollup:
         )
 
     def drop(self) -> None:
-        shutil.rmtree(self.path, ignore_errors=True)
+        from dvmax_spark.fsops import remove_table
+
+        remove_table(self.path)
 
 
 def stream_into_rollup(
@@ -152,7 +132,7 @@ def stream_into_rollup(
     """Streaming continuous aggregate: keep a :class:`ContinuousRollup`
     current from a stream via foreachBatch. The partial-aggregate
     merge is NOT idempotent, so exactly-once comes from the ``_meta``
-    marker that commits INSIDE the same atomic rename as the data: a
+    marker that commits in the same promote as the data: a
     replayed micro-batch (crash between refresh and checkpoint
     advance) sees its own id already applied and skips. Batch ids from
     a FRESH checkpoint restart at 0 and are skipped by the same
@@ -160,12 +140,10 @@ def stream_into_rollup(
     path", made explicit here rather than silently double-merged."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = roll.read_meta()
-        if meta is not None and meta.get("batch") is not None and int(
-            batch_id
-        ) <= int(meta["batch"]):
+        applied = (roll.read_meta() or {}).get("batch_id")
+        if applied is not None and batch_id <= applied:
             return  # already merged (replay) — merging again would double-count
-        roll.refresh(batch_df, meta={"batch": int(batch_id)})
+        roll.refresh(batch_df, meta={"batch_id": batch_id})
 
     writer = stream.writeStream.foreachBatch(_sink).queryName(query_name)
     if checkpoint_dir:

@@ -548,7 +548,7 @@ def a_continuous_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """Hypertable-style continuous aggregate (plans/rollup.py): the
     events table arrives as THREE time-ordered batches; each refresh
     aggregates only the delta and merges it into the persisted rollup
-    (staging + atomic rename per refresh). The oracle computes the same
+    (one atomic fsops.promote per refresh). The oracle computes the same
     rollup from the full raw table in one shot — a hash match proves
     delta-merge maintenance converges to the full recompute, i.e. the
     incremental path can replace the year-rescan at 100 TB."""
@@ -1850,8 +1850,8 @@ def t_stream_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING continuous aggregate, run for real: the events table
     arrives as 3 time-ordered micro-batches; foreachBatch merges each
     batch's partials into the persisted rollup exactly-once (the
-    ``_meta`` batch marker commits inside the same atomic rename as
-    the data — plans/rollup.py:stream_into_rollup). The oracle
+    ``_meta`` batch marker commits in the same fsops.promote as the
+    data — plans/rollup.py:stream_into_rollup). The oracle
     aggregates the full raw table one shot: a hash match proves the
     streamed partial-merge path converges to the batch recompute."""
     import tempfile as _tf

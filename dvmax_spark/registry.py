@@ -82,13 +82,14 @@ PRIORITY: tuple[str, ...] = (
     "a9_group_year_first",
     "w5_topk_per_group",
     "w2_jump_check",
-    # r9 rotation: a_quartiles_distributed (multi-quantile twin over
-    # the same operators/distrank.py exact path) takes
-    # a_median_distributed's A5 slot — the median variant earned its
-    # green driver row in r8. r11 adds a_approx_percentile (the SKETCH
-    # quantile path vs the exact one, bounds-oracled value-exact in
-    # PARITY.md, never driver-checked).
-    "a_quartiles_distributed",
+    # r12 rotation: t_stream_rollup (the streamed continuous aggregate,
+    # its batch marker committed by fsops.promote with the data;
+    # T1/A1/S3, value-exact vs the one-shot SQL rollup) takes
+    # a_quartiles_distributed's slot — a_quartiles_distributed is green
+    # in CORRECTNESS_r09..r11 and its A5 stays covered in-cap by
+    # a_approx_percentile (the SKETCH quantile path, bounds-oracled
+    # value-exact in PARITY.md).
+    "t_stream_rollup",
     "a_approx_percentile",
     # unions/pivot/scalars — r11 rotation: sql_grouping_sets earned its
     # green r10 row; u_unpivot_melt keeps U3 in-cap with a fresh
@@ -136,7 +137,7 @@ PRIORITY: tuple[str, ...] = (
     # t_stateful_session.
     "x_soft_dedup_mass",
     # streaming — r11 rotation: t_stream_rollup earned its green r10
-    # row; t_stream_cms (micro-batch CMS maintenance: A10 sketch + T1
+    # row (it rotated back in with r12, see above); t_stream_cms (micro-batch CMS maintenance: A10 sketch + T1
     # streaming in one oracled query) keeps T1 in-cap and gives the
     # sketch family its first ORACLED driver row.
     "t_stream_cms",
@@ -195,6 +196,9 @@ PRIORITY: tuple[str, ...] = (
     # sql_unpivot, x_doc_chunks_udtf, j_asof_forward, t_interval_join,
     # a_table_profile — keep the cadence.
     # --- everything below is redundant-coverage / variant evidence ---
+    # r12 rotation: displaced by t_stream_rollup (A5 still covered
+    # in-cap by a_approx_percentile); green in CORRECTNESS_r09..r11
+    "a_quartiles_distributed",
     # r12 rotation: displaced from the evidence window by the two
     # connected-components consumers (IDs still covered in-cap)
     "t_session_window",
@@ -216,7 +220,6 @@ PRIORITY: tuple[str, ...] = (
     "sql_api_q21",
     "o_zorder_layout",
     "a_hll_sketch_rollup",
-    "t_stream_rollup",
     "x_gopher_repetition",
     # r10 rotation: displaced from the evidence window (IDs still
     # covered in-cap); each earned its green r9 driver row on first

@@ -110,11 +110,10 @@ def stream_dedup_ingest(
     ledger = index.path + "_seen"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # heal a crashed compact BEFORE the isdir guard below — without
-        # this, a compact() that died between its two renames makes the
-        # index look absent: cross-matching is skipped and a fresh
-        # one-batch index is written, and the NEXT swap would delete the
-        # stranded history in '.old' (r4 review finding)
+        # heal a crashed promote BEFORE the isdir guard below — without
+        # this, an index whose pointer was lost mid-promote looks
+        # absent: cross-matching is skipped and a fresh one-batch index
+        # is written beside the stranded history
         from dvmax_spark.fsops import recover_swap
 
         recover_swap(index.path)
@@ -222,10 +221,8 @@ def stream_into_components(
     the cap for the oracle (cap-aware streaming stays with
     stream_dedup_ingest).
     """
-    import shutil
-
     from dvmax_spark.ext.dedup import incremental_components
-    from dvmax_spark.fsops import recover_swap, swap_dir
+    from dvmax_spark.fsops import promote, recover_swap
 
     idc = index.id_col
 
@@ -260,14 +257,7 @@ def stream_into_components(
             labels0 = spark.createDataFrame([], f"id {idt}, label {idt}")
         if not edges.isEmpty():
             labels1, _ = incremental_components(labels0, edges)
-            staging = labels_path + ".staging"
-            shutil.rmtree(staging, ignore_errors=True)
-            labels1.write.mode("overwrite").option("compression", "zstd").parquet(
-                staging
-            )
-            retired = swap_dir(labels_path, staging)
-            if retired:
-                shutil.rmtree(retired, ignore_errors=True)
+            promote(labels_path, labels1.write.option("compression", "zstd").parquet)
         index.append(matchable, batch_key=f"s{batch_id}", staged_banded=staged)
 
     writer = stream_docs.writeStream.foreachBatch(_sink).queryName(query_name)

@@ -23,32 +23,52 @@ anti-joins against existing keys instead of merging. Checkpointing
 lives with the stream (the ``checkpointLocation``), so a restarted
 query resumes at the right offset and replays at most one batch —
 absorbed by idempotence.
+
+The sketch, CMS, DSIR-model and BM25-stats sinks merge monoid partials,
+which a replay WOULD double-count: they share one marker-committed
+merge (:func:`_marker_merge_query`) that commits the applied batch id
+with the data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+from dvmax_spark.fsops import promote, read_artifact_meta, recover_swap
 from dvmax_spark.operators.upsert import dedup_keep_last
 from dvmax_spark.store import FeatureStore
 
 
-def _marker_skips(meta_path: str, batch_id: int, sink: str) -> bool:
-    """Shared replay guard for the marker-committed merge sinks
-    (sketches/cms/dsir/bm25 stats). Reads the committed batch id from
-    ``meta_path`` and returns True iff ``batch_id`` is EXACTLY the
-    committed one — the legal foreachBatch replay-of-the-newest-batch
-    case. ``batch_id`` BELOW the marker raises instead of silently
-    skipping: micro-batch counters restart at 0 with a FRESH
-    checkpoint, and a ``>=`` test would then drop genuinely-new early
-    batches with no error (the r4 ADVICE finding; mirrors
-    stream_into_ivf's monotone guard). No marker yet -> apply."""
-    import json
+def _start(
+    stream_df: DataFrame, sink, query_name: str, checkpoint_dir, available_now: bool
+):
+    """Start ``stream_df`` into the foreachBatch ``sink``; returns the
+    StreamingQuery (the caller awaits termination)."""
+    writer = stream_df.writeStream.queryName(query_name).foreachBatch(sink)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
+
+def _marker_skips(path: str, batch_id: int, sink: str) -> bool:
+    """Replay guard of the marker-committed merge sinks. Heals a
+    crashed promote of table ``path``, reads the committed batch id
+    from its ``_meta.json`` and returns True iff ``batch_id`` is
+    EXACTLY the committed one — the legal foreachBatch
+    replay-of-the-newest-batch case. ``batch_id`` BELOW the marker
+    raises instead of silently skipping: micro-batch counters restart
+    at 0 with a FRESH checkpoint, and a ``>=`` test would then drop
+    genuinely-new early batches with no error (mirrors
+    stream_into_ivf's monotone guard). No marker yet -> apply."""
+    recover_swap(path)
     try:
-        with open(meta_path) as fh:
-            marker = int(json.load(fh)["batch_id"])
-    except (OSError, ValueError, KeyError, TypeError):
+        marker = int(read_artifact_meta(path)["batch_id"])
+    except (TypeError, KeyError, ValueError):
         return False
     if batch_id == marker:
         return True
@@ -61,6 +81,54 @@ def _marker_skips(meta_path: str, batch_id: int, sink: str) -> bool:
             "checkpoint per store lifetime, or rebuild the store."
         )
     return False
+
+
+def _marker_merge_query(
+    stream_df: DataFrame,
+    path: str,
+    keys: list[str],
+    aggs: list[Column],
+    delta,
+    *,
+    sink: str,
+    checkpoint_dir: str,
+    query_name: str,
+    available_now: bool,
+):
+    """Start a marker-committed merge sink (sketches, CMS, DSIR model,
+    BM25 stats): a table of monoid partials keyed on ``keys``. Per
+    micro-batch: :func:`_marker_skips` on ``path``; ``delta(batch_df,
+    batch_id)`` gives the batch's partials (None: nothing to merge);
+    read-or-new, ``unionByName`` + ``groupBy(keys).agg(aggs)``; then
+    one ``fsops.promote`` commits the merged table with the
+    ``{"batch_id": n}`` marker inside it.
+
+    Exactly-once: a monoid merge is not idempotent under foreachBatch's
+    replay of the last batch, and marker and data commit in the same
+    atomic pointer flip, so there is no applied-but-unmarked crash
+    window (underscore files are invisible to Spark's parquet reader,
+    like _SUCCESS). Contract: ONE checkpoint per table lifetime, hence
+    ``checkpoint_dir`` is required."""
+    if not checkpoint_dir:
+        raise ValueError(
+            f"{sink}: checkpoint_dir is required — the sink's "
+            "exactly-once marker contract assumes a durable checkpoint "
+            "(and pyspark fails opaquely on a null checkpointLocation)."
+        )
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if _marker_skips(path, batch_id, sink) or batch_df.isEmpty():
+            return
+        new = delta(batch_df, batch_id)
+        if new is None:
+            return
+        if os.path.isdir(path):
+            cur = batch_df.sparkSession.read.parquet(path)
+            new = cur.unionByName(new).groupBy(*keys).agg(*aggs)
+        write = new.write.option("compression", "zstd").parquet
+        promote(path, write, {"batch_id": batch_id})
+
+    return _start(stream_df, _sink, query_name, checkpoint_dir, available_now)
 
 
 def stream_upsert_into_store(
@@ -99,50 +167,7 @@ def stream_upsert_into_store(
         else:
             store.append_new_keys(batch)
 
-    writer = stream_df.writeStream.foreachBatch(_sink).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_into_rollup(
-    stream_df: DataFrame,
-    rollup,
-    checkpoint_dir: str,
-    query_name: str = "rollup_ingest",
-    available_now: bool = True,
-):
-    """Maintain a :class:`~dvmax_spark.plans.rollup.ContinuousRollup`
-    from a stream: each micro-batch is delta-aggregated and
-    monoid-merged into the persisted rollup (a streaming materialized
-    view). NOTE: unlike the keyed upsert above, a partial-aggregate
-    merge is NOT idempotent under batch replay — foreachBatch can
-    replay the LAST batch after a crash, double-counting it. Exactly-
-    once here needs the batch_id committed ATOMICALLY WITH the rollup
-    state: refresh(meta=...) writes it inside the staging dir before
-    the swap, so there is no window in which the data is applied but
-    the marker says otherwise. Returns the StreamingQuery (caller
-    awaits termination)."""
-
-    def _applied(batch_id: int) -> bool:
-        meta = rollup.read_meta()
-        return meta is not None and meta.get("batch_id", -1) >= batch_id
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _applied(batch_id) or batch_df.isEmpty():
-            return
-        rollup.refresh(batch_df, meta={"batch_id": batch_id})
-
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _sink, query_name, checkpoint_dir, available_now)
 
 
 def stream_into_sketches(
@@ -157,68 +182,30 @@ def stream_into_sketches(
 ):
     """Maintain the persisted HLL sketch table (ext/sketches.py) from a
     stream: each micro-batch's per-(group, day) sketches monoid-merge
-    (``hll_union_agg``) into the store behind a staging + atomic-rename
-    swap — a streaming DISTINCT-COUNT materialized view whose readers
-    (rollup_distinct_from_sketches) never rescan raw events. Exactly-
-    once: sketch union is not idempotent under foreachBatch's replay of
-    the last batch, so the applied batch id is committed as _meta.json
-    INSIDE the staging dir — marker and data swap in the same atomic
-    rename, leaving no applied-but-unmarked crash window (underscore
-    files are invisible to Spark's parquet reader, like _SUCCESS).
-    A crash BETWEEN the promote's two renames is healed on the next
-    batch by fsops.recover_swap (the table — marker included — rolls
-    back from '.old'), so no crash point can lose accumulated
-    sketches.
+    (``hll_union_agg``) into the store — a streaming DISTINCT-COUNT
+    materialized view whose readers (rollup_distinct_from_sketches)
+    never rescan raw events. Exactly-once through the batch-id marker
+    committed with the data (:func:`_marker_merge_query`); a crashed
+    promote heals before the marker check, so no crash point can lose
+    accumulated sketches.
 
     Contract: ONE checkpoint per store lifetime. Replaying the newest
     committed batch is a no-op; an OLDER batch id (fresh checkpoint
     against an existing store) raises instead of silently skipping or
     double-merging (see _marker_skips)."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from dvmax_spark.ext.sketches import daily_distinct_sketches
-    from dvmax_spark.fsops import recover_swap, swap_dir
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        recover_swap(path)  # heal a crashed promote BEFORE the marker check
-        meta = os.path.join(path, "_meta.json")
-        if _marker_skips(meta, batch_id, "stream_into_sketches") or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        new = daily_distinct_sketches(batch_df, group_col, ts_col, id_col)
-        if os.path.isdir(path):
-            cur = spark.read.parquet(path)
-            merged = (
-                cur.unionByName(new)
-                .groupBy(group_col, "day")
-                .agg(
-                    F.hll_union_agg("sketch").alias("sketch"),
-                    F.sum("n_rows").alias("n_rows"),
-                )
-            )
-        else:
-            merged = new
-        staging = path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").option("compression", "zstd").parquet(staging)
-        with open(os.path.join(staging, "_meta.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        retired = swap_dir(path, staging)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
-
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _marker_merge_query(
+        stream_df,
+        path,
+        [group_col, "day"],
+        [F.hll_union_agg("sketch").alias("sketch"), F.sum("n_rows").alias("n_rows")],
+        lambda batch_df, _: daily_distinct_sketches(batch_df, group_col, ts_col, id_col),
+        sink="stream_into_sketches",
+        checkpoint_dir=checkpoint_dir,
+        query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_into_ivf(
@@ -249,7 +236,6 @@ def stream_into_ivf(
     batch is legal (that is exactly the crash-replay case), anything
     older raises instead of corrupting the lists.
     """
-    import os
 
     def _max_stream_key(path: str) -> int | None:
         try:
@@ -276,14 +262,7 @@ def stream_into_ivf(
             )
         index.append(batch_df, batch_key=f"s{batch_id}")
 
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _sink, query_name, checkpoint_dir, available_now)
 
 
 def stream_into_cms(
@@ -305,68 +284,24 @@ def stream_into_cms(
     rows (merge-invariance) — t_stream_cms proves it against the
     batch path's exact SQL oracle.
 
-    Exactly-once: cell summing is not idempotent under foreachBatch's
-    replay, so the applied batch id commits as ``_meta.json`` INSIDE
-    the staging dir — marker and data swap in the same atomic rename
-    (the stream_into_sketches contract), and a crashed promote heals
-    via fsops.recover_swap before the marker check.
-
-    Contract shared with the other marker sinks: ONE checkpoint per
-    store lifetime (``checkpoint_dir`` is required — the exactly-once
-    marker is meaningless without one). A fresh checkpoint restarts
-    micro-batch ids at 0; the guard raises on an id BELOW the marker
-    instead of silently skipping genuinely-new early batches
-    (_marker_skips).
+    Exactly-once and the one-checkpoint contract are those of every
+    marker-committed merge sink (:func:`_marker_merge_query`):
+    ``checkpoint_dir`` is required, replaying the newest committed
+    batch is a no-op and an older batch id raises (_marker_skips).
     """
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from dvmax_spark.ext.sketches import cms_table
-    from dvmax_spark.fsops import recover_swap, swap_dir
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "stream_into_cms: checkpoint_dir is required — the sink's "
-            "exactly-once marker contract assumes a durable checkpoint "
-            "(and pyspark fails opaquely on a null checkpointLocation)."
-        )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        recover_swap(path)
-        meta = os.path.join(path, "_meta.json")
-        if _marker_skips(meta, batch_id, "stream_into_cms") or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        new = cms_table(batch_df, key_col, width, depth)
-        if os.path.isdir(path):
-            cur = spark.read.parquet(path)
-            merged = (
-                cur.unionByName(new)
-                .groupBy("row", "col")
-                .agg(F.sum("counter").cast("long").alias("counter"))
-            )
-        else:
-            merged = new
-        staging = path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").option("compression", "zstd").parquet(staging)
-        with open(os.path.join(staging, "_meta.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        retired = swap_dir(path, staging)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
-
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _marker_merge_query(
+        stream_df,
+        path,
+        ["row", "col"],
+        [F.sum("counter").cast("long").alias("counter")],
+        lambda batch_df, _: cms_table(batch_df, key_col, width, depth),
+        sink="stream_into_cms",
+        checkpoint_dir=checkpoint_dir,
+        query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_into_dsir_model(
@@ -390,59 +325,26 @@ def stream_into_dsir_model(
     bucket-count formulation scales. ``target`` is the boolean Column
     marking target-domain rows (evaluated per batch).
 
-    Exactly-once via the same contract as stream_into_sketches:
-    count-merge is not idempotent under foreachBatch replay, so the
-    applied batch id commits as _meta.json INSIDE the staging dir and
-    swaps atomically with the data; a crash between the promote's two
-    renames heals via fsops.recover_swap on the next batch.
-
-    Contract: ONE checkpoint per model lifetime — replay of the newest
-    committed batch is a no-op, an older batch id raises
-    (_marker_skips) instead of silently dropping data."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    Exactly-once through the batch-id marker committed with the model
+    (:func:`_marker_merge_query`). Contract: ONE checkpoint per model
+    lifetime — replay of the newest committed batch is a no-op, an
+    older batch id raises (_marker_skips) instead of silently dropping
+    data."""
     from dvmax_spark.ext.dsir import dsir_bucket_counts
-    from dvmax_spark.fsops import recover_swap, swap_dir
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        recover_swap(path)
-        meta = os.path.join(path, "_meta.json")
-        if _marker_skips(meta, batch_id, "stream_into_dsir_model") or batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        new = dsir_bucket_counts(
+    return _marker_merge_query(
+        stream_df,
+        path,
+        ["b"],
+        [F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t")],
+        lambda batch_df, _: dsir_bucket_counts(
             batch_df, target, n=n, buckets=buckets, id_col=id_col, text_col=text_col
-        )
-        if os.path.isdir(path):
-            cur = spark.read.parquet(path)
-            merged = (
-                cur.unionByName(new)
-                .groupBy("b")
-                .agg(F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t"))
-            )
-        else:
-            merged = new
-        staging = path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").option("compression", "zstd").parquet(staging)
-        with open(os.path.join(staging, "_meta.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        retired = swap_dir(path, staging)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
-
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
+        ),
+        sink="stream_into_dsir_model",
+        checkpoint_dir=checkpoint_dir,
+        query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_into_bm25(
@@ -460,8 +362,8 @@ def stream_into_bm25(
     ``path/postings`` (replay-idempotent dynamic partition overwrite —
     the dedup_ingest contract), and the corpus scalars
     ``(n_docs, len_sum)`` integer-merge into a marker-committed
-    ``path/stats`` table (exactly-once, the stream_into_sketches
-    contract). Any later query then BM25-scores against everything
+    ``path/stats`` table (exactly-once, :func:`_marker_merge_query`).
+    Any later query then BM25-scores against everything
     ingested so far via ext.retrieval.bm25_from_index — no document is
     ever rescanned, because tf/dl are per-doc (computable from the
     batch alone) and (n_docs, len_sum, df) are count monoids.
@@ -486,23 +388,10 @@ def stream_into_bm25(
     committed batch is a no-op, an older batch id raises
     (_marker_skips).
     """
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from dvmax_spark.fsops import recover_swap, swap_dir
-
     postings_dir = os.path.join(path, "postings")
-    stats_dir = os.path.join(path, "stats")
     ledger_dir = os.path.join(path, "seen")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        recover_swap(stats_dir)
-        meta = os.path.join(stats_dir, "_meta.json")
-        if _marker_skips(meta, batch_id, "stream_into_bm25") or batch_df.isEmpty():
-            return
+    def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates([id_col])
         if os.path.isdir(ledger_dir):
@@ -518,7 +407,7 @@ def stream_into_bm25(
         # so every per-batch partition rewrite below is byte-stable
         fresh = fresh.localCheckpoint()
         if fresh.isEmpty():  # all re-deliveries: nothing to merge
-            return
+            return None
         toks = fresh.select(
             F.col(id_col),
             F.size(F.split(F.col(text_col), " ")).alias("dl"),
@@ -545,31 +434,19 @@ def stream_into_bm25(
             .option("compression", "zstd")
             .parquet(ledger_dir)
         )
-        new = fresh.agg(
+        return fresh.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(F.split(F.col(text_col), " "))).alias("len_sum"),
         )
-        if os.path.isdir(stats_dir):
-            cur = spark.read.parquet(stats_dir)
-            merged = cur.unionByName(new).agg(
-                F.sum("n_docs").alias("n_docs"), F.sum("len_sum").alias("len_sum")
-            )
-        else:
-            merged = new
-        staging = stats_dir + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").option("compression", "zstd").parquet(staging)
-        with open(os.path.join(staging, "_meta.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        retired = swap_dir(stats_dir, staging)
-        if retired:
-            shutil.rmtree(retired, ignore_errors=True)
 
-    writer = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _marker_merge_query(
+        stream_df,
+        os.path.join(path, "stats"),
+        [],
+        [F.sum("n_docs").alias("n_docs"), F.sum("len_sum").alias("len_sum")],
+        _delta,
+        sink="stream_into_bm25",
+        checkpoint_dir=checkpoint_dir,
+        query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -119,25 +119,6 @@ def test_dedup_pipeline_survives_adversarial_corpus(spark):
     docs.unpersist(), pairs.unpersist(), clusters.unpersist()
 
 
-def test_minhash_candidate_shapes_agree(spark):
-    """The two candidate-stage physical shapes (inline signatures vs
-    id-only banding + re-join) must produce IDENTICAL pair sets — the
-    knob trades shuffle volume, never results."""
-    from dvmax_spark.ext.dedup import minhash_lsh_pairs
-
-    docs = _corpus(spark).where(F.col("doc_id") >= 10_000).cache()
-    a = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_lsh_pairs(docs, max_bucket=CAP).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_lsh_pairs(docs, max_bucket=CAP, rejoin_signatures=True).collect()
-    }
-    assert a == b and a
-    docs.unpersist()
-
-
 def test_dedup_clusters_twophase_terminates_on_adversarial_chain(spark):
     """A 50-edge path with max_rounds=2 cannot converge — the bound must
     still TERMINATE the loop, and loudly: unconverged labels would split

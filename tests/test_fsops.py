@@ -1,10 +1,11 @@
-"""Crash-window recovery for every staging→main directory promote
-(fsops.swap_dir / recover_swap — the round-3 ADVICE findings).
+"""Crash-window recovery for every table promote (fsops.swap_dir /
+recover_swap / promote / ensure_artifact).
 
-The two-rename promote has a window — after ``main → .old``, before
-``staging → main`` — where the table path does not exist. These tests
-simulate a crash INSIDE that window (rename main away by hand, exactly
-the on-disk state a killed process leaves) and assert the next
+The table path is a symlink to a versioned sibling directory and a
+promote is one atomic pointer flip, so there is no instant at which the
+path fails to resolve. These tests build the on-disk states a killed
+process can leave — an un-promoted orphan version, a lost pointer, a
+legacy real-dir table stranded in ``.old`` — and assert the next
 operation heals instead of silently rebuilding from scratch and then
 deleting the stranded history.
 """
@@ -21,25 +22,21 @@ from dvmax_spark.fsops import (
     ensure_artifact,
     read_artifact_meta,
     recover_swap,
-    resolve,
     swap_dir,
 )
 
-# the crash matrix runs in BOTH pointer protocols: the symlink
-# fast-path and the portable manifest-file mode (object-store shape) —
-# same promotes, same crash windows, same heals
-both_modes = pytest.mark.parametrize("pmode", ["symlink", "manifest"])
+# the ids keep the names these tests had while a second (manifest)
+# pointer protocol existed; the symlink is the only pointer now
+symlink_pointer = pytest.mark.parametrize("pmode", ["symlink"])
 
 
 def _read(path: str, name: str) -> str:
-    with open(os.path.join(resolve(path), name)) as fh:
+    with open(os.path.join(path, name)) as fh:
         return fh.read()
 
 
-def _is_pointer(path: str, pmode: str) -> bool:
-    if pmode == "symlink":
-        return os.path.islink(path) and os.path.isdir(path)
-    return os.path.isfile(path) and os.path.isdir(resolve(path))
+def _is_pointer(path: str) -> bool:
+    return os.path.islink(path) and os.path.isdir(path)
 
 
 # ------------------------------------------------------------ primitives
@@ -64,26 +61,24 @@ def test_recover_swap_rolls_back_crashed_promote(tmp_path):
     assert os.path.isdir(path)
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_promotes_and_returns_retired(tmp_path, pmode):
     path, staging = str(tmp_path / "t"), str(tmp_path / "t.staging")
     os.makedirs(staging)
     # first promote: no prior table — path becomes a pointer to .v1
-    assert swap_dir(path, staging, pointer_mode=pmode) is None
-    assert _is_pointer(path, pmode)
-    # second promote returns the displaced VERSION dir, still on disk;
-    # the established mode sticks even if the caller asks for the other
+    assert swap_dir(path, staging) is None
+    assert _is_pointer(path)
+    # second promote returns the displaced VERSION dir, still on disk
     os.makedirs(staging)
     with open(os.path.join(staging, "m"), "w") as fh:
         fh.write("v2")
-    other = "manifest" if pmode == "symlink" else "symlink"
-    retired = swap_dir(path, staging, pointer_mode=other)
+    retired = swap_dir(path, staging)
     assert retired == path + ".v1" and os.path.isdir(retired)
-    assert _is_pointer(path, pmode)  # mode is sticky
+    assert _is_pointer(path)
     assert _read(path, "m") == "v2"
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_migrates_legacy_layout_and_heals_mid_migration(tmp_path, pmode):
     """A pre-existing real-directory table is adopted as .v1 on its
     first swap; a crash INSIDE the migration (dir renamed away, pointer
@@ -96,8 +91,8 @@ def test_swap_dir_migrates_legacy_layout_and_heals_mid_migration(tmp_path, pmode
     os.makedirs(staging)
     with open(os.path.join(staging, "data"), "w") as fh:
         fh.write("new")
-    retired = swap_dir(path, staging, pointer_mode=pmode)
-    assert _is_pointer(path, pmode)
+    retired = swap_dir(path, staging)
+    assert _is_pointer(path)
     assert retired == path + ".v1"
     with open(os.path.join(retired, "data")) as fh:
         assert fh.read() == "legacy"
@@ -108,14 +103,14 @@ def test_swap_dir_migrates_legacy_layout_and_heals_mid_migration(tmp_path, pmode
     assert _read(path, "data") == "new"  # newest version wins
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_prunes_unpromoted_orphans(tmp_path, pmode):
     """A crash between the staging rename and the pointer flip leaves
     an un-promoted orphan version; the next successful swap prunes it
     (its operation replays) and never promotes it by accident."""
     path, staging = str(tmp_path / "t"), str(tmp_path / "t.staging")
     os.makedirs(staging)
-    swap_dir(path, staging, pointer_mode=pmode)  # v1 current
+    swap_dir(path, staging)  # v1 current
     orphan = path + ".v7"  # crashed promote: renamed, never flipped
     os.makedirs(orphan)
     os.makedirs(staging)
@@ -127,7 +122,7 @@ def test_swap_dir_prunes_unpromoted_orphans(tmp_path, pmode):
     assert _read(path, "m") == "v8"
 
 
-@both_modes
+@symlink_pointer
 def test_concurrent_reader_never_sees_missing_or_half_table(tmp_path, pmode):
     """The r4 VERDICT ask: under a swap storm the table path must
     ALWAYS resolve to a complete version — no path-not-found window,
@@ -149,7 +144,7 @@ def test_concurrent_reader_never_sees_missing_or_half_table(tmp_path, pmode):
             fh.write(payloads[k])
         return staging
 
-    swap_dir(path, _stage(0), pointer_mode=pmode)
+    swap_dir(path, _stage(0))
     stop = threading.Event()
     errors: list[BaseException] = []
 
@@ -174,7 +169,7 @@ def test_concurrent_reader_never_sees_missing_or_half_table(tmp_path, pmode):
     assert _read(path, "data") == payloads[39]
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_heals_before_promoting(tmp_path, pmode):
     """A promote that follows a crashed promote must retire the
     RECOVERED state (not clobber it as a stale .old)."""
@@ -185,7 +180,7 @@ def test_swap_dir_heals_before_promoting(tmp_path, pmode):
     os.rename(path, path + ".old")  # crashed window
     staging = path + ".staging"
     os.makedirs(staging)
-    retired = swap_dir(path, staging, pointer_mode=pmode)
+    retired = swap_dir(path, staging)
     assert retired is not None
     with open(os.path.join(retired, "data")) as fh:
         assert fh.read() == "v1"
@@ -381,56 +376,25 @@ def test_compact_batches_refuses_mixed_keys(spark, tmp_path):
         idx.compact_batches(keep_last=1)
 
 
-@both_modes
+@symlink_pointer
 def test_legacy_old_heal_clears_stale_pointer(tmp_path, pmode):
-    """A stale pointer (dangling symlink / manifest whose target is
-    gone) at the table path must not make the legacy .old rollback
-    fail silently (r6 adversarial-review finding)."""
+    """A stale pointer (a dangling symlink) at the table path must not
+    make the legacy .old rollback fail silently (r6 adversarial-review
+    finding)."""
     path = str(tmp_path / "t")
     os.makedirs(path + ".old")
     with open(os.path.join(path + ".old", "data"), "w") as fh:
         fh.write("legacy")
-    if pmode == "symlink":
-        os.symlink(os.path.basename(path) + ".vgone", path)
-    else:
-        with open(path, "w") as fh:
-            fh.write(os.path.basename(path) + ".vgone")
+    os.symlink(os.path.basename(path) + ".vgone", path)
     assert recover_swap(path) is True
     with open(os.path.join(path, "data")) as fh:
         assert fh.read() == "legacy"
 
 
-def test_manifest_mode_spark_roundtrip_and_heal(spark, tmp_path):
-    """Manifest pointer mode must carry REAL Spark tables end to end:
-    write -> swap(pointer_mode='manifest') -> read via resolve() ->
-    re-swap -> read new state -> crash the pointer -> recover_swap ->
-    read again. This is the object-store-shaped protocol (the table
-    path is a plain file naming the current version dir)."""
-    path = str(tmp_path / "tbl")
-    staging = path + ".staging"
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    df1.write.mode("overwrite").parquet(staging)
-    assert swap_dir(path, staging, pointer_mode="manifest") is None
-    assert os.path.isfile(path)  # the pointer is a plain file
-    got = spark.read.parquet(resolve(path))
-    assert got.count() == 2
-
-    df2 = spark.createDataFrame([(3, "c")], "id long, v string")
-    df2.write.mode("overwrite").parquet(staging)
-    retired = swap_dir(path, staging)
-    assert retired is not None
-    assert spark.read.parquet(resolve(path)).count() == 1
-
-    # crash: pointer lost entirely; heal re-points at newest version
-    os.remove(path)
-    assert recover_swap(path) is True
-    assert spark.read.parquet(resolve(path)).count() == 1
-
-
 # ----------------------------------------------- multi-writer CAS contract
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_cas_deterministic_two_writer_interleave(tmp_path, pmode):
     """The optimistic-concurrency contract, interleaved by hand: A and
     B both read version N, both prepare staging; A commits; B's commit
@@ -443,7 +407,7 @@ def test_swap_dir_cas_deterministic_two_writer_interleave(tmp_path, pmode):
     os.makedirs(st0)
     with open(os.path.join(st0, "m"), "w") as fh:
         fh.write("base")
-    assert swap_dir_cas(path, st0, expected_version=0, pointer_mode=pmode) is None
+    assert swap_dir_cas(path, st0, expected_version=0) is None
     assert version_number(path) == 1 and _read(path, "m") == "base"
 
     # both writers read v1
@@ -466,7 +430,7 @@ def test_swap_dir_cas_deterministic_two_writer_interleave(tmp_path, pmode):
     assert version_number(path) == 3 and _read(path, "m") == "B"
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_cas_slot_claim_beats_stale_version_read(tmp_path, pmode):
     """The narrower race: B re-checks the version AFTER A's slot claim
     but BEFORE A's pointer flip (simulated by pre-claiming the slot).
@@ -477,7 +441,7 @@ def test_swap_dir_cas_slot_claim_beats_stale_version_read(tmp_path, pmode):
     path = str(tmp_path / "t")
     st0 = str(tmp_path / "st0")
     os.makedirs(st0)
-    assert swap_dir_cas(path, st0, expected_version=0, pointer_mode=pmode) is None
+    assert swap_dir_cas(path, st0, expected_version=0) is None
 
     # A claimed .v2 (complete, non-empty) but crashed before the flip
     os.makedirs(path + ".v2")
@@ -500,7 +464,7 @@ def test_swap_dir_cas_slot_claim_beats_stale_version_read(tmp_path, pmode):
     assert version_number(path) == 3 and _read(path, "m") == "B"
 
 
-@both_modes
+@symlink_pointer
 def test_swap_dir_cas_real_process_race(tmp_path, pmode):
     """TWO real processes race the same expected_version through a
     barrier: exactly one wins, the loser raises CASConflict, the final
@@ -513,7 +477,7 @@ def test_swap_dir_cas_real_process_race(tmp_path, pmode):
     path = str(tmp_path / "t")
     st0 = str(tmp_path / "st0")
     os.makedirs(st0)
-    assert swap_dir_cas(path, st0, expected_version=0, pointer_mode=pmode) is None
+    assert swap_dir_cas(path, st0, expected_version=0) is None
 
     def contender(tag: str, barrier, q) -> None:
         from dvmax_spark.fsops import CASConflict, swap_dir_cas
@@ -574,7 +538,8 @@ def _stagings(path: str) -> list[str]:
 def test_ensure_artifact_rebuilds_after_crash_before_swap(tmp_path):
     """A builder killed between its staging write and the swap leaves
     an orphan staging dir and the old meta: the old table keeps
-    serving, and the next call rebuilds instead of trusting it."""
+    serving, and the next call rebuilds instead of trusting it and
+    removes the orphan."""
     import multiprocessing as mp
 
     path = str(tmp_path / "cache" / "a")
@@ -597,6 +562,7 @@ def test_ensure_artifact_rebuilds_after_crash_before_swap(tmp_path):
     assert ensure_artifact(path, {"v": 2}, _dropper("3", calls)) is True
     assert calls == ["1", "3"]
     assert _read(path, "m") == "3" and read_artifact_meta(path) == {"v": 2}
+    assert _stagings(path) == []  # the dead builder's orphan is pruned
 
 
 def test_ensure_artifact_heals_crash_mid_swap_without_rebuild(tmp_path):
@@ -615,7 +581,7 @@ def test_ensure_artifact_heals_crash_mid_swap_without_rebuild(tmp_path):
 def test_ensure_artifact_rebuilds_on_corrupt_meta(tmp_path, bad):
     path = str(tmp_path / "a")
     assert ensure_artifact(path, {"v": 1}, _dropper("1")) is True
-    meta = os.path.join(resolve(path), "_meta.json")
+    meta = os.path.join(path, "_meta.json")
     if bad == "missing":
         os.remove(meta)
     else:
@@ -670,3 +636,19 @@ def test_ensure_artifact_real_process_race(tmp_path):
     assert [served for _, _, served in results] == [winner, winner]
     assert _read(path, "m") == winner and read_artifact_meta(path) == {"v": 1}
     assert _stagings(path) == []
+
+
+def test_promote_commits_meta_with_data_and_disposes_displaced(tmp_path):
+    """``promote`` is the one commit path: the meta lands in the same
+    version as the data, the displaced version and the staging dir are
+    removed, and ``remove_table`` deletes pointer and versions."""
+    from dvmax_spark.fsops import promote, remove_table
+
+    path = str(tmp_path / "t")
+    promote(path, _dropper("1"))
+    assert _read(path, "m") == "1" and read_artifact_meta(path) is None
+    promote(path, _dropper("2"), {"batch_id": 0})
+    assert _read(path, "m") == "2" and read_artifact_meta(path) == {"batch_id": 0}
+    assert sorted(os.listdir(tmp_path)) == ["t", os.readlink(path)]
+    remove_table(path)
+    assert os.listdir(tmp_path) == []

@@ -13,7 +13,12 @@ from tests.conftest import assert_query_matches_oracle
 # Queries rotated OUT of the evidence window after the default tier had
 # been checking them: a rotation moves evidence-window coverage, not
 # local coverage, so they keep their default-tier parity check.
-_ROTATED_OUT = {"x_bpe_pair_counts", "t_session_window", "x_audio_fp_dedup"}
+_ROTATED_OUT = {
+    "x_bpe_pair_counts",
+    "t_session_window",
+    "x_audio_fp_dedup",
+    "a_quartiles_distributed",
+}
 
 
 def _oracle_query_params():

@@ -786,3 +786,79 @@ def test_dedup_ingest_job_count(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
     assert jobs <= 28, jobs
+
+
+def _marker_sink_batch_jobs(spark, tmp_path, start) -> int:
+    """Jobs of ONE micro-batch merged into an existing marker-committed
+    table: a first drain creates the table from one file, then a second
+    file arrives and a second drain on the same checkpoint applies it.
+    Counted by the second run's id, the job group Structured Streaming
+    runs that micro-batch under."""
+    import datetime as dt
+    import os
+
+    schema = "k string, ts timestamp_ntz, v double"
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    day = dt.datetime(2024, 1, 1, 12)
+
+    def _drain(i: int):
+        rows = [
+            (f"k{j % 5}", day + dt.timedelta(days=j % 3), float(i * 10 + j))
+            for j in range(12)
+        ]
+        src = str(tmp_path / f"src{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        part = next(f for f in os.listdir(src) if f.endswith(".parquet"))
+        os.makedirs(in_dir, exist_ok=True)
+        os.replace(os.path.join(src, part), os.path.join(in_dir, f"{i:03d}.parquet"))
+        stream = spark.readStream.schema(schema).parquet(in_dir)
+        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        try:
+            q = start(stream, ckpt)
+            q.awaitTermination(120)
+        finally:
+            if prev is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        assert q.exception() is None
+        return q
+
+    _drain(0)
+    q = _drain(1)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def test_stream_into_cms_batch_job_count(spark, tmp_path):
+    """One CMS micro-batch into an existing sketch table: the batch
+    sketch, the read-merge-write of the table and the marker commit
+    cost a fixed handful of jobs."""
+    from dvmax_spark.streaming.ingest import stream_into_cms
+
+    path = str(tmp_path / "cms")
+    jobs = _marker_sink_batch_jobs(
+        spark,
+        tmp_path,
+        lambda stream, ckpt: stream_into_cms(
+            stream, path, "k", checkpoint_dir=ckpt, width=16, depth=2
+        ),
+    )
+    assert spark.read.parquet(path).groupBy("row").sum("counter").collect()[0][1] == 24
+    assert jobs <= 6, jobs
+
+
+def test_stream_into_rollup_batch_job_count(spark, tmp_path):
+    """One micro-batch into an existing continuous rollup: the marker
+    read, the delta aggregate, the merge with the stored partials and
+    the commit cost a fixed handful of jobs."""
+    from dvmax_spark.plans.rollup import ContinuousRollup, stream_into_rollup
+
+    roll = ContinuousRollup(spark, str(tmp_path / "roll"), "k", "ts", "v")
+    jobs = _marker_sink_batch_jobs(
+        spark,
+        tmp_path,
+        lambda stream, ckpt: stream_into_rollup(stream, roll, checkpoint_dir=ckpt),
+    )
+    assert roll.read().agg({"n": "sum"}).collect()[0][0] == 24
+    assert jobs <= 4, jobs

@@ -564,14 +564,14 @@ def test_marker_skips_guard_semantics(tmp_path):
 
     from dvmax_spark.streaming.ingest import _marker_skips
 
-    meta = str(tmp_path / "_meta.json")
-    assert _marker_skips(meta, 0, "t") is False  # no marker yet
-    with open(meta, "w") as fh:
+    table = str(tmp_path)
+    assert _marker_skips(table, 0, "t") is False  # no marker yet
+    with open(tmp_path / "_meta.json", "w") as fh:
         json.dump({"batch_id": 3}, fh)
-    assert _marker_skips(meta, 3, "t") is True  # legal replay
-    assert _marker_skips(meta, 4, "t") is False  # genuinely new
+    assert _marker_skips(table, 3, "t") is True  # legal replay
+    assert _marker_skips(table, 4, "t") is False  # genuinely new
     with pytest.raises(ValueError, match="older than the committed marker"):
-        _marker_skips(meta, 2, "t")
+        _marker_skips(table, 2, "t")
 
 
 def test_stream_into_cms_requires_checkpoint(spark):

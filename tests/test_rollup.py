@@ -57,7 +57,7 @@ def test_refresh_leaves_no_staging_residue(spark, tmp_path):
 
 
 def test_streaming_rollup_matches_full_recompute(spark, tmp_path):
-    from dvmax_spark.streaming.ingest import stream_into_rollup
+    from dvmax_spark.plans.rollup import stream_into_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", F.col("ts").cast("timestamp_ntz").alias("ts"), "event_type", "value"
@@ -87,7 +87,7 @@ def test_streaming_rollup_replayed_batch_is_skipped(spark, tmp_path):
     rollup state (_meta.json swaps inside the table dir), so a
     replayed batch — even after a crash right at the swap — is skipped
     instead of double-counted by the non-idempotent partial merge."""
-    from dvmax_spark.streaming.ingest import stream_into_rollup
+    from dvmax_spark.plans.rollup import stream_into_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", F.col("ts").cast("timestamp_ntz").alias("ts"), "event_type", "value"
@@ -167,3 +167,19 @@ def test_stream_into_rollup_exactly_once_and_replay_noop(spark, tmp_path):
         (r.grp, r.day): (r.n, round(r.sum_value, 2)) for r in roll.read().collect()
     }
     assert got2 == want
+
+
+def test_drop_removes_promoted_rollup(spark, tmp_path):
+    """``drop`` must delete a promoted table (a symlink to its version
+    dir), or a rollup re-created at the same path merges into the old
+    partials and double-counts."""
+    ev = load_table(spark, "events", "/root/testdata/sf0.001").limit(100)
+    path = str(tmp_path / "roll")
+    roll = ContinuousRollup(spark, path, "event_type", "ts", "value")
+    roll.refresh(ev)
+    roll.drop()
+    assert not roll.exists() and os.listdir(tmp_path) == []
+    roll.refresh(ev)
+    assert _norm(roll.read_partials().collect()) == _norm(
+        aggregate_delta(ev, "event_type", "ts", "value").collect()
+    )

@@ -6,16 +6,28 @@ aggregation, codegen spans, zero Python).
 tests/test_plans.py ASSERTS these properties; this artifact makes them
 reviewable without running Spark. Regenerate after plan-affecting
 changes: python tools/gen_plans.py
+
+    python tools/gen_plans.py --out <round> <suffix> [name ...]
+
+instead writes ``.explain("formatted")`` of every bench-flagged query
+(or just the named ones) to plans/<round>/<query>_<suffix>.txt, e.g.
+``--out r11 after``; ``suffix`` is ``before`` / ``after`` per an
+optimization round, and plan-diff claims in OPTIMIZATION_<round>.md
+are checked against these files. Both modes read
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, ROOT)
 
 
 def _plan_str(df, mode: str = "formatted") -> str:
@@ -48,16 +60,28 @@ def _props(simple: str, codegen: str) -> list[str]:
     return out
 
 
-def main() -> None:
+def _write_round_plans(spark, sf_dir: str, rnd: str, suffix: str, names: list[str]):
+    """plans/<rnd>/<query>_<suffix>.txt for the bench queries or ``names``."""
     from dvmax_spark.registry import all_queries
-    from dvmax_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("gen_plans")
+    qs = all_queries()
+    specs = {n: qs[n] for n in names or [n for n, s in qs.items() if s.bench]}
+    out_dir = os.path.join(ROOT, "plans", rnd)
+    os.makedirs(out_dir, exist_ok=True)
+    for name, spec in specs.items():
+        plan = _plan_str(spec.fn(spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+
+
+def _write_plans_md(spark, sf_dir: str) -> None:
+    from dvmax_spark.registry import all_queries
+
     sha = subprocess.run(
         ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True
     ).stdout.strip()
-
     # bench set + the non-bench operators whose plan shape carries the
     # 100 TB story (training-data pipeline, clustering, ANN, funnels)
     EXTRA = (
@@ -111,10 +135,30 @@ def main() -> None:
         lines.append(simple.strip()[:4000])
         lines.append("```")
         lines.append("")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(specs)} queries)")
+
+
+def main() -> None:
+    from dvmax_spark.session import get_spark
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--out",
+        nargs="+",
+        metavar=("ROUND SUFFIX", "NAME"),
+        help="write plans/ROUND/<query>_SUFFIX.txt instead of PLANS.md",
+    )
+    args = ap.parse_args()
+    if args.out is not None and len(args.out) < 2:
+        ap.error("--out needs ROUND SUFFIX [NAME ...]")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("gen_plans")
+    if args.out:
+        _write_round_plans(spark, sf_dir, args.out[0], args.out[1], args.out[2:])
+    else:
+        _write_plans_md(spark, sf_dir)
     spark.stop()
 
 
