@@ -1,12 +1,11 @@
 """Crash-safe table-promote primitives. Every table the package
-replaces as a whole commits through :func:`promote` (``ContinuousRollup``,
-``IncrementalJoinMV.compact``, ``MinHashIndex.compact``/
-``compact_batches``, the streaming component labels, the streaming
-marker-merge sinks) or through :func:`ensure_artifact`, the one build
-protocol of the fingerprinted cache artifacts (the near-dup pair graph,
-its component labels and the src0 MinHash index), which calls
-:func:`promote`. ``FeatureStore._swap_in`` calls :func:`swap_dir`
-itself, because it adopts displaced versions into its snapshot log.
+replaces as a whole commits through :func:`promote` (the FeatureStore's
+tables, ``ContinuousRollup``, ``IncrementalJoinMV.compact``,
+``MinHashIndex.compact``/``compact_batches``, the streaming component
+labels, the streaming marker-merge sinks) or through
+:func:`ensure_artifact`, the one build protocol of the fingerprinted
+cache artifacts (the near-dup pair graph, its component labels and the
+src0 MinHash index), which calls :func:`promote`.
 
 Layout: the table path is a SYMLINK to a sibling versioned
 directory — ``tbl -> tbl.v3`` — and a promote is
@@ -18,9 +17,9 @@ Step 2's rename atomically REPLACES the old symlink (POSIX rename onto
 an existing link), so there is no instant at which the table path fails
 to resolve to a complete version, and no reader can mis-heal an
 in-flight promote. The displaced version directory is returned still
-on disk; the caller disposes of it (delete, or rename into a snapshot
-log) only AFTER the promote, so at every crash point some complete
-version holds the pre-promote state.
+on disk; the caller disposes of it (deletes it, or keeps it as a
+retained version) only AFTER the promote, so at every crash point some
+complete version holds the pre-promote state.
 
 Everything reads *through* the symlink (``os.path.isdir``, Spark's
 parquet reader, in-table ``_meta.json`` markers, partition-dir
@@ -35,6 +34,9 @@ Crash matrix:
   new dir is an un-promoted orphan. The caller's replay re-runs the
   batch (its commit marker never swapped in) and promotes the next
   version number; orphans are pruned on the next successful swap.
+* crash after step 2, before the caller disposes of the displaced
+  version: it stays on disk as an ordinary older version, kept or
+  removed by the next swap's ``keep``.
 * crash inside the legacy migration (path renamed away, pointer not
   yet created): ``recover_swap`` re-points at the newest version.
 * pre-migration legacy crash (state stranded in ``.old``):
@@ -43,10 +45,13 @@ Crash matrix:
 Concurrent READERS on the same filesystem always resolve a complete
 table. Deleting the displaced version while a reader is mid-scan is
 the standard snapshot-retention race (what Delta's VACUUM documents);
-callers that need concurrent long scans keep the displaced dir (the
-FeatureStore renames it into its snapshot log). WRITERS stay
-single-process per table (:func:`swap_dir_cas` is the multi-writer
-form).
+callers that need concurrent long scans keep displaced versions
+(``promote(keep=)``; the FeatureStore's snapshots). WRITERS stay
+single-process per table.
+
+SCRATCH (:func:`scratch_path`): the working dirs of queries that stage
+files (streamed input slices, checkpoints, maintained tables, fixtures)
+live under one per-process root that is removed at interpreter exit.
 
 FINGERPRINTED ARTIFACTS (:func:`ensure_artifact`): a cache table whose
 validity is its ``_meta.json`` — written inside the staging dir before
@@ -61,10 +66,12 @@ the expected one means stale: rebuild, never serve.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
 import shutil
+import tempfile
 import uuid
 from typing import Callable
 
@@ -73,6 +80,24 @@ _ARTIFACT_META = "_meta.json"
 _POINTER_TMP = ".lnk"
 _STAGING = ".staging."
 _VER_RE = re.compile(r"^\.v(\d+)$")
+_SCRATCH: dict[int, str] = {}  # pid -> this process's scratch root
+
+
+def scratch_path(name: str) -> str:
+    """``<root>/<name>`` under this process's scratch root, which is
+    made on first use and removed at interpreter exit (module doc:
+    SCRATCH). The same name maps to the same path for the life of the
+    process; the path itself is not created."""
+    pid = os.getpid()
+    if pid not in _SCRATCH:  # first use, or a forked child
+        _SCRATCH[pid] = tempfile.mkdtemp(prefix=f"dvmax_{pid}_")
+        atexit.register(_remove_scratch, pid)
+    return os.path.join(_SCRATCH[pid], name)
+
+
+def _remove_scratch(pid: int) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(_SCRATCH[pid], ignore_errors=True)
 
 
 def list_versions(path: str) -> dict[int, str]:
@@ -146,116 +171,19 @@ def recover_swap(path: str) -> bool:
     return True
 
 
-def version_number(path: str) -> int:
-    """The version number the table pointer currently serves
-    (``tbl -> tbl.v3`` → 3), or 0 when no table exists yet. Raises on a
-    legacy real-dir table — migrate via :func:`swap_dir` first."""
-    if os.path.isdir(path) and not os.path.islink(path):
-        raise ValueError(f"{path}: legacy real-dir table has no version pointer")
-    cur = current_version_dir(path)
-    if cur is None:
-        return 0
-    m = _VER_RE.match(cur[len(path):])
-    if not m:
-        raise ValueError(f"{path}: pointer target {cur!r} is not a version dir")
-    return int(m.group(1))
-
-
-class CASConflict(RuntimeError):
-    """Another writer promoted first; re-read the table and retry."""
-
-
-def _flip_monotonic(path: str, new_dir: str) -> None:
-    """Flip the table pointer to ``new_dir`` iff that ADVANCES the
-    version. Serialized by a sibling flock so a lagging writer's
-    forward-heal (see :func:`swap_dir_cas`) can never race a fresher
-    writer's flip into moving the pointer backwards. On an object
-    store the equivalent is a conditional put of the pointer object
-    keyed on its generation — the same monotonicity rule."""
-    import fcntl
-
-    m = _VER_RE.match(new_dir[len(path):])
-    target_n = int(m.group(1)) if m else 0
-    with open(path + ".ptrlock", "a") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            if version_number(path) < target_n:
-                _point(path, new_dir)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-
-
-def swap_dir_cas(path: str, staging: str, expected_version: int) -> str | None:
-    """MULTI-WRITER conditional promote: succeed iff the table is still
-    at ``expected_version`` (0 = no table yet), else raise
-    :class:`CASConflict` with ``staging`` left intact for the caller's
-    retry. This is the optimistic-concurrency contract of a Delta /
-    Iceberg commit: read version N, prepare, commit N+1 conditionally.
-
-    The commit point is ONE exclusive claim of the ``.v{N+1}`` slot —
-    ``os.rename(staging, tbl.vN+1)``, which the filesystem rejects when
-    the slot is already a (necessarily non-empty) version directory —
-    the local-POSIX analog of an object store's conditional put /
-    if-none-match. Exactly one of any number of racing writers wins the
-    slot; losers raise before touching the pointer, so the pointer can
-    never move backwards (the lost-update anomaly an unconditional
-    :func:`swap_dir` race would allow). The winner then flips the
-    pointer. A writer can only claim N+1 after observing version N,
-    which exists only after the N-claimant's flip (or a heal of its
-    crash), so pointer flips are serialized by the version chain itself.
-
-    In THIS protocol the slot claim is the commit and the pointer is a
-    cache of "current": a loser that collides with a claimed slot heals
-    the pointer FORWARD onto the claimant's (necessarily complete)
-    version before raising, so a claimant crash between claim and flip
-    can never livelock retrying writers — and every flip goes through
-    a monotonic guard (:func:`_flip_monotonic`), so a lagging heal can
-    never move a fresher pointer backwards. Consequently a table must
-    not mix :func:`swap_dir` (which treats an unflipped version as a
-    discardable orphan) and :func:`swap_dir_cas` (which treats it as
-    committed) as concurrent writers.
-
-    On an actual object store, replace the rename with a conditional
-    put of the pointer object keyed on its ETag/generation — the shape
-    of this function is deliberately that call."""
-    recover_swap(path)
-    cur = version_number(path)
-    if cur != expected_version:
-        raise CASConflict(
-            f"{path}: expected v{expected_version}, found v{cur} — "
-            "another writer promoted first; re-read and retry"
-        )
-    new_dir = f"{path}.v{expected_version + 1}"
-    try:
-        os.rename(staging, new_dir)  # the exclusive commit point
-    except OSError as exc:
-        if os.path.isdir(new_dir):
-            # slot already committed by a writer that hasn't flipped
-            # (or crashed pre-flip): serve its version so our caller's
-            # re-read sees the winner, not a stale pointer
-            _flip_monotonic(path, new_dir)
-        raise CASConflict(
-            f"{path}: version slot v{expected_version + 1} already "
-            "claimed by a concurrent writer"
-        ) from exc
-    displaced = current_version_dir(path)
-    _flip_monotonic(path, new_dir)
-    return displaced
-
-
-def swap_dir(path: str, staging: str, prune_strays: bool = True) -> str | None:
+def swap_dir(path: str, staging: str, keep: int = 0) -> str | None:
     """Promote ``staging`` to ``path`` (heals a crashed swap first).
     The displaced version directory is returned still on disk (``None``
-    when no table existed); the CALLER disposes of it — ``rmtree`` it,
-    or rename it into a snapshot log — so history is only deleted after
-    the new state is fully promoted.
+    when no table existed); the CALLER disposes of it, so history is
+    only deleted after the new state is fully promoted.
 
-    ``prune_strays`` (default) removes other leftover version dirs —
-    un-promoted orphans from a crash after step 1, or a displaced dir a
-    crashed caller never disposed. Callers that ADOPT displaced dirs
-    (the FeatureStore's snapshot log) pass False and sweep strays
-    themselves, so a crash between their swap and the adoption rename
-    can never silently delete a version they meant to keep."""
+    Of the other version dirs, the newest ``keep`` that the table once
+    served (numbered at or below the displaced one) stay as retained
+    history; every other one is removed — un-promoted orphans from a
+    crash after step 1 (numbered above it), and a displaced dir a
+    crashed caller never disposed once it falls out of the newest
+    ``keep``. ``staging`` may itself be a retained version dir: it is
+    renamed to the next number, so a version id is never reused."""
     recover_swap(path)
     # a stale legacy '.old' is fully superseded once a promote succeeds;
     # clearing it here keeps recover_swap from ever resurrecting it
@@ -278,13 +206,15 @@ def swap_dir(path: str, staging: str, prune_strays: bool = True) -> str | None:
         _point(path, legacy)
         vers[nmax] = legacy
     displaced = current_version_dir(path)
+    served = next((n for n, d in vers.items() if d == displaced), 0)
     new_dir = f"{path}.v{nmax + 1}"
     os.rename(staging, new_dir)
     _point(path, new_dir)  # the one atomic pointer flip
-    if prune_strays:
-        for d in vers.values():
-            if d != displaced and d != new_dir:
-                shutil.rmtree(d, ignore_errors=True)
+    vers = list_versions(path)
+    kept = sorted((n for n in vers if n <= served), reverse=True)[:keep]
+    for n, d in vers.items():
+        if d != displaced and d != new_dir and n not in kept:
+            shutil.rmtree(d, ignore_errors=True)
     return displaced
 
 
@@ -312,7 +242,10 @@ def read_artifact_meta(path: str) -> dict | None:
 
 
 def promote(
-    path: str, write: Callable[[str], None], meta: dict | None = None
+    path: str,
+    write: Callable[[str], None],
+    meta: dict | None = None,
+    keep: int = 0,
 ) -> None:
     """Replace table ``path`` with a complete new version, the one
     commit path of every whole-table rewrite in the package (module
@@ -320,8 +253,10 @@ def promote(
     per-process unique staging dir; ``meta``, when given, is dumped as
     ``_meta.json`` inside it, so data and meta commit in the same
     pointer flip (:func:`swap_dir`, which heals a crashed promote
-    first). The staging dir is removed whatever happens, and the
-    displaced version once the new one serves.
+    first). The staging dir is removed whatever happens. The displaced
+    version is removed once the new one serves, unless ``keep`` retains
+    it: the newest ``keep`` older versions stay on disk as
+    ``<path>.v<n>`` (the FeatureStore's snapshots).
 
     A ``write`` that raises leaves the previous table serving; a
     process killed before the flip leaves the previous table (with its
@@ -333,10 +268,10 @@ def promote(
         if meta is not None:
             with open(os.path.join(staging, _ARTIFACT_META), "w") as fh:
                 json.dump(meta, fh)
-        retired = swap_dir(path, staging)
+        retired = swap_dir(path, staging, keep)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    if retired:
+    if retired and not keep:
         shutil.rmtree(retired, ignore_errors=True)
     _prune_dead_stagings(path)
 

@@ -48,6 +48,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from dvmax_spark.operators.distrank import with_exact_ntile
+from dvmax_spark.fsops import scratch_path
 
 BATCH_COL = "_batch"
 
@@ -331,7 +332,7 @@ def run_join_mv_stream(
     from pyspark.sql import Window
 
     run_id = uuid.uuid4().hex[:12]
-    base = base_dir or f"/tmp/dvmax_joinmv_stream_{os.getpid()}_{run_id}"
+    base = base_dir or scratch_path(f"joinmv_stream_{run_id}")
     in_dir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(in_dir, exist_ok=True)

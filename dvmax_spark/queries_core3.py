@@ -5,13 +5,11 @@ rows-only: sinks aren't SQL-expressible)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.functions.scalar import clip_cap, has_flag, is_finite, slug
 from dvmax_spark.registry import query
 
@@ -170,9 +168,7 @@ def a11_mergeschema_union(spark: SparkSession, sf: str) -> DataFrame:
     plain SQL union — a real on-disk schema-evolution round trip, not
     just unionByName."""
     li = load_table(spark, "lineitem", sf)
-    out = os.path.join(
-        tempfile.gettempdir(), f"dvmax_mergeschema_union_{sf.strip('/').replace('/', '_')}_{os.getpid()}"
-    )
+    out = scratch_path(f"mergeschema_union_{sf.strip('/').replace('/', '_')}")
     a = li.where((F.col("l_linenumber") == 1) & (F.col("l_orderkey") < 2000)).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -211,9 +207,7 @@ def s2_parquet_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     is lossless (counts AND values, cents-exact integer sums — no
     float-summation-order drift)."""
     li = load_table(spark, "lineitem", sf)
-    out = os.path.join(
-        tempfile.gettempdir(), f"dvmax_sink_roundtrip_{sf.strip('/').replace('/', '_')}_{os.getpid()}"
-    )
+    out = scratch_path(f"sink_roundtrip_{sf.strip('/').replace('/', '_')}")
     a = li.where(F.col("l_orderkey") % 7 == 0).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -262,10 +256,7 @@ def s13_format_matrix(spark: SparkSession, sf: str) -> DataFrame:
     engine built-ins: columnar ORC keeps predicate pushdown/column
     pruning; JSONL is the interchange path."""
     ev = load_table(spark, "events", sf).select("event_id", "user_id", "value")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"dvmax_format_matrix_{sf.strip('/').replace('/', '_')}_{os.getpid()}",
-    )
+    base = scratch_path(f"format_matrix_{sf.strip('/').replace('/', '_')}")
     orc_path, json_path = base + "_orc", base + "_jsonl"
     ev.write.mode("overwrite").option("compression", "zstd").orc(orc_path)
     ev.write.mode("overwrite").json(json_path)
@@ -361,7 +352,6 @@ def s5_pyds_stream(spark: SparkSession, sf: str) -> DataFrame:
     drained sink must reproduce the batch connector's feed EXACTLY, so
     the same cents-exact SQL oracle checks it (streaming-vs-batch
     equivalence, hash-checked)."""
-    import tempfile
     import time
     import uuid
 
@@ -377,7 +367,7 @@ def s5_pyds_stream(spark: SparkSession, sf: str) -> DataFrame:
     )
     import shutil
 
-    ckpt = tempfile.mkdtemp(prefix="pyds_ckpt_")
+    ckpt = scratch_path(f"pyds_ckpt_{uuid.uuid4().hex[:8]}")
     q = (
         stream.writeStream.format("memory")
         .queryName(qn)

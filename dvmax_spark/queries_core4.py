@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.operators.distrank import with_exact_ntile, with_hash_slice
 from dvmax_spark.registry import query
 
@@ -552,17 +553,12 @@ def a_continuous_rollup(spark: SparkSession, sf: str) -> DataFrame:
     rollup from the full raw table in one shot — a hash match proves
     delta-merge maintenance converges to the full recompute, i.e. the
     incremental path can replace the year-rescan at 100 TB."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as _W
 
     from dvmax_spark.plans.rollup import ContinuousRollup
 
     ev = load_table(spark, "events", sf)
-    path = os.path.join(
-        _tf.gettempdir(),
-        f"dvmax_rollup_{sf.strip('/').replace('/', '_')}_{os.getpid()}",
-    )
+    path = scratch_path(f"rollup_{sf.strip('/').replace('/', '_')}")
     roll = ContinuousRollup(spark, path, "event_type", "ts", "value")
     roll.drop()
     # time-contiguous exact slices, NOT hash slices: the rollup
@@ -1635,8 +1631,6 @@ def j_incremental_join_mv(spark: SparkSession, sf: str) -> DataFrame:
     the complete re-join, i.e. each (a-batch, b-batch) pair is joined
     exactly once across the refresh history. Aggregates are integer
     cents so distributed-sum order can't move a rounding boundary."""
-    import tempfile as _tf
-
     from dvmax_spark.plans.join_mv import IncrementalJoinMV
 
     orders = load_table(spark, "orders", sf).select(
@@ -1645,10 +1639,7 @@ def j_incremental_join_mv(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, "customer", sf).select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    path = os.path.join(
-        _tf.gettempdir(),
-        f"dvmax_joinmv_{sf.strip('/').replace('/', '_')}_{os.getpid()}",
-    )
+    path = scratch_path(f"joinmv_{sf.strip('/').replace('/', '_')}")
     mv = IncrementalJoinMV(spark, path, key="custkey")
     mv.drop()
     o_sliced = with_hash_slice(orders, ["o_orderkey"], 3, "_b")
@@ -1703,8 +1694,6 @@ def j_join_mv_updates(spark: SparkSession, sf: str) -> DataFrame:
     rewrite. The oracle joins the post-correction tables one-shot; a
     hash match proves the counting-IVM algebra lands on exactly the
     corrected state."""
-    import tempfile as _tf
-
     from dvmax_spark.plans.join_mv import IncrementalJoinMV
 
     orders = load_table(spark, "orders", sf).select(
@@ -1713,10 +1702,7 @@ def j_join_mv_updates(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, "customer", sf).select(
         F.col("c_custkey").alias("custkey"), F.col("c_mktsegment").alias("seg")
     )
-    path = os.path.join(
-        _tf.gettempdir(),
-        f"dvmax_joinmvu_{sf.strip('/').replace('/', '_')}_{os.getpid()}",
-    )
+    path = scratch_path(f"joinmvu_{sf.strip('/').replace('/', '_')}")
     mv = IncrementalJoinMV(spark, path, key="custkey", mult_col="mult")
     mv.drop()
     one = F.lit(1).cast("long")
@@ -1854,7 +1840,6 @@ def t_stream_rollup(spark: SparkSession, sf: str) -> DataFrame:
     data — plans/rollup.py:stream_into_rollup). The oracle
     aggregates the full raw table one shot: a hash match proves the
     streamed partial-merge path converges to the batch recompute."""
-    import tempfile as _tf
     import uuid as _uuid
 
     from dvmax_spark.plans.rollup import ContinuousRollup, stream_into_rollup
@@ -1866,7 +1851,7 @@ def t_stream_rollup(spark: SparkSession, sf: str) -> DataFrame:
         "value",
     )
     run_id = _uuid.uuid4().hex[:10]
-    base = os.path.join(_tf.gettempdir(), f"dvmax_rollup_stream_{os.getpid()}_{run_id}")
+    base = scratch_path(f"rollup_stream_{run_id}")
     in_dir = os.path.join(base, "in")
     os.makedirs(in_dir, exist_ok=True)
     staged = with_hash_slice(ev, ["event_id"], 3, "_b")

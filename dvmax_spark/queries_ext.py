@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.ext.dedup import (
     NearDupGraph,
     dedup_clusters,
@@ -482,7 +483,6 @@ def t_stream_components(spark: SparkSession, sf: str) -> DataFrame:
     batch x_dedup_clusters recursive CTE, value-exact."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
     import uuid as _uuid
 
     from dvmax_spark.ext.dedup import MinHashIndex, _cluster_output
@@ -490,7 +490,7 @@ def t_stream_components(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf)
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(_tf.gettempdir(), f"dvmax_cc_{_os.getpid()}_{run_id}")
+    base = scratch_path(f"cc_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     staged = with_hash_slice(docs, ["doc_id"], 3, "_b")

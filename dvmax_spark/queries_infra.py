@@ -8,13 +8,14 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.registry import query
 
 
@@ -116,7 +117,8 @@ def s4_pipeline_infra(spark: SparkSession, sf: str) -> DataFrame:
     and prefix counts are fixture constants the oracle pins."""
     from dvmax_spark.sources.files import read_ticker_universe
 
-    tmp = tempfile.mkdtemp(prefix="dvmax_infra_")
+    tmp = scratch_path(f"infra_{uuid.uuid4().hex[:8]}")
+    os.makedirs(tmp)
     # S4: universe text file
     with open(os.path.join(tmp, "tickers.txt"), "w") as f:
         f.write("aapl\nmsft\n msft \nBAD TICKER!\n")
@@ -178,9 +180,7 @@ def s_corrupt_json_recovery(spark: SparkSession, sf: str) -> DataFrame:
     convention for fixture-backed infra queries). At 100 TB this is the
     difference between one bad upstream file killing the nightly run
     and a quarantine table you triage in the morning."""
-    fixture_dir = os.path.join(
-        tempfile.gettempdir(), f"dvmax_corrupt_{os.getpid()}_{abs(hash(sf)) % 10**8}"
-    )
+    fixture_dir = scratch_path(f"corrupt_{abs(hash(sf)) % 10**8}")
     os.makedirs(fixture_dir, exist_ok=True)
     with open(os.path.join(fixture_dir, "data.jsonl"), "w") as f:
         f.write('{"id": 1, "v": 10.5, "name": "ok"}\n')

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.registry import query
 from dvmax_spark.operators.distrank import with_hash_slice
 
@@ -121,12 +122,10 @@ def x_ivf_index_probe(spark: SparkSession, sf: str) -> DataFrame:
     partition filter — parquet partition pruning is the inverted-list
     seek. Rows-only (seeded KMeans quantizer); recall + pruning are
     property-tested (tests/test_ext.py)."""
-    import os as _os
-
     from dvmax_spark.ext.similarity import IVFIndex
 
     emb = load_table(spark, "embeddings", sf)
-    path = f"/tmp/dvmax_ivfidx_{_os.getpid()}_{abs(hash(sf)) % 10**8}"
+    path = scratch_path(f"ivfidx_{abs(hash(sf)) % 10**8}")
     idx = IVFIndex(spark, path, n_clusters=8)
     idx.build(emb)
     return idx.probe(emb.where(F.col("vec_id") < 10), k=3, nprobe=2).orderBy(
@@ -145,7 +144,6 @@ def t_stream_ivf(spark: SparkSession, sf: str) -> DataFrame:
     by tests/test_streaming.py."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
     import uuid as _uuid
 
     from dvmax_spark.ext.similarity import IVFIndex
@@ -155,7 +153,7 @@ def t_stream_ivf(spark: SparkSession, sf: str) -> DataFrame:
     n = emb.count()
     half = n // 2
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(_tf.gettempdir(), f"dvmax_ivf_stream_{_os.getpid()}_{run_id}")
+    base = scratch_path(f"ivf_stream_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     later = emb.where(F.col("vec_id") >= half)
@@ -216,7 +214,6 @@ def t_stream_cms(spark: SparkSession, sf: str) -> DataFrame:
     slicing. A streaming query with a value-exact SQL oracle."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
     import uuid as _uuid
 
     from pyspark.sql import Window as _W
@@ -230,7 +227,7 @@ def t_stream_cms(spark: SparkSession, sf: str) -> DataFrame:
         "user_id",
     )
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(_tf.gettempdir(), f"dvmax_cms_stream_{_os.getpid()}_{run_id}")
+    base = scratch_path(f"cms_stream_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     staged = with_hash_slice(ev, ["event_id"], 3, "_b")
@@ -450,8 +447,6 @@ def a_hll_sketch_rollup(spark: SparkSession, sf: str) -> DataFrame:
     instead of the raw events. No SQL oracle (DataSketches HLL is
     engine-specific); the exact count rides along in the output and
     tests/test_ext.py asserts the estimate lands within 5%."""
-    import os as _os
-
     from dvmax_spark.ext.sketches import (
         daily_distinct_sketches,
         rollup_distinct_from_sketches,
@@ -459,7 +454,7 @@ def a_hll_sketch_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
     ev = load_table(spark, "events", sf)
     daily = daily_distinct_sketches(ev, "event_type", "ts", "user_id")
-    path = f"/tmp/dvmax_hll_{_os.getpid()}_{abs(hash(sf)) % 10**8}"
+    path = scratch_path(f"hll_{abs(hash(sf)) % 10**8}")
     daily.write.mode("overwrite").parquet(path)
     rolled = rollup_distinct_from_sketches(spark.read.parquet(path), "event_type")
     exact = ev.groupBy("event_type").agg(
@@ -571,8 +566,6 @@ def a_kll_quantile_rollup(spark: SparkSession, sf: str) -> DataFrame:
     raw events; the sketch path touches |groups|x|days| rows. No SQL
     oracle (DataSketches KLL is engine-specific); exact values ride
     along and tests assert the rank-error envelope."""
-    import os as _os
-
     from dvmax_spark.ext.sketches import (
         daily_quantile_sketches,
         rollup_quantiles_from_sketches,
@@ -580,7 +573,7 @@ def a_kll_quantile_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
     ev = load_table(spark, "events", sf)
     daily = daily_quantile_sketches(ev, "event_type", "ts", "value")
-    path = f"/tmp/dvmax_kll_{_os.getpid()}_{abs(hash(sf)) % 10**8}"
+    path = scratch_path(f"kll_{abs(hash(sf)) % 10**8}")
     daily.write.mode("overwrite").parquet(path)
     rolled = rollup_quantiles_from_sketches(
         spark.read.parquet(path), "event_type", quantiles=(0.5, 0.9)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.ext.retrieval import (
     block_dedup_stats,
     block_dedup_stats_sql,
@@ -157,7 +158,6 @@ def t_stream_substr_decontam(spark: SparkSession, sf: str) -> DataFrame:
     batch SQL: a hash match proves the ingest-time form is value-exact."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
     import uuid as _uuid
 
     from pyspark.sql import Window as _W
@@ -169,9 +169,7 @@ def t_stream_substr_decontam(spark: SparkSession, sf: str) -> DataFrame:
     ref = docs.where(F.col("source") == "src0")
     new = docs.where(F.col("source") != "src0")
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(
-        _tf.gettempdir(), f"dvmax_substr_{_os.getpid()}_{run_id}"
-    )
+    base = scratch_path(f"substr_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     idx = GramIndex(spark, _os.path.join(base, "grams"), n=8)
@@ -369,7 +367,6 @@ def t_stream_bm25(spark: SparkSession, sf: str) -> DataFrame:
     one-shot batch BM25 SQL: a hash match proves index-maintained
     scoring is value-exact regardless of micro-batch slicing."""
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
 
     from pyspark.sql import Window as _W
@@ -379,7 +376,7 @@ def t_stream_bm25(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf)
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(_tf.gettempdir(), f"dvmax_bm25_{_os.getpid()}_{run_id}")
+    base = scratch_path(f"bm25_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     staged = with_hash_slice(docs, ["doc_id"], 3, "_b")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dvmax_spark.catalog import load_table
+from dvmax_spark.fsops import scratch_path
 from dvmax_spark.ext.traindata import (
     contaminated_ids,
     contamination_overlap,
@@ -332,7 +333,6 @@ def t_stream_decontam(spark: SparkSession, sf: str) -> DataFrame:
     micro-batch slicing."""
     import os as _os
     import shutil as _sh
-    import tempfile as _tf
     import uuid as _uuid
 
     from dvmax_spark.streaming.decontam_ingest import (
@@ -344,9 +344,7 @@ def t_stream_decontam(spark: SparkSession, sf: str) -> DataFrame:
     ev = docs.where(F.col("source") == "src0")
     tr = docs.where(F.col("source") != "src0")
     run_id = _uuid.uuid4().hex[:10]
-    base = _os.path.join(
-        _tf.gettempdir(), f"dvmax_decontam_{_os.getpid()}_{run_id}"
-    )
+    base = scratch_path(f"decontam_{run_id}")
     in_dir = _os.path.join(base, "in")
     _os.makedirs(in_dir, exist_ok=True)
     build_eval_grams(ev, _os.path.join(base, "ev_grams"), n=5)

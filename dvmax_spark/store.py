@@ -7,12 +7,13 @@ Re-expresses the reference's storage layer on Spark conventions:
   per-ticker files `{TICKER}.parquet`         | ONE table partitioned by
   (ticker_batch_runner.py:136-139, 166-167)   | key col (partition pruning
                                               | replaces per-file touch)
-  concat + unique(keep="last") upsert (:310)  | upsert_keep_last + dynamic
-                                              | partition overwrite
+  concat + unique(keep="last") upsert (:310)  | upsert_keep_last, then
+                                              | one whole-table promote
   skip already-materialized dates (:433-443)  | left-anti join on keys
   superset-schema merge scan (:527-548)       | mergeSchema read +
                                               | align_and_union
-  atomic temp-file replace (:352-361)         | Spark job-commit protocol
+  atomic temp-file replace (:352-361)         | fsops.promote: staging dir
+                                              | + atomic pointer flip
   `_audit/` flagged-row text files (:396-401) | quarantine parquet table
   zstd + round(2)->Float32 compaction (:190)  | zstd + round_downcast at
                                               | the write edge only
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from dvmax_spark.fsops import (
     current_version_dir,
     list_versions,
+    promote,
     recover_swap,
     swap_dir,
 )
@@ -66,111 +68,49 @@ class FeatureStore:
     def quarantine_path(self) -> str:
         return os.path.join(self.root, "_audit")
 
-    @property
-    def snapshots_path(self) -> str:
-        return os.path.join(self.root, "_snapshots")
-
     # ------------------------------------------------------- snapshots
     def snapshots(self) -> list[int]:
-        """Retained snapshot versions, oldest first."""
-        if not os.path.isdir(self.snapshots_path):
-            return []
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(self.snapshots_path)
-            if d.startswith("v") and d[1:].isdigit()
-        )
+        """Retained snapshot versions, oldest first: the version dirs
+        ``main.v<n>`` below the one the table serves. Every promote
+        keeps the newest ``keep_snapshots`` of them; the current
+        version is always the highest, so an id is never reused."""
+        cur = current_version_dir(self.main_path)
+        vers = list_versions(self.main_path)
+        served = next((n for n, d in vers.items() if d == cur), 0)
+        return sorted(n for n in vers if n < served)
+
+    def _snapshot_dir(self, version: int) -> str:
+        have = self.snapshots()
+        if version not in have:
+            raise ValueError(f"snapshot v{version} not retained (have {have})")
+        return f"{self.main_path}.v{version}"
 
     def read_version(self, version: int) -> DataFrame:
-        """Time-travel read of a retained snapshot (the table state
-        BEFORE the swap that created version ``version``)."""
-        path = os.path.join(self.snapshots_path, f"v{version}")
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"snapshot v{version} not retained (have {self.snapshots()})"
-            )
+        """Time-travel read of retained snapshot ``version`` (the table
+        state that version held when a later one displaced it)."""
+        path = self._snapshot_dir(version)
         return self.spark.read.option("mergeSchema", "true").parquet(path)
 
     def restore(self, version: int) -> None:
-        """Roll the main table back to snapshot ``version`` (the
-        snapshot directory is PROMOTED by rename; the displaced current
-        state becomes a new snapshot, so restore is itself undoable)."""
-        src = os.path.join(self.snapshots_path, f"v{version}")
-        if not os.path.isdir(src):
-            raise ValueError(
-                f"snapshot v{version} not retained (have {self.snapshots()})"
-            )
-        self._swap_in(src, snapshot_current=True)
-
-    def _swap_in(self, staging: str, snapshot_current: bool | None = None) -> None:
-        """Atomic promote of ``staging`` to main. The displaced current
-        version is RENAMED into the snapshot log (zero data copy) when
-        snapshots are enabled, else deleted; retention prunes the log
-        to ``keep_snapshots`` entries. The promote is fsops.swap_dir's
-        versioned-dir + atomic-pointer-flip protocol: no crash point
-        loses state AND the table path never stops resolving to a
-        complete version, so concurrent readers never see
-        path-not-found (the old two-rename layout's window). Writers
-        stay single-process per table; true multi-writer atomicity
-        would need a manifest layer (Delta/Iceberg-style), out of
-        scope here."""
-        keep = self.keep_snapshots if snapshot_current is None else (
-            max(self.keep_snapshots, 1) if snapshot_current else 0
-        )
-        # Sweep version dirs stranded by a crash between a prior swap
-        # and its snapshot-log rename BEFORE promoting: versions older
-        # than current are real history — adopt them into the snapshot
-        # log (keep>0) instead of letting them rot or be pruned (the
-        # r4 ADVICE silent-retention-loss window); newer orphans are
-        # un-promoted stagings whose operation will simply re-run.
-        cur = current_version_dir(self.main_path)
-        if cur is not None:
-            cur_n = int(cur.rsplit(".v", 1)[1])
-            for n, d in sorted(list_versions(self.main_path).items()):
-                if d == cur:
-                    continue
-                if n < cur_n and keep > 0:
-                    self._log_snapshot(d)
-                else:
-                    shutil.rmtree(d, ignore_errors=True)
-        retired = swap_dir(self.main_path, staging, prune_strays=False)
-        if retired is None:  # no prior main table — nothing to retire
-            return
-        if keep > 0:
-            self._log_snapshot(retired)
-            for v in self.snapshots()[:-keep]:
-                shutil.rmtree(os.path.join(self.snapshots_path, f"v{v}"))
-        else:
-            shutil.rmtree(retired)
-
-    def _log_snapshot(self, retired: str) -> None:
-        """Rename a displaced version directory into the snapshot log.
-        Version ids are NEVER reused: a counter file tracks the
-        high-water mark so a version number keeps denoting one
-        historical state even after retention (or restore) drains the
-        live snapshot set — read_version(n) of a pruned id errors
-        instead of silently returning a different state."""
-        os.makedirs(self.snapshots_path, exist_ok=True)
-        counter = os.path.join(self.snapshots_path, "NEXT")
-        try:
-            with open(counter) as fh:
-                hwm = int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            hwm = 0
-        versions = self.snapshots()
-        nxt = max(hwm, versions[-1] if versions else 0) + 1
-        with open(counter, "w") as fh:
-            fh.write(str(nxt))
-        os.rename(retired, os.path.join(self.snapshots_path, f"v{nxt}"))
+        """Roll the main table back to snapshot ``version``: its dir is
+        promoted by rename to the next version number, and the
+        displaced current state stays as a snapshot, so restore is
+        itself undoable."""
+        swap_dir(self.main_path, self._snapshot_dir(version), self.keep_snapshots)
 
     # ------------------------------------------------------------ io
     def exists(self) -> bool:
+        """Whether the table holds data: after healing a crashed
+        promote, the path resolves and holds a parquet file. Runs no
+        Spark job. A partitioned write of an empty frame leaves no
+        parquet file (nothing to infer a schema from), so such a table
+        reads as absent and the next write replaces it."""
         recover_swap(self.main_path)
-        try:
-            self.spark.read.parquet(self.main_path)
-            return True
-        except Exception:  # noqa: BLE001 - missing path
-            return False
+        for _, dirs, files in os.walk(self.main_path):
+            if any(f.endswith(".parquet") and not f.startswith(("_", ".")) for f in files):
+                return True
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        return False
 
     def read(self) -> DataFrame:
         """Superset-schema scan (mergeSchema handles column evolution —
@@ -194,29 +134,30 @@ class FeatureStore:
         return out
 
     def _write(self, df: DataFrame, mode: str, path: str | None = None) -> None:
+        """Write ``df`` partitioned by the partition column. The
+        per-write option pins dynamic partition overwrite regardless of
+        the session's default, so an ``overwrite`` of the live table
+        replaces ONLY the partitions present in ``df`` (job-commit
+        atomic per partition) and a vanilla session can't silently turn
+        it into a whole-table static overwrite."""
         (
             self._compact(df)
             .repartition(self.partition_col)
             .write.mode(mode)
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(self.partition_col)
             .option("compression", "zstd")
             .parquet(path or self.main_path)
         )
 
-    def _write_dynamic_overwrite(self, df: DataFrame) -> None:
-        """Overwrite ONLY the partitions present in ``df`` (job-commit
-        atomic per partition). The per-write option pins dynamic mode
-        regardless of the session's partitionOverwriteMode default, so
-        a vanilla session can't silently turn this into a whole-table
-        static overwrite."""
-        (
-            self._compact(df)
-            .repartition(self.partition_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(self.partition_col)
-            .option("compression", "zstd")
-            .parquet(self.main_path)
+    def _promote(self, df: DataFrame) -> None:
+        """Replace the whole table with ``df`` (fsops.promote: a unique
+        staging dir, then one atomic pointer flip); the displaced
+        version stays as a snapshot under ``keep_snapshots``."""
+        promote(
+            self.main_path,
+            lambda staging: self._write(df, "overwrite", staging),
+            keep=self.keep_snapshots,
         )
 
     # ------------------------------------------------------------ ops
@@ -225,7 +166,7 @@ class FeatureStore:
         (ref skip-existing anti-join, ticker_batch_runner.py:433-443).
         Returns rows appended."""
         if not self.exists():
-            self._write(updates, "overwrite")
+            self._promote(updates)
             return updates.count()
         existing_keys = self.read().select(*self.keys)
         fresh = updates.join(existing_keys, self.keys, "left_anti")
@@ -243,35 +184,29 @@ class FeatureStore:
         """Keep-last merge: updates win per key (ref concat+unique
         keep='last'); ``rank_dominates=False`` makes ``order_by`` win
         outright instead (event-time semantics for out-of-order feeds).
-        Rewrites only the partitions present in the merged frame
-        (dynamic partition overwrite)."""
-        if not self.exists():
-            self._write(updates, "overwrite")
-            return
-        merged = upsert_keep_last(
-            self.read(), updates, keys=self.keys, order_by=order_by,
-            rank_dominates=rank_dominates,
-        )
-        # `merged` lazily reads main_path, so overwriting main in place
-        # is unsafe even behind cache(): eviction or task retry would
-        # recompute against already-deleted files. Materialize durably
-        # to a staging dir, then swap directories (atomic rename — the
-        # reference's temp-file replace at table granularity; merged
-        # carries every partition, so a full rewrite costs nothing
-        # extra over dynamic overwrite here).
-        staging = self.main_path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        self._write(merged, "overwrite", path=staging)
-        self._swap_in(staging)
+        The merged table replaces the old one in one promote."""
+        if self.exists():
+            # the merge lazily reads main_path, so overwriting main in
+            # place is unsafe even behind cache(): eviction or task
+            # retry would recompute against already-deleted files. The
+            # promote writes it complete into a staging dir first (the
+            # reference's temp-file replace at table granularity; the
+            # merge carries every partition, so a full rewrite costs
+            # nothing extra over dynamic overwrite here).
+            updates = upsert_keep_last(
+                self.read(), updates, keys=self.keys, order_by=order_by,
+                rank_dominates=rank_dominates,
+            )
+        self._promote(updates)
 
     def overwrite_partition_values(self, updates: DataFrame) -> None:
         """Partition-level replace (ref macro delete-year-then-append,
         macro_batch_runner.py:141-145): dynamic overwrite writes only the
         partitions carried by `updates`."""
         if self.exists():
-            self._write_dynamic_overwrite(updates)
-        else:
             self._write(updates, "overwrite")
+        else:
+            self._promote(updates)
 
     def delete_keys(self, keys_df: DataFrame, purge_snapshots: bool = False) -> int:
         """Row-level delete (right-to-be-forgotten): remove every row
@@ -280,9 +215,9 @@ class FeatureStore:
         overwrite) — untouched partitions keep their files byte-for-
         byte. Returns rows deleted.
 
-        ``purge_snapshots=True`` also drops the snapshot log: retained
-        snapshots still CONTAIN the deleted rows (they are renames of
-        old table states), so a compliance deletion must erase them —
+        ``purge_snapshots=True`` also removes every non-current version
+        dir: retained snapshots still CONTAIN the deleted rows (they
+        are old table states), so a compliance deletion must erase them —
         the privacy/durability trade is the caller's call, which is why
         it is explicit."""
         keys_df = keys_df.select(*self.keys).distinct()
@@ -335,7 +270,7 @@ class FeatureStore:
             # between the two steps), and Spark owns the partition
             # directory naming.
             if survivors.head(1):
-                self._write_dynamic_overwrite(survivors)
+                self._write(survivors, "overwrite")
             # Deleting the survivor-free dirs LAST is crash-safe: those
             # rows are all scheduled for deletion, so a partial rmtree
             # just leaves the delete resumable. input_file_name()
@@ -349,8 +284,11 @@ class FeatureStore:
             }
             for d in doomed_dirs:
                 shutil.rmtree(d, ignore_errors=True)
-        if purge_snapshots and os.path.isdir(self.snapshots_path):
-            shutil.rmtree(self.snapshots_path)
+        if purge_snapshots:
+            cur = current_version_dir(self.main_path)
+            for d in list_versions(self.main_path).values():
+                if d != cur:
+                    shutil.rmtree(d, ignore_errors=True)
         return n
 
     def compact(self, files_per_partition: int = 1, sort_within: list[str] | None = None) -> None:
@@ -364,9 +302,8 @@ class FeatureStore:
         row-group min/max skipping. Compaction repartitions each
         partition to a bounded file count and (with ``sort_within``)
         clusters rows so predicate pushdown on the sort key can skip
-        whole row groups. Uses the same staging-dir + atomic-swap
-        protocol as upsert, so readers never observe a half-compacted
-        table."""
+        whole row groups. Commits through the same promote as upsert,
+        so readers never observe a half-compacted table."""
         df = self.read()
         # (partition, salt) repartition: files_per_partition groups PER
         # partition value and |partitions| x files_per_partition writer
@@ -387,15 +324,16 @@ class FeatureStore:
         )
         if sort_within:
             df = df.sortWithinPartitions(self.partition_col, *sort_within)
-        staging = self.main_path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            df.write.mode("overwrite")
-            .partitionBy(self.partition_col)
-            .option("compression", "zstd")
-            .parquet(staging)
+        promote(
+            self.main_path,
+            lambda staging: (
+                df.write.mode("overwrite")
+                .partitionBy(self.partition_col)
+                .option("compression", "zstd")
+                .parquet(staging)
+            ),
+            keep=self.keep_snapshots,
         )
-        self._swap_in(staging)
 
     def quarantine(self, rows: DataFrame) -> None:
         """Audit sink for dropped rows (ref `_write_flagged_audit`)."""

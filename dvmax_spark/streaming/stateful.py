@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from dvmax_spark.operators.distrank import with_exact_ntile
+from dvmax_spark.fsops import scratch_path
 
 FLUSH = "__flush__"
 
@@ -235,7 +236,7 @@ def run_sessionize_stream(
     """
     run_id = uuid.uuid4().hex[:12]
     auto_dir = base_dir is None
-    base = base_dir or f"/tmp/dvmax_stateful_{os.getpid()}_{run_id}"
+    base = base_dir or scratch_path(f"stateful_{run_id}")
     in_dir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(in_dir, exist_ok=True)

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from dvmax_spark.fsops import (
     ensure_artifact,
+    list_versions,
+    promote,
     read_artifact_meta,
     recover_swap,
     swap_dir,
@@ -122,6 +124,22 @@ def test_swap_dir_prunes_unpromoted_orphans(tmp_path, pmode):
     assert _read(path, "m") == "v8"
 
 
+def test_promote_keep_retains_newest_served_versions(tmp_path):
+    """``promote(keep=k)`` leaves the newest k versions the table once
+    served beside the new one and removes the rest, an un-promoted
+    orphan and an undisposed older version included."""
+    path = str(tmp_path / "t")
+    for tag in "abc":
+        promote(path, _dropper(tag), keep=2)
+    assert sorted(list_versions(path)) == [1, 2, 3]
+    os.makedirs(path + ".v7")  # orphan: renamed, never flipped
+    promote(path, _dropper("d"), keep=2)
+    assert sorted(list_versions(path)) == [2, 3, 8]
+    assert [_read(f"{path}.v{n}", "m") for n in (2, 3, 8)] == ["b", "c", "d"]
+    promote(path, _dropper("e"))  # keep=0: only the new version stays
+    assert sorted(list_versions(path)) == [9] and _read(path, "m") == "e"
+
+
 @symlink_pointer
 def test_concurrent_reader_never_sees_missing_or_half_table(tmp_path, pmode):
     """The r4 VERDICT ask: under a swap storm the table path must
@@ -186,6 +204,32 @@ def test_swap_dir_heals_before_promoting(tmp_path, pmode):
         assert fh.read() == "v1"
 
 
+def test_scratch_root_removed_at_exit(tmp_path):
+    """Every scratch path a process is handed lives under one root,
+    which the process removes when its interpreter exits."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from dvmax_spark.fsops import scratch_path\n"
+        "p = scratch_path('q_1')\n"
+        "assert scratch_path('q_1') == p\n"
+        "os.makedirs(os.path.join(p, 'in'))\n"
+        "open(os.path.join(p, 'in', 'f'), 'w').close()\n"
+        "print(os.path.dirname(p))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    root = out.stdout.strip()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.listdir(tmp_path) == []
+
+
 # ---------------------------------------------------------- FeatureStore
 
 
@@ -225,7 +269,7 @@ def test_store_adopts_stranded_version_into_snapshot_log(spark, tmp_path):
     spark.createDataFrame([(1, "b")], "k int, v string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(staging)
-    stranded = swap_dir(st.main_path, staging, prune_strays=False)
+    stranded = swap_dir(st.main_path, staging)
     assert stranded is not None and os.path.isdir(stranded)
     # next store write sweeps the stranded version into the log
     st.upsert(spark.createDataFrame([(1, "c")], "k int, v string"))
@@ -234,6 +278,43 @@ def test_store_adopts_stranded_version_into_snapshot_log(spark, tmp_path):
     assert {r.v for r in st.read_version(snaps[0]).collect()} == {"a"}
     assert {r.v for r in st.read_version(snaps[1]).collect()} == {"b"}
     assert {r.v for r in st.read().collect()} == {"c"}
+
+
+def test_store_orphan_version_is_not_a_snapshot(spark, tmp_path):
+    """A crash after the staging rename but before the pointer flip
+    leaves an orphan ``main.v<n>`` NEWER than the current version: it
+    is never listed as a snapshot nor readable as one, and the next
+    upsert removes it instead of promoting it."""
+    from dvmax_spark.store import FeatureStore
+
+    st = FeatureStore(
+        spark, str(tmp_path / "st"), keys=["k"], partition_col=None,
+        keep_snapshots=2,
+    )
+    st.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+    st.upsert(spark.createDataFrame([(1, "b")], "k int, v string"))
+    assert st.snapshots() == [1]
+    orphan = st.main_path + ".v9"
+    spark.createDataFrame([(1, "zzz")], "k int, v string").write.parquet(orphan)
+    assert st.snapshots() == [1]
+    with pytest.raises(ValueError):
+        st.read_version(9)
+    st.upsert(spark.createDataFrame([(1, "c")], "k int, v string"))
+    assert not os.path.exists(orphan)
+    assert st.snapshots() == [1, 2]
+    assert {r.v for r in st.read().collect()} == {"c"}
+
+
+def test_store_first_write_is_a_pointer(spark, tmp_path):
+    """A store's first write goes through promote: the table path is a
+    pointer to its first version dir, not a real directory."""
+    from dvmax_spark.store import FeatureStore
+
+    st = FeatureStore(spark, str(tmp_path / "st"), keys=["k"])
+    st.append_new_keys(spark.createDataFrame([(1, "a")], "k int, v string"))
+    assert _is_pointer(st.main_path)
+    assert os.readlink(st.main_path) == "main.v1"
+    assert sorted(os.listdir(tmp_path / "st")) == ["main", "main.v1"]
 
 
 # ------------------------------------------------------ ContinuousRollup
@@ -389,127 +470,6 @@ def test_legacy_old_heal_clears_stale_pointer(tmp_path, pmode):
     assert recover_swap(path) is True
     with open(os.path.join(path, "data")) as fh:
         assert fh.read() == "legacy"
-
-
-# ----------------------------------------------- multi-writer CAS contract
-
-
-@symlink_pointer
-def test_swap_dir_cas_deterministic_two_writer_interleave(tmp_path, pmode):
-    """The optimistic-concurrency contract, interleaved by hand: A and
-    B both read version N, both prepare staging; A commits; B's commit
-    must raise CASConflict with its staging INTACT; B re-reads and its
-    retry commits cleanly on top of A."""
-    from dvmax_spark.fsops import CASConflict, swap_dir_cas, version_number
-
-    path = str(tmp_path / "t")
-    st0 = str(tmp_path / "st0")
-    os.makedirs(st0)
-    with open(os.path.join(st0, "m"), "w") as fh:
-        fh.write("base")
-    assert swap_dir_cas(path, st0, expected_version=0) is None
-    assert version_number(path) == 1 and _read(path, "m") == "base"
-
-    # both writers read v1
-    seen_a = seen_b = version_number(path)
-    st_a, st_b = str(tmp_path / "sa"), str(tmp_path / "sb")
-    for st, tag in ((st_a, "A"), (st_b, "B")):
-        os.makedirs(st)
-        with open(os.path.join(st, "m"), "w") as fh:
-            fh.write(tag)
-    displaced = swap_dir_cas(path, st_a, expected_version=seen_a)
-    assert displaced == path + ".v1"
-    assert version_number(path) == 2 and _read(path, "m") == "A"
-    with pytest.raises(CASConflict):
-        swap_dir_cas(path, st_b, expected_version=seen_b)
-    # loser: no partial state — staging intact, table still serves A
-    assert os.path.isdir(st_b) and os.path.isfile(os.path.join(st_b, "m"))
-    assert version_number(path) == 2 and _read(path, "m") == "A"
-    # retry after re-read succeeds
-    assert swap_dir_cas(path, st_b, expected_version=version_number(path)) == path + ".v2"
-    assert version_number(path) == 3 and _read(path, "m") == "B"
-
-
-@symlink_pointer
-def test_swap_dir_cas_slot_claim_beats_stale_version_read(tmp_path, pmode):
-    """The narrower race: B re-checks the version AFTER A's slot claim
-    but BEFORE A's pointer flip (simulated by pre-claiming the slot).
-    B's conditional rename must lose on the slot itself — the pointer
-    check alone is not the commit point."""
-    from dvmax_spark.fsops import CASConflict, swap_dir_cas, version_number
-
-    path = str(tmp_path / "t")
-    st0 = str(tmp_path / "st0")
-    os.makedirs(st0)
-    assert swap_dir_cas(path, st0, expected_version=0) is None
-
-    # A claimed .v2 (complete, non-empty) but crashed before the flip
-    os.makedirs(path + ".v2")
-    with open(os.path.join(path + ".v2", "m"), "w") as fh:
-        fh.write("A")
-    st_b = str(tmp_path / "sb")
-    os.makedirs(st_b)
-    with open(os.path.join(st_b, "m"), "w") as fh:
-        fh.write("B")
-    # B read v1 before A's claim; its commit must fail on the slot,
-    # and the conflict handler heals the pointer FORWARD onto A's
-    # complete-but-unflipped .v2 (the claim is the commit) so B's
-    # re-read sees the winner instead of livelocking on v1
-    with pytest.raises(CASConflict):
-        swap_dir_cas(path, st_b, expected_version=1)
-    assert os.path.isdir(st_b)
-    # ...and after re-reading the healed state, B lands on v3
-    assert _read(path, "m") == "A"
-    swap_dir_cas(path, st_b, expected_version=version_number(path))
-    assert version_number(path) == 3 and _read(path, "m") == "B"
-
-
-@symlink_pointer
-def test_swap_dir_cas_real_process_race(tmp_path, pmode):
-    """TWO real processes race the same expected_version through a
-    barrier: exactly one wins, the loser raises CASConflict, the final
-    table serves the winner's bytes and exactly one new version dir
-    exists (no partial state, no backwards pointer)."""
-    import multiprocessing as mp
-
-    from dvmax_spark.fsops import swap_dir_cas, version_number
-
-    path = str(tmp_path / "t")
-    st0 = str(tmp_path / "st0")
-    os.makedirs(st0)
-    assert swap_dir_cas(path, st0, expected_version=0) is None
-
-    def contender(tag: str, barrier, q) -> None:
-        from dvmax_spark.fsops import CASConflict, swap_dir_cas
-
-        st = str(tmp_path / f"st_{tag}")
-        os.makedirs(st)
-        with open(os.path.join(st, "m"), "w") as fh:
-            fh.write(tag)
-        barrier.wait()
-        try:
-            swap_dir_cas(path, st, expected_version=1)
-            q.put((tag, "won"))
-        except CASConflict:
-            q.put((tag, "lost"))
-
-    ctx = mp.get_context("fork")
-    barrier, q = ctx.Barrier(2), ctx.Queue()
-    ps = [ctx.Process(target=contender, args=(t, barrier, q)) for t in ("A", "B")]
-    for p in ps:
-        p.start()
-    results = dict(q.get(timeout=60) for _ in ps)
-    for p in ps:
-        p.join(timeout=60)
-        assert p.exitcode == 0
-    assert sorted(results.values()) == ["lost", "won"], results
-    winner = next(t for t, r in results.items() if r == "won")
-    loser = next(t for t, r in results.items() if r == "lost")
-    assert version_number(path) == 2
-    assert _read(path, "m") == winner
-    # loser's staging intact for retry; only the winner's .v2 exists
-    assert os.path.isfile(os.path.join(str(tmp_path / f"st_{loser}"), "m"))
-    assert not os.path.exists(path + ".v3")
 
 
 # ------------------------------------------------ fingerprinted artifacts

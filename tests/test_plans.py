@@ -862,3 +862,41 @@ def test_stream_into_rollup_batch_job_count(spark, tmp_path):
     )
     assert roll.read().agg({"n": "sum"}).collect()[0][0] == 24
     assert jobs <= 4, jobs
+
+
+def _store_op_jobs(spark, tmp_path, op) -> int:
+    """Jobs of ONE store write into an existing two-ticker store,
+    counted by a job group set around the call."""
+    from dvmax_spark.store import FeatureStore
+
+    store = FeatureStore(spark, str(tmp_path / "fs"), keys=["ticker", "as_of"])
+    rows = [(t, d, float(d)) for t in ("A", "B") for d in range(5)]
+    store.upsert(spark.createDataFrame(rows, "ticker string, as_of int, v double"))
+    updates = spark.createDataFrame(
+        [("A", 4, 40.0), ("A", 5, 50.0), ("C", 0, 1.0)],
+        "ticker string, as_of int, v double",
+    )
+    sc = spark.sparkContext
+    group = f"store_op_jobs_{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        op(store, updates)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert store.read().count() == 12
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_append_new_keys_job_count(spark, tmp_path):
+    """An incremental append into an existing store is the anti-join
+    count and the append write; the existence check runs no job."""
+    jobs = _store_op_jobs(spark, tmp_path, lambda st, up: st.append_new_keys(up))
+    assert jobs <= 7, jobs
+
+
+def test_store_upsert_job_count(spark, tmp_path):
+    """A keep-last upsert into an existing store is one merged write
+    through fsops.promote; the existence check runs no job."""
+    jobs = _store_op_jobs(spark, tmp_path, lambda st, up: st.upsert(up))
+    assert jobs <= 4, jobs

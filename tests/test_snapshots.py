@@ -1,10 +1,10 @@
 """FeatureStore snapshot/time-travel semantics and the parquet
 row-group clustering evidence behind compact(sort_within=...).
 
-Snapshots are directory RENAMES of the displaced table state (zero
-data copy — the atomic-swap protocol already paid the rewrite), so
-time travel and rollback are O(1) metadata operations at any table
-size."""
+Snapshots are the table's own displaced version directories
+(``main.v<n>``) that fsops.promote keeps (zero data copy — the promote
+already paid the rewrite), so time travel and rollback are O(1)
+metadata operations at any table size."""
 
 from __future__ import annotations
 

@@ -36,6 +36,17 @@ class TestStore:
         assert got[("A", "2024-01-01")] == 1.0
         assert got[("A", "2024-02-01")] == 2.0
 
+    def test_empty_first_write_reads_as_absent(self, spark, store):
+        """A first write of an empty frame leaves no parquet file, which
+        Spark cannot read a schema from: the store must still read as
+        absent, so the next append replaces it and appends every row."""
+        assert store.append_new_keys(_rows(spark, [])) == 0
+        assert not store.exists()
+        rows = [("A", "2024-01-01", 1.0), ("B", "2024-01-01", 2.0)]
+        assert store.append_new_keys(_rows(spark, rows)) == 2
+        assert store.exists()
+        assert store.read().count() == 2
+
     def test_upsert_keep_last(self, spark, store):
         store.upsert(_rows(spark, [("A", "2024-01-01", 1.0), ("B", "2024-01-01", 5.0)]))
         store.upsert(_rows(spark, [("A", "2024-01-01", 9.0)]))
