@@ -70,9 +70,9 @@ def print_feature_report(spark, store_root: str, ticker: str, as_of: str | None)
     printed group by group."""
     from pyspark.sql import functions as F
 
-    from dvmax_spark.store import FeatureStore
+    from dvmax_spark.plans.ticker_pipeline import dynamic_store
 
-    dyn = FeatureStore(spark, os.path.join(store_root, "dynamic"), keys=["ticker", "as_of"])
+    dyn = dynamic_store(spark, store_root)
     df = dyn.read().where(F.col("ticker") == ticker)
     if as_of:
         df = df.where(F.col("as_of") == as_of)

@@ -41,6 +41,27 @@ def get_dates_between(
     return dates
 
 
+def dynamic_store(spark: SparkSession, root: str) -> FeatureStore:
+    """The per-(ticker, as_of) feature table under pipeline root
+    ``root``, partitioned by ``as_of``: a run appends one date, so it
+    writes one file, and the rerun's anti-join lists one dir per date
+    instead of one per ticker."""
+    return FeatureStore(
+        spark, os.path.join(root, "dynamic"), keys=["ticker", "as_of"],
+        partition_col="as_of",
+    )
+
+
+def static_store(spark: SparkSession, root: str) -> FeatureStore:
+    """The per-ticker profile table under pipeline root ``root``,
+    partitioned by the raw ``country`` label that ``encode_static``
+    keeps: a handful of values, so an upsert writes one file per
+    country instead of one per ticker."""
+    return FeatureStore(
+        spark, os.path.join(root, "static"), keys=["ticker"], partition_col="country"
+    )
+
+
 def has_enough_price_data(
     prices: DataFrame, as_of, required_days: int = 260, by: str = "ticker"
 ) -> DataFrame:
@@ -67,8 +88,8 @@ def run_ticker_pipeline(
     RunStats counters, ticker_batch_runner.py:84-97)."""
     t0 = time.time()
     dates = dates or get_dates_between()
-    dyn_store = FeatureStore(spark, os.path.join(store_root, "dynamic"), keys=["ticker", "as_of"])
-    static_store = FeatureStore(spark, os.path.join(store_root, "static"), keys=["ticker"])
+    dyn_store = dynamic_store(spark, store_root)
+    stat_store = static_store(spark, store_root)
 
     stats = {"dates": len(dates), "rows_written": 0, "flagged": 0, "dropped": 0}
     for as_of in dates:
@@ -96,7 +117,7 @@ def run_ticker_pipeline(
             stats["rows_written"] += accepted.count()
         if counts.get("dropped"):
             dyn_store.quarantine(quarantined)
-        static_store.upsert(static)
+        stat_store.upsert(static)
         dynamic.unpersist()
         eligible.unpersist()
 
@@ -114,7 +135,7 @@ def write_static_ohe_projection(
     """The OHE projection (ref write_static_ohe_projection,
     ticker_batch_runner.py:627-640): ticker + one-hot columns as float,
     nulls filled 0."""
-    static = FeatureStore(spark, os.path.join(store_root, "static"), keys=["ticker"]).read()
+    static = static_store(spark, store_root).read()
     ohe_cols = [
         c for c in static.columns if c.startswith("sector_") or c.startswith("country_")
     ]

@@ -5,8 +5,12 @@ Re-expresses the reference's storage layer on Spark conventions:
   reference                                  | engine
   -------------------------------------------|---------------------------
   per-ticker files `{TICKER}.parquet`         | ONE table partitioned by
-  (ticker_batch_runner.py:136-139, 166-167)   | key col (partition pruning
-                                              | replaces per-file touch)
+  (ticker_batch_runner.py:136-139, 166-167)   | a low-cardinality column:
+                                              | the pipeline's dynamic
+                                              | store by `as_of`, its
+                                              | static store by `country`
+                                              | (ticker_pipeline.py
+                                              | dynamic_store/static_store)
   concat + unique(keep="last") upsert (:310)  | upsert_keep_last, then
                                               | one whole-table promote
   skip already-materialized dates (:433-443)  | left-anti join on keys
@@ -18,9 +22,21 @@ Re-expresses the reference's storage layer on Spark conventions:
   zstd + round(2)->Float32 compaction (:190)  | zstd + round_downcast at
                                               | the write edge only
 
-At cluster scale the partition column should be a stable bucket of the
-business key (e.g. hash(ticker) % N) rather than raw high-cardinality
-values; `partition_col` accepts any expression name present in the frame.
+A write makes one file per partition it touches, so the partition
+column sets the file count: by `ticker` (the default, `keys[0]`), the
+daily job wrote one one-row file per ticker; by `as_of` it writes one
+file per run date. A raw high-cardinality key is the wrong partition
+column at scale (bucket it, e.g. hash(ticker) % N, if per-key pruning
+is needed). Partition values are read back with an inferred type: a
+string key whose values all look numeric ("0005") reads back as `int`;
+a data column keeps its type.
+
+A store written under another partition column migrates on its first
+write: the in-place writers (`append_new_keys`,
+`overwrite_partition_values`, `delete_keys`) then commit their whole
+result through one promote instead of writing into the live version,
+where Spark would refuse to read the two partition column names side
+by side.
 """
 
 from __future__ import annotations
@@ -160,6 +176,19 @@ class FeatureStore:
             keep=self.keep_snapshots,
         )
 
+    def _foreign_layout(self) -> bool:
+        """Whether the live version is partitioned by a column other
+        than ``partition_col``: its top-level ``name=value`` dirs name
+        another column. An in-place write would put
+        ``<partition_col>=`` dirs beside them, and every later read
+        would fail (CONFLICTING_PARTITION_COLUMN_NAMES)."""
+        own = self.partition_col + "="
+        with os.scandir(self.main_path) as entries:
+            return any(
+                "=" in e.name and not e.name.startswith(own) and e.is_dir()
+                for e in entries
+            )
+
     # ------------------------------------------------------------ ops
     def append_new_keys(self, updates: DataFrame) -> int:
         """Incremental append: only rows whose key tuple is absent
@@ -168,10 +197,12 @@ class FeatureStore:
         if not self.exists():
             self._promote(updates)
             return updates.count()
-        existing_keys = self.read().select(*self.keys)
-        fresh = updates.join(existing_keys, self.keys, "left_anti")
+        current = self.read()
+        fresh = updates.join(current.select(*self.keys), self.keys, "left_anti")
         n = fresh.count()
-        if n:
+        if self._foreign_layout():
+            self._promote(align_and_union([current, fresh]))
+        elif n:
             self._write(fresh, "append")
         return n
 
@@ -203,10 +234,17 @@ class FeatureStore:
         """Partition-level replace (ref macro delete-year-then-append,
         macro_batch_runner.py:141-145): dynamic overwrite writes only the
         partitions carried by `updates`."""
-        if self.exists():
-            self._write(updates, "overwrite")
-        else:
+        if not self.exists():
             self._promote(updates)
+        elif self._foreign_layout():
+            pc = self.partition_col
+            replaced = F.broadcast(updates.select(F.col(pc).alias("_p")).distinct())
+            kept = self.read().join(
+                replaced, F.col(pc).eqNullSafe(F.col("_p")), "left_anti"
+            )
+            self._promote(align_and_union([kept, updates]))
+        else:
+            self._write(updates, "overwrite")
 
     def delete_keys(self, keys_df: DataFrame, purge_snapshots: bool = False) -> int:
         """Row-level delete (right-to-be-forgotten): remove every row
@@ -230,7 +268,9 @@ class FeatureStore:
             .distinct()
         )
         n = current.join(keys_df, self.keys, "left_semi").count()
-        if n:
+        if self._foreign_layout():
+            self._promote(current.join(keys_df, self.keys, "left_anti"))
+        elif n:
             touched = current.join(
                 F.broadcast(hit_parts), self.partition_col, "left_semi"
             )

@@ -59,7 +59,44 @@ def inputs(spark):
     }
 
 
-@pytest.mark.slow  # long-tail tier (tests/conftest.py)
+def ticker_inputs(spark, profile):
+    """Inputs for tickers that all carry ticker A's 2020-2022 history
+    and fundamentals above; ``profile`` rows are
+    (ticker, sector, country)."""
+    days = pd.bdate_range("2020-01-01", "2022-12-31")
+    years = [2019, 2020, 2021, 2022]
+    tickers = [t for t, _, _ in profile]
+    mk = spark.createDataFrame
+    return {
+        "prices": mk(
+            [(t, d.date(), 100.0 + i * 0.01) for t in tickers for i, d in enumerate(days)],
+            "ticker string, date date, close double",
+        ),
+        "dividends": mk(
+            [(t, datetime.date(y, 6, 1), 1.0 + 0.1 * i) for t in tickers for i, y in enumerate(years)],
+            "ticker string, date date, dividend double",
+        ),
+        "splits": mk([], "ticker string, date date, split_ratio double"),
+        "ratios": mk(
+            [(t, datetime.date(y, 12, 30), 15.0, 20.0, 0.4, 0.03, 2.0) for t in tickers for y in years],
+            "ticker string, date date, priceEarningsRatio double, "
+            "priceToFreeCashFlowsRatio double, payoutRatio double, "
+            "dividendYield double, freeCashFlowPerShare double",
+        ),
+        "income": mk(
+            [(t, datetime.date(y, 12, 30), 2.0, 100.0, 10.0, 20.0, 500.0) for t in tickers for y in years],
+            "ticker string, date date, eps double, operatingIncome double, "
+            "interestExpense double, depreciationAndAmortization double, incomeBeforeTax double",
+        ),
+        "balance": mk(
+            [(t, datetime.date(y, 12, 30), 1000.0, 300.0) for t in tickers for y in years],
+            "ticker string, date date, totalDebt double, cashAndShortTermInvestments double",
+        ),
+        "profile": mk(profile, "ticker string, sector string, country string"),
+        "sector_index": None,
+    }
+
+
 def test_pipeline_end_to_end(spark, inputs, tmp_path):
     from dvmax_spark.plans.ticker_pipeline import (
         run_ticker_pipeline,
@@ -112,6 +149,28 @@ def test_pipeline_end_to_end(spark, inputs, tmp_path):
     assert "-> Validation" in out
     with pytest.raises(SystemExit):
         print_feature_report(spark, root, "NOPE", None)
+
+
+def test_numeric_looking_tickers_read_back_as_strings(spark, tmp_path):
+    """Tickers such as "0005" and "7203" are data columns in both
+    stores, so they read back as the strings written. As partition
+    values their type would be inferred (5, 7203), and the rerun's
+    anti-join would compare a string with an int."""
+    from dvmax_spark.plans.ticker_pipeline import (
+        dynamic_store,
+        run_ticker_pipeline,
+        static_store,
+    )
+
+    inputs = ticker_inputs(spark, [("0005", "Financials", "UK"), ("7203", "Energy", "Japan")])
+    root = str(tmp_path / "fs")
+    dates = [datetime.date(2022, 12, 30)]
+    assert run_ticker_pipeline(spark, inputs, root, dates=dates)["rows_written"] == 2
+    assert run_ticker_pipeline(spark, inputs, root, dates=dates)["rows_written"] == 0
+    for store in (dynamic_store(spark, root), static_store(spark, root)):
+        df = store.read()
+        assert dict(df.dtypes)["ticker"] == "string"
+        assert sorted(r["ticker"] for r in df.collect()) == ["0005", "7203"]
 
 
 def test_macro_pipeline(spark, tmp_path):

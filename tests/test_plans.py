@@ -77,6 +77,40 @@ def test_partition_filter_prunes_store(spark, tmp_path):
     assert "ticker" in pf, pf
 
 
+def test_ticker_pipeline_store_layout(spark, tmp_path):
+    """The pipeline's dynamic store is partitioned by ``as_of`` and its
+    static store by ``country``: two run dates write one file per
+    date, and the static table holds one file per distinct country,
+    the null country included, not one file per ticker."""
+    import datetime
+    import glob
+    import os
+
+    from dvmax_spark.plans.ticker_pipeline import (
+        dynamic_store,
+        run_ticker_pipeline,
+        static_store,
+    )
+    from tests.test_pipeline_runner import ticker_inputs
+
+    profile = [("A", "Energy", "USA"), ("B", "Utilities", "USA"), ("C", "Energy", None)]
+    root = str(tmp_path / "fs")
+    dates = [datetime.date(2021, 12, 31), datetime.date(2022, 12, 30)]
+    stats = run_ticker_pipeline(spark, ticker_inputs(spark, profile), root, dates=dates)
+    assert stats["rows_written"] == 6
+
+    def file_dirs(store):
+        files = glob.glob(os.path.join(store.main_path, "*", "*.parquet"))
+        return sorted(os.path.basename(os.path.dirname(f)) for f in files)
+
+    assert file_dirs(dynamic_store(spark, root)) == [
+        "as_of=2021-12-31", "as_of=2022-12-30",
+    ]
+    assert file_dirs(static_store(spark, root)) == [
+        "country=USA", "country=__HIVE_DEFAULT_PARTITION__",
+    ]
+
+
 # ---------------------------------------------------------------- joins
 
 

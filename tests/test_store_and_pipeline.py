@@ -106,6 +106,62 @@ class TestStore:
         assert dict(s.read().dtypes)["x"] == "float"
 
 
+def _old_layout_store(spark, tmp_path):
+    """A store written with the default layout (one dir per ticker),
+    reopened partitioned by ``as_of``."""
+    from dvmax_spark.store import FeatureStore
+
+    path = str(tmp_path / "mig")
+    FeatureStore(spark, path, keys=["ticker", "as_of"], partition_col="ticker").upsert(
+        _rows(spark, [("A", "2024-01-01", 1.0), ("B", "2024-01-01", 2.0),
+                      ("A", "2024-02-01", 3.0)])
+    )
+    return FeatureStore(spark, path, keys=["ticker", "as_of"], partition_col="as_of")
+
+
+def _assert_migrated(store, want):
+    """The read returns ``want``, the served version holds only
+    ``as_of=`` dirs, and the pointer moved to the next version."""
+    import os
+
+    from dvmax_spark.fsops import current_version_dir
+
+    got = {(r["ticker"], str(r["as_of"])): r["x"] for r in store.read().collect()}
+    assert got == want
+    cur = current_version_dir(store.main_path)
+    dirs = [d for d in os.listdir(cur) if os.path.isdir(os.path.join(cur, d))]
+    assert dirs and all(d.startswith("as_of=") for d in dirs), dirs
+    assert cur == f"{store.main_path}.v2"
+
+
+class TestLayoutMigration:
+    """A write under a new partition column rewrites the whole table in
+    one promote; an in-place write would leave ``ticker=`` and
+    ``as_of=`` dirs side by side, which Spark refuses to read."""
+
+    def test_append_new_keys_migrates(self, spark, tmp_path):
+        store = _old_layout_store(spark, tmp_path)
+        n = store.append_new_keys(
+            _rows(spark, [("A", "2024-01-01", 9.0), ("B", "2024-03-01", 4.0)])
+        )
+        assert n == 1
+        _assert_migrated(store, {
+            ("A", "2024-01-01"): 1.0, ("B", "2024-01-01"): 2.0,
+            ("A", "2024-02-01"): 3.0, ("B", "2024-03-01"): 4.0,
+        })
+
+    def test_overwrite_partition_values_migrates(self, spark, tmp_path):
+        store = _old_layout_store(spark, tmp_path)
+        store.overwrite_partition_values(_rows(spark, [("C", "2024-01-01", 7.0)]))
+        _assert_migrated(store, {("C", "2024-01-01"): 7.0, ("A", "2024-02-01"): 3.0})
+
+    def test_delete_keys_migrates(self, spark, tmp_path):
+        store = _old_layout_store(spark, tmp_path)
+        keys = _rows(spark, [("A", "2024-02-01", 0.0)]).select("ticker", "as_of")
+        assert store.delete_keys(keys) == 1
+        _assert_migrated(store, {("A", "2024-01-01"): 1.0, ("B", "2024-01-01"): 2.0})
+
+
 class TestPipeline:
     def test_build_feature_table_end_to_end(self, spark):
         """Full per-ticker assembly over synthetic inputs for 2 tickers
