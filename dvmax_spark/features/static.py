@@ -72,10 +72,19 @@ def encode_static(
 ) -> DataFrame:
     """One-hot sector and country with _other buckets (ref
     _encode_one_hot, static_features.py:12-31): output keeps the raw
-    labels plus int one-hot columns `sector_<slug>`/`country_<slug>`."""
+    labels plus int one-hot columns `sector_<slug>`/`country_<slug>`.
+
+    An empty country label is kept as null (its one-hot columns are
+    computed from the label as given, so "" still counts as
+    `country_other`): the pipeline's static store is partitioned by
+    this label, and Spark writes "" as the null partition, so a stored
+    "" would read back as null anyway."""
     normalized = df.withColumn("_sector_norm", alias_sector(sector_col))
     return normalized.select(
-        *df.columns,
+        *[
+            F.nullif(F.col(c), F.lit("")).alias(c) if c == country_col else F.col(c)
+            for c in df.columns
+        ],
         *one_hot_exprs("_sector_norm", ALL_SECTORS, prefix="sector"),
         *one_hot_exprs(country_col, ALL_COUNTRIES, prefix="country"),
     )

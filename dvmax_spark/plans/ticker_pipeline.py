@@ -56,7 +56,10 @@ def static_store(spark: SparkSession, root: str) -> FeatureStore:
     """The per-ticker profile table under pipeline root ``root``,
     partitioned by the raw ``country`` label that ``encode_static``
     keeps: a handful of values, so an upsert writes one file per
-    country instead of one per ticker."""
+    country instead of one per ticker. As a partition value the label
+    reads back with an inferred type: ``encode_static`` keeps "" as
+    null (Spark would write it as the null partition anyway), and a set
+    of labels that all look numeric ("840") reads back as ``int``."""
     return FeatureStore(
         spark, os.path.join(root, "static"), keys=["ticker"], partition_col="country"
     )

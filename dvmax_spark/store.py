@@ -33,10 +33,10 @@ a data column keeps its type.
 
 A store written under another partition column migrates on its first
 write: the in-place writers (`append_new_keys`,
-`overwrite_partition_values`, `delete_keys`) then commit their whole
-result through one promote instead of writing into the live version,
-where Spark would refuse to read the two partition column names side
-by side.
+`overwrite_partition_values`, `delete_keys`) first rewrite the whole
+table under the new column in one promote, then write in place as
+usual; written straight into the old layout, Spark would refuse to read
+the two partition column names side by side.
 """
 
 from __future__ import annotations
@@ -176,18 +176,22 @@ class FeatureStore:
             keep=self.keep_snapshots,
         )
 
-    def _foreign_layout(self) -> bool:
-        """Whether the live version is partitioned by a column other
-        than ``partition_col``: its top-level ``name=value`` dirs name
-        another column. An in-place write would put
-        ``<partition_col>=`` dirs beside them, and every later read
-        would fail (CONFLICTING_PARTITION_COLUMN_NAMES)."""
+    def _migrate(self) -> None:
+        """Rewrite the live table under ``partition_col`` (one whole-
+        table promote) when it is partitioned by another column: its
+        top-level ``name=value`` dirs name that column. The in-place
+        writers call this first; written in place, they would put
+        ``<partition_col>=`` dirs beside the old ones, and every later
+        read would fail (CONFLICTING_PARTITION_COLUMN_NAMES). Costs one
+        extra write, once per store."""
         own = self.partition_col + "="
         with os.scandir(self.main_path) as entries:
-            return any(
+            foreign = any(
                 "=" in e.name and not e.name.startswith(own) and e.is_dir()
                 for e in entries
             )
+        if foreign:
+            self._promote(self.read())
 
     # ------------------------------------------------------------ ops
     def append_new_keys(self, updates: DataFrame) -> int:
@@ -197,12 +201,11 @@ class FeatureStore:
         if not self.exists():
             self._promote(updates)
             return updates.count()
-        current = self.read()
-        fresh = updates.join(current.select(*self.keys), self.keys, "left_anti")
+        self._migrate()
+        existing_keys = self.read().select(*self.keys)
+        fresh = updates.join(existing_keys, self.keys, "left_anti")
         n = fresh.count()
-        if self._foreign_layout():
-            self._promote(align_and_union([current, fresh]))
-        elif n:
+        if n:
             self._write(fresh, "append")
         return n
 
@@ -234,17 +237,11 @@ class FeatureStore:
         """Partition-level replace (ref macro delete-year-then-append,
         macro_batch_runner.py:141-145): dynamic overwrite writes only the
         partitions carried by `updates`."""
-        if not self.exists():
-            self._promote(updates)
-        elif self._foreign_layout():
-            pc = self.partition_col
-            replaced = F.broadcast(updates.select(F.col(pc).alias("_p")).distinct())
-            kept = self.read().join(
-                replaced, F.col(pc).eqNullSafe(F.col("_p")), "left_anti"
-            )
-            self._promote(align_and_union([kept, updates]))
-        else:
+        if self.exists():
+            self._migrate()
             self._write(updates, "overwrite")
+        else:
+            self._promote(updates)
 
     def delete_keys(self, keys_df: DataFrame, purge_snapshots: bool = False) -> int:
         """Row-level delete (right-to-be-forgotten): remove every row
@@ -261,6 +258,7 @@ class FeatureStore:
         keys_df = keys_df.select(*self.keys).distinct()
         if not self.exists():
             return 0
+        self._migrate()
         current = self.read()
         hit_parts = (
             current.join(keys_df, self.keys, "left_semi")
@@ -268,9 +266,7 @@ class FeatureStore:
             .distinct()
         )
         n = current.join(keys_df, self.keys, "left_semi").count()
-        if self._foreign_layout():
-            self._promote(current.join(keys_df, self.keys, "left_anti"))
-        elif n:
+        if n:
             touched = current.join(
                 F.broadcast(hit_parts), self.partition_col, "left_semi"
             )

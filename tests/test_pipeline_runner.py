@@ -12,64 +12,23 @@ import pandas as pd
 import pytest
 
 
-@pytest.fixture(scope="module")
-def inputs(spark):
-    days = pd.bdate_range("2020-01-01", "2022-12-31")
-    prices = spark.createDataFrame(
-        [("A", d.date(), 100.0 + i * 0.01) for i, d in enumerate(days)]
-        # B has too little history -> gated out
-        + [("B", d.date(), 50.0) for d in days[-50:]],
-        "ticker string, date date, close double",
-    )
-    years = [2019, 2020, 2021, 2022]
-    mk = lambda rows, schema: spark.createDataFrame(rows, schema)
-    return {
-        "prices": prices,
-        "dividends": mk(
-            [("A", datetime.date(y, 6, 1), 1.0 + 0.1 * i) for i, y in enumerate(years)],
-            "ticker string, date date, dividend double",
-        ),
-        "splits": mk([], "ticker string, date date, split_ratio double"),
-        "ratios": mk(
-            [
-                ("A", datetime.date(y, 12, 30), 15.0, 20.0, 0.4, 0.03, 2.0)
-                for y in years
-            ],
-            "ticker string, date date, priceEarningsRatio double, "
-            "priceToFreeCashFlowsRatio double, payoutRatio double, "
-            "dividendYield double, freeCashFlowPerShare double",
-        ),
-        "income": mk(
-            [
-                ("A", datetime.date(y, 12, 30), 2.0, 100.0, 10.0, 20.0, 500.0)
-                for y in years
-            ],
-            "ticker string, date date, eps double, operatingIncome double, "
-            "interestExpense double, depreciationAndAmortization double, incomeBeforeTax double",
-        ),
-        "balance": mk(
-            [("A", datetime.date(y, 12, 30), 1000.0, 300.0) for y in years],
-            "ticker string, date date, totalDebt double, cashAndShortTermInvestments double",
-        ),
-        "profile": mk(
-            [("A", "Energy", "USA"), ("B", "Utilities", "UK")],
-            "ticker string, sector string, country string",
-        ),
-        "sector_index": None,
-    }
-
-
-def ticker_inputs(spark, profile):
-    """Inputs for tickers that all carry ticker A's 2020-2022 history
-    and fundamentals above; ``profile`` rows are
-    (ticker, sector, country)."""
+def ticker_inputs(spark, profile, short=()):
+    """Pipeline inputs for the tickers of ``profile`` rows
+    (ticker, sector, country): each gets a 2020-2022 price history and
+    2019-2022 fundamentals, except that tickers in ``short`` get only
+    the last 50 days of prices, too few for the 260-day gate."""
     days = pd.bdate_range("2020-01-01", "2022-12-31")
     years = [2019, 2020, 2021, 2022]
     tickers = [t for t, _, _ in profile]
     mk = spark.createDataFrame
     return {
         "prices": mk(
-            [(t, d.date(), 100.0 + i * 0.01) for t in tickers for i, d in enumerate(days)],
+            [
+                (t, d.date(), 100.0 + i * 0.01)
+                for t in tickers
+                for i, d in enumerate(days)
+                if t not in short or i >= len(days) - 50
+            ],
             "ticker string, date date, close double",
         ),
         "dividends": mk(
@@ -95,6 +54,14 @@ def ticker_inputs(spark, profile):
         "profile": mk(profile, "ticker string, sector string, country string"),
         "sector_index": None,
     }
+
+
+@pytest.fixture(scope="module")
+def inputs(spark):
+    # B has too little history -> gated out
+    return ticker_inputs(
+        spark, [("A", "Energy", "USA"), ("B", "Utilities", "UK")], short={"B"}
+    )
 
 
 def test_pipeline_end_to_end(spark, inputs, tmp_path):
@@ -171,6 +138,37 @@ def test_numeric_looking_tickers_read_back_as_strings(spark, tmp_path):
         df = store.read()
         assert dict(df.dtypes)["ticker"] == "string"
         assert sorted(r["ticker"] for r in df.collect()) == ["0005", "7203"]
+
+
+def test_empty_country_is_stored_as_null(spark, tmp_path):
+    """The static store is partitioned by the raw country label, and
+    Spark writes "" as the null partition: ``encode_static`` keeps an
+    empty label as null, so the store reads back what the pipeline
+    computed, and the label's one-hot columns (``country_other``) are
+    those of the label as given."""
+    from dvmax_spark.features.static import encode_static
+    from dvmax_spark.plans.ticker_pipeline import (
+        run_ticker_pipeline,
+        static_store,
+        write_static_ohe_projection,
+    )
+
+    profile = [("A", "Energy", ""), ("B", "Energy", "UK"), ("C", "Energy", None)]
+    inputs = ticker_inputs(spark, profile)
+    want = {"A": None, "B": "UK", "C": None}
+    computed = encode_static(inputs["profile"]).collect()
+    assert {r["ticker"]: r["country"] for r in computed} == want
+    root = str(tmp_path / "fs")
+    dates = [datetime.date(2022, 12, 30)]
+    for _ in range(2):  # first run and rerun
+        run_ticker_pipeline(spark, inputs, root, dates=dates)
+    stored = static_store(spark, root).read()
+    assert {r["ticker"]: r["country"] for r in stored.collect()} == want
+    assert dict(stored.dtypes)["country"] == "string"
+    proj = {r["ticker"]: r for r in write_static_ohe_projection(spark, root).collect()}
+    assert proj["A"]["country_other"] == 1.0
+    assert proj["B"]["country_uk"] == 1.0
+    assert proj["C"]["country_other"] == 0.0
 
 
 def test_macro_pipeline(spark, tmp_path):
