@@ -714,12 +714,11 @@ def dedup_clusters_twophase(
     pairs: DataFrame,
     id_col: str = "doc_id",
     rank_col: str | None = None,
-    max_rounds: int = 30,
 ) -> DataFrame:
     """:func:`dedup_clusters` with the components computed by
     :func:`connected_components_twophase` — identical output contract
     (and identical oracle SQL), O(log n) rounds on any graph shape."""
-    labels, _ = connected_components_twophase(pairs, max_rounds=max_rounds)
+    labels, _ = connected_components_twophase(pairs)
     comp = labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
     return _cluster_output(df, comp, id_col, rank_col)
 
@@ -727,13 +726,12 @@ def dedup_clusters_twophase(
 def incremental_components(
     labels: DataFrame,
     new_edges: DataFrame,
-    max_rounds: int = 30,
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """EXACT connected-component label maintenance: given the previous
     min-id labels ``(id, label)`` and a batch of ``new_edges``
     (id_a, id_b), return the exact labels of the UNION graph while
     recomputing only the components the new edges touch — the
-    incremental form of :func:`connected_components_twophase`, and the
+    incremental form of :func:`connected_components`, and the
     graph-side member of the incremental family (exact ids:
     dedup_ingest ledger; near-dup pairs: MinHashIndex.match_new;
     sub-document: GramIndex.clean_new).
@@ -749,9 +747,8 @@ def incremental_components(
     contributes |batch| edges, and the merge's cost is proportional to
     the TOUCHED components + new edges, not the corpus graph.
 
-    Returns ``(labels, rounds)`` — labels covers every old id plus
-    every new-edge endpoint; rounds is the two-phase round count of
-    the touched-subgraph merge.
+    Returns the labels ``(id, label)``: every old id plus every
+    new-edge endpoint.
     """
     ends = (
         new_edges.select(F.col("id_a").alias("id"))
@@ -766,14 +763,12 @@ def incremental_components(
     stars = members.select(
         F.col("label").alias("id_a"), F.col("id").alias("id_b")
     ).where(F.col("id_a") != F.col("id_b"))
-    merged, rounds = connected_components_twophase(
-        stars.unionAll(new_edges.select("id_a", "id_b")), max_rounds=max_rounds
-    )
+    merged = connected_components(stars.unionAll(new_edges.select("id_a", "id_b")))
     # a touched SINGLETON component (label == id, no star edge) is an
     # endpoint of some new edge, so it is already a node of the merge;
     # endpoints with no prior label likewise. Untouched labels bypass.
     untouched = labels.join(touched, "label", "left_anti")
-    return untouched.select("id", "label").unionAll(merged.select("id", "label")), rounds
+    return untouched.select("id", "label").unionAll(merged)
 
 
 def dedup_clusters_incremental(
@@ -782,15 +777,15 @@ def dedup_clusters_incremental(
     new_edges: DataFrame,
     id_col: str = "doc_id",
     rank_col: str | None = None,
-    max_rounds: int = 30,
 ) -> DataFrame:
     """Cluster assignment + canonical selection from MAINTAINED labels:
     :func:`incremental_components` over (previous labels, new edge
     batch), then the shared (doc, cluster_id, cluster_size, keep)
     assembly — output contract (and oracle SQL) identical to
     :func:`dedup_clusters` over the union pair set."""
-    lab, _ = incremental_components(labels, new_edges, max_rounds=max_rounds)
-    comp = lab.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
+    comp = incremental_components(labels, new_edges).select(
+        F.col("id").alias(id_col), F.col("label").alias("cluster_id")
+    )
     return _cluster_output(df, comp, id_col, rank_col)
 
 

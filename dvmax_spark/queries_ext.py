@@ -105,8 +105,8 @@ def _ndg_handle(spark: SparkSession, sf: str) -> NearDupGraph:
 # landed". The PRIOR corpus is every other source (19/20 of the docs),
 # so the persisted labels cover almost the whole graph and the merge
 # is batch-proportional — the production shape. (x_incremental_
-# components keeps the inverse src0-as-old framing: there the batch is
-# ~95% of the graph, which is the stress form, not the steady state.)
+# components keeps the inverse src0-as-old framing, ~95% of the graph
+# as the batch: the stress form, both its CC runs on the driver path.)
 _LABELS_NEW_SOURCE = "src19"
 _LABELS_SPEC = 1  # bump to invalidate persisted label artifacts
 
@@ -123,7 +123,7 @@ def _labels_prior_ensure(spark: SparkSession, sf: str) -> bool:
     the parent pair artifact's meta (:meth:`NearDupGraph.derived_meta`),
     so a regenerated corpus or changed LSH params invalidates the
     labels transitively without a second corpus pass."""
-    from dvmax_spark.ext.dedup import connected_components_twophase
+    from dvmax_spark.ext.dedup import connected_components
     from dvmax_spark.fsops import ensure_artifact
 
     _ndg_ensure(spark, sf)
@@ -138,8 +138,7 @@ def _labels_prior_ensure(spark: SparkSession, sf: str) -> bool:
         both_old = ndg.pairs().join(
             old_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"
         ).join(old_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
-        labels, _ = connected_components_twophase(both_old)
-        labels.select("id", "label").write.mode("overwrite").option(
+        connected_components(both_old).write.mode("overwrite").option(
             "compression", "zstd"
         ).parquet(staging)
 
@@ -378,28 +377,21 @@ def x_dedup_clusters_twophase(spark: SparkSession, sf: str) -> DataFrame:
 @query("x_incremental_components", ids=("X17",), bench=True, sql=dedup_clusters_sql())
 def x_incremental_components(spark: SparkSession, sf: str) -> DataFrame:
     """EXACT incremental connected components: src0's near-dup labels
-    are treated as the maintained artifact; the other sources' pairs
-    arrive as the new edge batch and merge via star compression
-    (ext/dedup.py:incremental_components) — only TOUCHED components
-    recompute, untouched labels pass through without a shuffle. The
-    result must equal clustering the union pair set from scratch, so
-    this shares x_dedup_clusters' exact recursive-CTE oracle: the
-    maintenance path is value-checked against the full recompute."""
-    from dvmax_spark.ext.dedup import (
-        connected_components_twophase,
-        dedup_clusters_incremental,
-    )
+    (``connected_components``) are treated as the maintained artifact;
+    the other sources' pairs arrive as the new edge batch and merge via
+    star compression (ext/dedup.py:incremental_components) — only
+    TOUCHED components recompute, untouched labels pass through without
+    a shuffle. The result must equal clustering the union pair set from
+    scratch, so this shares x_dedup_clusters' exact recursive-CTE oracle."""
+    from dvmax_spark.ext.dedup import connected_components, dedup_clusters_incremental
 
     docs = load_table(spark, "documents", sf)
     pairs = _ndg_pairs(spark, sf)
     old_ids = docs.where(F.col("source") == "src0").select("doc_id")
     # both_old feeds TWO consumers (the labels0 CC below and the
-    # new_edges anti-join); labels0 feeds three inside
-    # dedup_clusters_incremental (touched semi-join, members semi-join,
-    # untouched anti-join). Materialize each once (r10, guide §2.4/§5:
-    # shared subtrees re-evaluated per consumer are free shuffles to
-    # remove) — results are bit-identical, the plan just stops
-    # re-deriving the same tables.
+    # new_edges anti-join): materialize it once (r10, guide §2.4/§5).
+    # labels0 (three consumers in dedup_clusters_incremental) needs no
+    # checkpoint: connected_components returns it as driver-built rows.
     both_old = (
         pairs.join(old_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
         .join(old_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi")
@@ -408,8 +400,7 @@ def x_incremental_components(spark: SparkSession, sf: str) -> DataFrame:
     new_edges = pairs.join(
         both_old.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
     )
-    labels0, _ = connected_components_twophase(both_old)
-    labels0 = labels0.localCheckpoint(eager=False)
+    labels0 = connected_components(both_old)
     return dedup_clusters_incremental(
         docs, labels0, new_edges, rank_col="n_chars"
     ).orderBy("doc_id")

@@ -129,18 +129,17 @@ PRIORITY: tuple[str, ...] = (
     "s2_parquet_sink_roundtrip",
     "s5_rest_ingest_fixture",
     "s4_pipeline_infra",
-    "s_corrupt_json_recovery",
     # r12 rotation: x_soft_dedup_mass (connected components feed its
     # per-source duplicate mass; X17/X21, value-exact vs the recursive-
     # CTE oracle) takes t_session_window's slot — t_session_window is
     # green in CORRECTNESS_r02 + r11 and its T2 stays covered in-cap by
     # t_stateful_session.
     "x_soft_dedup_mass",
-    # streaming — r11 rotation: t_stream_rollup earned its green r10
-    # row (it rotated back in with r12, see above); t_stream_cms (micro-batch CMS maintenance: A10 sketch + T1
-    # streaming in one oracled query) keeps T1 in-cap and gives the
-    # sketch family its first ORACLED driver row.
-    "t_stream_cms",
+    # streaming — r12 rotation: t_stream_components (X17/T3/S11, the
+    # incremental CC merge per micro-batch) takes t_stream_cms's slot and
+    # x_incremental_components (below) s_corrupt_json_recovery's; both
+    # are green in CORRECTNESS_r11, their IDs stay covered in-cap.
+    "t_stream_components",
     # S13 cross-format matrix took t_session_window's slot:
     # t_session_window's T2 stays covered in-cap by t_stateful_session
     # (which runs the native-gap semantics through the stateful op),
@@ -178,6 +177,7 @@ PRIORITY: tuple[str, ...] = (
     # x_multimodal_funnel and x_span_dedup_clean.
     "x_dedup_clusters",
     "x_incremental_components_maintained",
+    "x_incremental_components",  # r12 rotation (see t_stream_components)
     "x_multimodal_funnel",  # r9: was x_edit_dedup_clusters
     "x_cosine_topk_lsh",
     # r12 rotation: x_incremental_dedup (reads the persisted src0
@@ -199,10 +199,12 @@ PRIORITY: tuple[str, ...] = (
     # r12 rotation: displaced by t_stream_rollup (A5 still covered
     # in-cap by a_approx_percentile); green in CORRECTNESS_r09..r11
     "a_quartiles_distributed",
-    # r12 rotation: displaced from the evidence window by the two
+    # r12 rotation: displaced from the evidence window by
     # connected-components consumers (IDs still covered in-cap)
     "t_session_window",
     "x_audio_fp_dedup",
+    "t_stream_cms",
+    "s_corrupt_json_recovery",
     # r12 rotation: displaced from the evidence window (X7 still
     # covered in-cap by x_bpe_fertility); green in CORRECTNESS_r07..r11
     # + PARITY.md
@@ -263,7 +265,6 @@ PRIORITY: tuple[str, ...] = (
     "x_exact_dedup",
     "x_jaccard_prefix_join",
     "x_dedup_threshold_curve",
-    "x_incremental_components",
     "x_hard_negatives",
     "x_text_stats",
     "x_unigram_logprob",

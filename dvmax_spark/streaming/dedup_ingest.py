@@ -201,7 +201,8 @@ def stream_into_components(
       3. within-batch edges via ``lsh_pairs_from_signatures``,
       4. the persisted labels merge both through
          :func:`~dvmax_spark.ext.dedup.incremental_components` — only
-         components the batch touches recompute (star compression),
+         components the batch touches recompute (star compression,
+         labelled by ``connected_components``),
       5. the batch's signatures append to the index (batch-keyed).
 
     The maintained labels equal clustering the ENTIRE corpus-so-far
@@ -256,7 +257,7 @@ def stream_into_components(
             idt = matchable.schema[idc].dataType.simpleString()
             labels0 = spark.createDataFrame([], f"id {idt}, label {idt}")
         if not edges.isEmpty():
-            labels1, _ = incremental_components(labels0, edges)
+            labels1 = incremental_components(labels0, edges)
             promote(labels_path, labels1.write.option("compression", "zstd").parquet)
         index.append(matchable, batch_key=f"s{batch_id}", staged_banded=staged)
 

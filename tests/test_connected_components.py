@@ -75,3 +75,35 @@ def test_both_paths_match_union_find(spark, monkeypatch, path, name, n, edges):
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     out = dedup.dedup_clusters(docs, pairs).collect()
     assert {r["doc_id"]: r["cluster_id"] for r in out} == truth
+
+
+@pytest.mark.parametrize("path", ["driver", "twophase"])
+@pytest.mark.parametrize("name,n,edges", list(_graphs()), ids=[g[0] for g in _graphs()])
+def test_incremental_merge_matches_union_find(spark, monkeypatch, path, name, n, edges):
+    """``incremental_components`` labels its touched subgraph through
+    ``connected_components``, so the merge of a graph's second half of
+    edges into the labels of its first half must give the whole graph's
+    min-id labels on either path."""
+    from dvmax_spark.ext import dedup
+
+    if path == "twophase":
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    calls = []
+    twophase = dedup.connected_components_twophase
+    monkeypatch.setattr(
+        dedup,
+        "connected_components_twophase",
+        lambda *a, **k: calls.append(1) or twophase(*a, **k),
+    )
+    old, new = edges[::2], edges[1::2]
+    labels0 = dedup.connected_components(spark.createDataFrame(old, "id_a long, id_b long"))
+    calls.clear()
+    rows = dedup.incremental_components(
+        labels0, spark.createDataFrame(new, "id_a long, id_b long")
+    ).collect()
+    got = {r["id"]: r["label"] for r in rows}
+    truth = _union_find_labels(n, edges)
+    touched = {x for e in edges if e[0] != e[1] for x in e}
+    assert len(rows) == len(got)
+    assert got == {i: truth[i] for i in touched}
+    assert len(calls) == (path == "twophase" and any(a != b for a, b in new))

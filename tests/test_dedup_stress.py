@@ -121,17 +121,17 @@ def test_dedup_pipeline_survives_adversarial_corpus(spark):
 
 def test_dedup_clusters_twophase_terminates_on_adversarial_chain(spark):
     """A 50-edge path with max_rounds=2 cannot converge — the bound must
-    still TERMINATE the loop, and loudly: unconverged labels would split
+    still TERMINATE the two-phase loop (the core of
+    dedup_clusters_twophase), and loudly: unconverged labels would split
     the chain into dozens of clusters."""
-    from dvmax_spark.ext.dedup import dedup_clusters_twophase
+    from dvmax_spark.ext.dedup import connected_components_twophase
 
     n = 50
-    docs = spark.range(n).select(F.col("id").alias("doc_id"))
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     with pytest.raises(RuntimeError, match="after 2 rounds"):
-        dedup_clusters_twophase(docs, pairs, max_rounds=2)
+        connected_components_twophase(pairs, max_rounds=2)
 
 
 def test_canonical_by_degree_picks_the_hub(spark):

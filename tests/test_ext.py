@@ -1076,7 +1076,7 @@ def test_incremental_components_equals_full_recompute(spark):
     )
     # new batch: merge {1..3}x{10,11}; chain of new ids; bridge 30->new
     new = edges([(3, 10), (100, 101), (101, 102), (30, 200)])
-    got, _ = incremental_components(labels0, new)
+    got = incremental_components(labels0, new)
     got_map = {r["id"]: r["label"] for r in got.collect()}
     want, _ = connected_components_twophase(old.unionAll(new))
     want_map = {r["id"]: r["label"] for r in want.collect()}
@@ -1088,7 +1088,7 @@ def test_incremental_components_equals_full_recompute(spark):
     assert got_map[11] == 1 and got_map[30] == 30 and got_map[200] == 30
     # second increment on top of the maintained labels (associativity)
     new2 = edges([(102, 20)])  # merge new-chain into {20,21,22}
-    got2, _ = incremental_components(got, new2)
+    got2 = incremental_components(got, new2)
     got2_map = {r["id"]: r["label"] for r in got2.collect()}
     want2, _ = connected_components_twophase(old.unionAll(new).unionAll(new2))
     want2_map = {r["id"]: r["label"] for r in want2.collect()}
@@ -1243,7 +1243,7 @@ def test_component_label_store_build_reuse_invalidate(spark, tmp_path):
     new_edges = pairs.join(
         both.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
     )
-    merged, _ = incremental_components(spark.read.parquet(lpath), new_edges)
+    merged = incremental_components(spark.read.parquet(lpath), new_edges)
     want_all = {
         (r["id"], r["label"])
         for r in connected_components_twophase(pairs)[0].collect()

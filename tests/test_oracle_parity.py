@@ -18,6 +18,8 @@ _ROTATED_OUT = {
     "t_session_window",
     "x_audio_fp_dedup",
     "a_quartiles_distributed",
+    "t_stream_cms",
+    "s_corrupt_json_recovery",
 }
 
 

@@ -780,6 +780,38 @@ def test_dedup_clusters_job_count(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
+def test_dedup_clusters_incremental_job_count(spark, tmp_path):
+    """Merging a small edge batch into maintained labels labels the
+    touched subgraph through connected_components, so it too is a fixed
+    handful of jobs (the touched-label checkpoint, the edge checkpoint
+    and read-back, the write), not two-phase rounds: 17 here, where the
+    two-phase merge ran 29."""
+    from pyspark.sql import functions as F
+
+    from dvmax_spark.ext.dedup import dedup_clusters_incremental
+
+    docs = spark.range(1, 30).select(F.col("id").alias("doc_id"))
+    labels = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)], "id long, label long"
+    )
+    new = spark.createDataFrame(
+        [(3, 4), (4, 10), (5, 7), (9, 9), (3, 2)], "id_a long, id_b long"
+    )
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = "test_dedup_clusters_incremental_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup_clusters_incremental(docs, labels, new).write.parquet(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = {r["doc_id"]: r["cluster_id"] for r in spark.read.parquet(out).collect()}
+    assert got == {i: {2: 1, 3: 1, 4: 1, 10: 1, 6: 5, 7: 5}.get(i, i) for i in range(1, 30)}
+    assert jobs <= 17, jobs
+
+
 def test_dedup_ingest_job_count(spark, tmp_path):
     """One streamed micro-batch against a small index costs a fixed
     handful of Spark jobs: one signature pass shared by the index

@@ -191,7 +191,7 @@ def main() -> None:
         (F.lit(3_000_000) + F.col("id") * 10).alias("id_a"),
         (F.lit(3_000_000) + F.col("id") * 10 + 5).alias("id_b"),
     )
-    inc_labels, inc_rounds = incremental_components(labels, batch)
+    inc_labels = incremental_components(labels, batch)
     n_comp_inc = inc_labels.agg(F.count_distinct("label")).collect()[0][0]
     inc_wall = time.perf_counter() - t0
     assert n_comp_inc == n_comp - 1_000, (
@@ -202,7 +202,7 @@ def main() -> None:
         (
             "incremental_components (1k-edge batch)",
             inc_wall,
-            f"{inc_rounds} rounds; touched 2,000 of {n_comp:,} components "
+            f"touched 2,000 of {n_comp:,} components "
             f"(~10k of {n_nodes:,} nodes); full rebuild = {cc_wall:.1f} s",
         )
     )
