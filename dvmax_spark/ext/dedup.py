@@ -747,9 +747,13 @@ def incremental_components(
     contributes |batch| edges, and the merge's cost is proportional to
     the TOUCHED components + new edges, not the corpus graph.
 
-    Returns the labels ``(id, label)``: every old id plus every
-    new-edge endpoint.
+    Returns the labels ``(id, label)``: every old id plus both ends of
+    every new edge that is not a self-loop.
     """
+    # a self-loop adds no connectivity; kept, it would mark a singleton's
+    # component touched while contributing no merge edge, so the
+    # singleton would be in neither the untouched nor the merged labels
+    new_edges = new_edges.select("id_a", "id_b").where(F.col("id_a") != F.col("id_b"))
     ends = (
         new_edges.select(F.col("id_a").alias("id"))
         .unionAll(new_edges.select(F.col("id_b").alias("id")))
@@ -763,7 +767,7 @@ def incremental_components(
     stars = members.select(
         F.col("label").alias("id_a"), F.col("id").alias("id_b")
     ).where(F.col("id_a") != F.col("id_b"))
-    merged = connected_components(stars.unionAll(new_edges.select("id_a", "id_b")))
+    merged = connected_components(stars.unionAll(new_edges))
     # a touched SINGLETON component (label == id, no star edge) is an
     # endpoint of some new edge, so it is already a node of the merge;
     # endpoints with no prior label likewise. Untouched labels bypass.

@@ -5,9 +5,16 @@ date over every ticker at once, and the incremental store replaces
 ledger files.
 
 Pipeline stages (mirroring §3.1's lifecycle):
-  plan grid -> min-history gate (V8) -> feature build (vectorized)
-  -> validation routing (V6) -> incremental upsert (J5/J6)
+  plan grid -> min-history gate (V8) -> skip stored keys (J6)
+  -> feature build (vectorized) -> validation routing (V6)
+  -> incremental append (J6) -> static upsert (J5)
   -> merged table + OHE projection -> status JSON (S10)
+
+As in the reference, which skips a stored (ticker, as_of) task before
+it fetches anything, a date builds features only for the eligible
+tickers the dynamic store lacks at that date, so a rerun's cost follows
+the new keys, not the ticker universe; the append's anti-join still
+guards every write.
 """
 
 from __future__ import annotations
@@ -21,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dvmax_spark.features.assemble import build_feature_table
+from dvmax_spark.features.static import encode_static
 from dvmax_spark.store import FeatureStore
 from dvmax_spark.validation.rules import split_by_status
 
@@ -79,6 +87,27 @@ def has_enough_price_data(
     )
 
 
+def _mark_stored(
+    eligible: DataFrame, store: FeatureStore, as_of
+) -> tuple[DataFrame, int, int]:
+    """The gate-``eligible`` tickers, cached, with ``_stored`` true for
+    those ``store`` already holds at ``as_of`` and null for the rest,
+    plus (eligible, stored) counted in one action over them: the
+    reference's skip-existing check (ticker_batch_runner.py:433-443),
+    made before the build. The lookup reads only ``ticker`` from the
+    store, and the ``as_of`` partition filter prunes it to that date's
+    directory. The store is read afresh for each date: an append may
+    have promoted a new version of it since the last read."""
+    stored = (
+        store.read()
+        .where(F.col("as_of") == F.lit(as_of).cast("date"))
+        .select("ticker", F.lit(True).alias("_stored"))
+    )
+    marked = eligible.join(stored, "ticker", "left").cache()
+    n_eligible, n_stored = marked.agg(F.count(F.lit(1)), F.count("_stored")).first()
+    return marked, n_eligible, n_stored
+
+
 def run_ticker_pipeline(
     spark: SparkSession,
     inputs: dict[str, DataFrame],
@@ -88,20 +117,48 @@ def run_ticker_pipeline(
     incremental: bool = True,
 ) -> dict:
     """Run the full pipeline; returns run stats (the reference's
-    RunStats counters, ticker_batch_runner.py:84-97)."""
+    RunStats counters, ticker_batch_runner.py:84-97).
+
+    With ``incremental=True`` and an existing dynamic store, each date
+    builds features only for the gate-eligible tickers the store lacks
+    at that ``as_of``; ``skipped`` counts the eligible keys found
+    already stored, and a date with nothing left to build runs no
+    feature build, validation, append or quarantine. ``flagged`` and
+    ``dropped`` count only the rows this run built. ``append_new_keys``
+    still anti-joins every write against the store, so a key a
+    concurrent writer stored in between is not written twice.
+    ``incremental=False`` rebuilds and upserts every eligible key.
+
+    The static table depends only on ``inputs["profile"]``, so it is
+    upserted once per run, after the dates, when any date passed the
+    gate."""
     t0 = time.time()
     dates = dates or get_dates_between()
     dyn_store = dynamic_store(spark, store_root)
     stat_store = static_store(spark, store_root)
+    # a store absent at the start holds no key this run could skip
+    lookup = incremental and dyn_store.exists()
 
-    stats = {"dates": len(dates), "rows_written": 0, "flagged": 0, "dropped": 0}
+    stats = {
+        "dates": len(dates), "rows_written": 0, "skipped": 0, "flagged": 0, "dropped": 0,
+    }
+    static, gate_passed = None, False
     for as_of in dates:
-        eligible = has_enough_price_data(inputs["prices"], as_of, required_days).cache()
-        if eligible.isEmpty():
-            eligible.unpersist()
+        eligible = has_enough_price_data(inputs["prices"], as_of, required_days)
+        if lookup:
+            marked, n_eligible, n_stored = _mark_stored(eligible, dyn_store, as_of)
+            to_build = marked.where(F.col("_stored").isNull()).select("ticker")
+            stats["skipped"] += n_stored
+            passed, todo = n_eligible > 0, n_eligible > n_stored
+        else:
+            marked = to_build = eligible.cache()
+            passed = todo = not marked.isEmpty()
+        gate_passed = gate_passed or passed
+        if not todo:
+            marked.unpersist()
             continue
         gated = dict(inputs)
-        gated["prices"] = inputs["prices"].join(F.broadcast(eligible), "ticker")
+        gated["prices"] = inputs["prices"].join(F.broadcast(to_build), "ticker")
         dynamic, static = build_feature_table(gated, as_of)
         # the feature DAG is wide (one join per feature family): cache it
         # so the counts/split/write actions below execute it ONCE
@@ -120,9 +177,10 @@ def run_ticker_pipeline(
             stats["rows_written"] += accepted.count()
         if counts.get("dropped"):
             dyn_store.quarantine(quarantined)
-        stat_store.upsert(static)
         dynamic.unpersist()
-        eligible.unpersist()
+        marked.unpersist()
+    if gate_passed:
+        stat_store.upsert(static if static is not None else encode_static(inputs["profile"]))
 
     # status sidecar (ref _write_status_files, ticker_batch_runner.py:556-566)
     stats["wall_s"] = round(time.time() - t0, 2)

@@ -13,7 +13,13 @@ Re-expresses the reference's storage layer on Spark conventions:
                                               | dynamic_store/static_store)
   concat + unique(keep="last") upsert (:310)  | upsert_keep_last, then
                                               | one whole-table promote
-  skip already-materialized dates (:433-443)  | left-anti join on keys
+  skip already-materialized dates (:433-443)  | before the build: the
+                                              | pipeline drops stored
+                                              | tickers per as_of
+                                              | (ticker_pipeline.py
+                                              | _mark_stored); at the
+                                              | write: left-anti join
+                                              | on keys
   superset-schema merge scan (:527-548)       | mergeSchema read +
                                               | align_and_union
   atomic temp-file replace (:352-361)         | fsops.promote: staging dir

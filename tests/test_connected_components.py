@@ -107,3 +107,18 @@ def test_incremental_merge_matches_union_find(spark, monkeypatch, path, name, n,
     assert len(rows) == len(got)
     assert got == {i: truth[i] for i in touched}
     assert len(calls) == (path == "twophase" and any(a != b for a, b in new))
+
+
+@pytest.mark.parametrize("path", ["driver", "twophase"])
+def test_incremental_merge_keeps_singleton_under_self_loop(spark, monkeypatch, path):
+    """A self-loop in the edge batch on a stored singleton adds no
+    connectivity: the singleton keeps its label, beside the merge of
+    the batch's other edges."""
+    from dvmax_spark.ext import dedup
+
+    if path == "twophase":
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    labels = spark.createDataFrame([(1, 1), (2, 1), (7, 7)], "id long, label long")
+    new = spark.createDataFrame([(7, 7), (2, 3)], "id_a long, id_b long")
+    rows = dedup.incremental_components(labels, new).collect()
+    assert sorted((r["id"], r["label"]) for r in rows) == [(1, 1), (2, 1), (3, 1), (7, 7)]

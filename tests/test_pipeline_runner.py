@@ -82,9 +82,17 @@ def test_pipeline_end_to_end(spark, inputs, tmp_path):
     assert {str(r["as_of"]) for r in rows} == {"2021-12-31", "2022-12-30"}
     assert stats["rows_written"] == 2
 
-    # idempotent re-run: incremental append skips existing keys
+    # the static table is upserted once per run, not once per date
+    from dvmax_spark.fsops import current_version_dir
+    from dvmax_spark.plans.ticker_pipeline import static_store
+
+    static_main = static_store(spark, root).main_path
+    assert os.path.basename(current_version_dir(static_main)) == "main.v1"
+
+    # idempotent re-run: every stored key is skipped before the build
     stats2 = run_ticker_pipeline(spark, inputs, root, dates=dates)
     assert stats2["rows_written"] == 0
+    assert stats2["skipped"] == 2
     assert FeatureStore(
         spark, os.path.join(root, "dynamic"), keys=["ticker", "as_of"]
     ).read().count() == 2
@@ -116,6 +124,93 @@ def test_pipeline_end_to_end(spark, inputs, tmp_path):
     assert "-> Validation" in out
     with pytest.raises(SystemExit):
         print_feature_report(spark, root, "NOPE", None)
+
+
+def _store_frame(store) -> pd.DataFrame:
+    df = store.read().toPandas()
+    df = df[sorted(df.columns)].astype({"as_of": str})
+    return df.sort_values(["ticker", "as_of"]).reset_index(drop=True)
+
+
+def _spy_builds(monkeypatch) -> list:
+    """Record the tickers of every ``build_feature_table`` call."""
+    from dvmax_spark.plans import ticker_pipeline
+
+    calls, build = [], ticker_pipeline.build_feature_table
+
+    def spy(inputs, as_of, *a, **k):
+        tickers = {r["ticker"] for r in inputs["prices"].select("ticker").distinct().collect()}
+        calls.append((str(as_of), sorted(tickers)))
+        return build(inputs, as_of, *a, **k)
+
+    monkeypatch.setattr(ticker_pipeline, "build_feature_table", spy)
+    return calls
+
+
+def test_rerun_builds_only_the_missing_keys(spark, monkeypatch, tmp_path):
+    """A rerun builds features only for the (ticker, as_of) keys the
+    dynamic store lacks: with one stored key deleted, it builds that
+    ticker on that date alone, writes its one row, skips the rest, and
+    leaves the store equal to a from-scratch run's."""
+    from dvmax_spark.plans.ticker_pipeline import dynamic_store, run_ticker_pipeline
+
+    profile = [("A", "Energy", "USA"), ("B", "Utilities", "UK"), ("C", "Energy", "USA")]
+    inputs = ticker_inputs(spark, profile)
+    dates = [datetime.date(2021, 12, 31), datetime.date(2022, 12, 30)]
+    root = str(tmp_path / "fs")
+    assert run_ticker_pipeline(spark, inputs, root, dates=dates)["rows_written"] == 6
+    store = dynamic_store(spark, root)
+    from_scratch = _store_frame(store)
+    gone = spark.createDataFrame(
+        [("B", datetime.date(2022, 12, 30))], "ticker string, as_of date"
+    )
+    assert store.delete_keys(gone) == 1
+
+    calls = _spy_builds(monkeypatch)
+    stats = run_ticker_pipeline(spark, inputs, root, dates=dates)
+    assert stats["rows_written"] == 1
+    assert stats["skipped"] == 5
+    assert calls == [("2022-12-30", ["B"])]
+    pd.testing.assert_frame_equal(_store_frame(store), from_scratch)
+
+
+def test_rerun_into_a_migrating_store(spark, tmp_path):
+    """A dynamic store still partitioned by ``ticker`` (the layout before
+    ``as_of``) migrates on the rerun's first append, which promotes a
+    new version of it. The next date's lookup must read that version,
+    not the files of the one it replaced."""
+    from dvmax_spark.plans.ticker_pipeline import dynamic_store, run_ticker_pipeline
+    from dvmax_spark.store import FeatureStore
+
+    inputs = ticker_inputs(spark, [("A", "Energy", "USA"), ("B", "Utilities", "UK")])
+    dates = [datetime.date(2021, 12, 31), datetime.date(2022, 12, 30)]
+    fresh = str(tmp_path / "fresh")
+    run_ticker_pipeline(spark, inputs, fresh, dates=dates)
+    root = str(tmp_path / "fs")
+    old = FeatureStore(spark, os.path.join(root, "dynamic"), keys=["ticker", "as_of"])
+    old.upsert(dynamic_store(spark, fresh).read().where("ticker = 'A'"))
+
+    stats = run_ticker_pipeline(spark, inputs, root, dates=dates)
+    assert (stats["rows_written"], stats["skipped"]) == (2, 2)
+    pd.testing.assert_frame_equal(
+        _store_frame(dynamic_store(spark, root)), _store_frame(dynamic_store(spark, fresh))
+    )
+
+
+def test_upsert_rerun_rebuilds_every_key(spark, monkeypatch, tmp_path):
+    """``incremental=False`` is the upsert path: its rerun builds and
+    writes every gate-eligible key again and skips none."""
+    from dvmax_spark.plans.ticker_pipeline import run_ticker_pipeline
+
+    inputs = ticker_inputs(spark, [("A", "Energy", "USA"), ("B", "Utilities", "UK")])
+    root = str(tmp_path / "fs")
+    dates = [datetime.date(2022, 12, 30)]
+    run_ticker_pipeline(spark, inputs, root, dates=dates, incremental=False)
+    calls = _spy_builds(monkeypatch)
+    stats = run_ticker_pipeline(spark, inputs, root, dates=dates, incremental=False)
+    assert stats["rows_written"] == 2
+    assert stats["skipped"] == 0
+    assert calls == [("2022-12-30", ["A", "B"])]
 
 
 def test_numeric_looking_tickers_read_back_as_strings(spark, tmp_path):

@@ -930,6 +930,42 @@ def test_stream_into_rollup_batch_job_count(spark, tmp_path):
     assert jobs <= 4, jobs
 
 
+def test_ticker_pipeline_full_rerun_job_count(spark, monkeypatch, tmp_path):
+    """A rerun over a store that already holds every (ticker, as_of)
+    key builds no features: per date, one action decides the date's
+    to-do set from the gate and the stored tickers; then the static
+    table is upserted once. 16 jobs here for two dates, where
+    rebuilding every key and anti-joining it away ran 56."""
+    import datetime
+
+    from dvmax_spark.plans import ticker_pipeline
+    from tests.test_pipeline_runner import ticker_inputs
+
+    inputs = ticker_inputs(spark, [("A", "Energy", "USA"), ("B", "Utilities", "UK")])
+    root = str(tmp_path / "fs")
+    dates = [datetime.date(2021, 12, 31), datetime.date(2022, 12, 30)]
+    ticker_pipeline.run_ticker_pipeline(spark, inputs, root, dates=dates)
+    builds = []
+    build = ticker_pipeline.build_feature_table
+    monkeypatch.setattr(
+        ticker_pipeline,
+        "build_feature_table",
+        lambda *a, **k: builds.append(1) or build(*a, **k),
+    )
+    sc = spark.sparkContext
+    group = "test_ticker_pipeline_full_rerun_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        stats = ticker_pipeline.run_ticker_pipeline(spark, inputs, root, dates=dates)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (stats["rows_written"], stats["skipped"]) == (0, 4)
+    assert builds == []
+    assert jobs <= 16, jobs
+
+
 def _store_op_jobs(spark, tmp_path, op) -> int:
     """Jobs of ONE store write into an existing two-ticker store,
     counted by a job group set around the call."""
